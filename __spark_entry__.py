@@ -100,7 +100,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.lit("").alias("tool"),
         F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("ts"),
     )
-    return ordered(scrub_transcripts(turns))
+    return scrub_transcripts(ordered(turns))
 
 
 # ─── queries + DuckDB oracles ───

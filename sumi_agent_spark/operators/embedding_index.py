@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import write_rows
 from .dedup import (
     EMB_MAX_BUCKET_SIZE,
     _observe_capping,
@@ -240,10 +241,9 @@ def write_embedding_index(
             "model_rev": model_rev}
     # explicit schema: model_rev is usually None and inference cannot
     # type an all-None field
-    spark.createDataFrame(
-        [meta], schema="n_planes long, dim long, threshold double, "
-                       "model_rev string",
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
+    write_rows(spark, [meta], f"{index_path}/meta", "overwrite",
+               schema="n_planes long, dim long, threshold double, "
+                      "model_rev string")
     return meta
 
 
@@ -580,10 +580,10 @@ def reindex_embeddings(
     meta_new = {"n_planes": int(meta["n_planes"]), "dim": int(meta["dim"]),
                 "threshold": float(meta["threshold"]),
                 "model_rev": meta.get("model_rev"), "epoch": new_epoch}
-    spark.createDataFrame(
-        [meta_new], schema="n_planes long, dim long, threshold double, "
-                           "model_rev string, epoch long",
-    ).write.mode("overwrite").parquet(f"{index_path}/meta_e{new_epoch}")
+    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
+               "overwrite",
+               schema="n_planes long, dim long, threshold double, "
+                      "model_rev string, epoch long")
     _assert_marker_visible(spark, index_path, new_epoch)
     return meta_new
 
@@ -610,8 +610,7 @@ def compact_embedding_index(spark: SparkSession, src_path: str,
     meta_new = {"n_planes": int(meta["n_planes"]), "dim": int(meta["dim"]),
                 "threshold": float(meta["threshold"]),
                 "model_rev": meta.get("model_rev")}
-    spark.createDataFrame(
-        [meta_new], schema="n_planes long, dim long, threshold double, "
-                           "model_rev string",
-    ).write.mode("overwrite").parquet(f"{dst_path}/meta")
+    write_rows(spark, [meta_new], f"{dst_path}/meta", "overwrite",
+               schema="n_planes long, dim long, threshold double, "
+                      "model_rev string")
     return meta_new

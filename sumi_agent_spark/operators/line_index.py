@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import write_rows
 from .doc_quality import dup_unit_winners, rebuild_units, unit_frame
 from .minhash_index import _marker_committed
 
@@ -104,10 +105,9 @@ def write_line_index(
     keys = _slice_keys(lines)
     keys.write.mode("overwrite").parquet(f"{index_path}/keys")
     n = spark.read.parquet(f"{index_path}/keys").count()
-    spark.createDataFrame(
-        [(unit, bool(normalize), int(min_chars))],
-        schema="unit string, normalize boolean, min_chars int",
-    ).write.mode("overwrite").parquet(f"{index_path}/meta")
+    write_rows(spark, [(unit, bool(normalize), int(min_chars))],
+               f"{index_path}/meta", "overwrite",
+               schema="unit string, normalize boolean, min_chars int")
     return {"n_keys": int(n)}
 
 

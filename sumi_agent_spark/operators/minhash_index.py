@@ -44,6 +44,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.checkpoint import write_rows
 from .dedup import (
     _banded,
     _observe_capping,
@@ -229,8 +230,7 @@ def write_minhash_index(
      .parquet(f"{index_path}/bands"))
     meta = {"n_hashes": n_hashes, "bands": bands, "shingle_k": shingle_k,
             "threshold": float(threshold), "granularity": "doc"}
-    spark.createDataFrame([meta]).write.mode("overwrite").parquet(
-        f"{index_path}/meta")
+    write_rows(spark, [meta], f"{index_path}/meta", "overwrite")
     return meta
 
 
@@ -481,8 +481,8 @@ def reindex_docs(
                 "shingle_k": meta["shingle_k"],
                 "threshold": float(meta["threshold"]),
                 "granularity": "doc", "epoch": new_epoch}
-    spark.createDataFrame([meta_new]).write.mode("overwrite").parquet(
-        f"{index_path}/meta_e{new_epoch}")
+    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
+               "overwrite")
     _assert_marker_visible(spark, index_path, new_epoch)
     return meta_new
 
@@ -901,8 +901,8 @@ def reindex_groups(
     # epoch commit marker: a fresh directory, never an overwrite of live
     # state (overwrite mode only matters for a PREVIOUS crashed attempt's
     # partial marker, which by definition has no _SUCCESS and is not live)
-    spark.createDataFrame([meta_new]).write.mode("overwrite").parquet(
-        f"{index_path}/meta_e{new_epoch}")
+    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
+               "overwrite")
     _assert_marker_visible(spark, index_path, new_epoch)
     return meta_new
 
@@ -975,8 +975,7 @@ def write_grouped_minhash_index(
      .parquet(f"{index_path}/bands"))
     meta = {"n_hashes": n_hashes, "bands": bands, "shingle_k": shingle_k,
             "threshold": float(threshold), "granularity": "group"}
-    spark.createDataFrame([meta]).write.mode("overwrite").parquet(
-        f"{index_path}/meta")
+    write_rows(spark, [meta], f"{index_path}/meta", "overwrite")
     return meta
 
 
@@ -1333,8 +1332,7 @@ def _compact_index(spark: SparkSession, src_path: str, dst_path: str,
                 "shingle_k": meta["shingle_k"],
                 "threshold": float(meta["threshold"]),
                 "granularity": granularity, "epoch": 0}
-    spark.createDataFrame([meta_new]).write.mode("overwrite").parquet(
-        f"{dst_path}/meta")
+    write_rows(spark, [meta_new], f"{dst_path}/meta", "overwrite")
     return meta_new
 
 

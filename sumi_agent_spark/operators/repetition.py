@@ -117,10 +117,12 @@ def _r6(x: float) -> float:
     diverges on values like 3/640 whose shortest repr is a decimal
     midpoint while the underlying double sits just below it (verified
     against Spark 4.1); the ``round`` builtin is banker's and diverges
-    at representable midpoints like 1/128."""
+    at representable midpoints like 1/128.  ``float(x)`` first: under
+    numpy >= 2 ``repr(np.float64(x))`` reads ``np.float64(...)``, which
+    ``Decimal`` rejects."""
     from decimal import ROUND_HALF_UP, Decimal
-    return float(Decimal(repr(x)).quantize(Decimal("1e-6"),
-                                           rounding=ROUND_HALF_UP))
+    return float(Decimal(repr(float(x))).quantize(Decimal("1e-6"),
+                                                  rounding=ROUND_HALF_UP))
 
 
 def metric_names(top_ns: tuple[int, ...],

@@ -1,10 +1,12 @@
 """Per-stage lineage + resumable restart (north rule requirement).
 
 Stage counters are collected with ``DataFrame.observe`` -- they are computed
-*during* the write pass, so lineage costs zero extra scans at 100 TB.
-Per-partition granularity (for straggler forensics) is available behind
-``partition_stats=True`` which prices one extra column-pruned scan of the
-written output.
+*during* the write pass, so lineage costs zero extra scans at 100 TB.  The
+lineage row itself, like every other driver-side sidecar and index ``meta``
+marker, is written by ``write_rows`` from a local relation: one task, one
+file, no Python worker.  Per-partition granularity (for straggler forensics)
+is available behind ``partition_stats=True`` which prices one extra
+column-pruned scan of the written output.
 
 Restart is idempotent: ``resume_filter`` anti-joins processed
 ``(conv_id, turn_idx)`` keys out of the input, reading only the output's key
@@ -18,6 +20,39 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def write_rows(spark, rows: list, path: str, mode: str,
+               schema=None) -> None:
+    """Write a few driver-side rows (lineage sidecars, index ``meta``
+    markers) as one parquet file.
+
+    The schema is the one ``spark.createDataFrame(rows, schema)`` would
+    use: inferred on the driver without a job (dict rows get their fields
+    sorted by key), or the given DDL string / ``StructType``, against which
+    every row is verified.  The rows then travel as a pandas frame, which
+    under Arrow plans as a ``LocalTableScan`` -- one task and no Python
+    worker, where a list of rows goes through a Python RDD and a job of
+    ``defaultParallelism`` tasks, mostly writing empty files."""
+    import pandas as pd
+    from pyspark.sql.types import (
+        _create_converter, _make_type_verifier, _parse_datatype_string)
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if schema is None:
+        schema = spark._inferSchemaFromList(rows)
+    else:
+        verify = _make_type_verifier(schema)
+        for row in rows:
+            verify(row)
+    convert = _create_converter(schema)
+    # object columns: Arrow casts each value straight to the schema type,
+    # so a NULL never widens a long column to float64 on the way
+    pdf = pd.DataFrame([convert(r) for r in rows], columns=schema.names,
+                       dtype=object)
+    (spark.createDataFrame(pdf, schema).coalesce(1)
+     .write.mode(mode).parquet(path))
 
 
 def write_with_lineage(
@@ -55,8 +90,7 @@ def write_with_lineage(
         "n_detections": int(metrics.get("n_detections") or 0),
         "wall_ms": wall_ms,
     }
-    spark.createDataFrame([lineage_row]).write.mode("append").parquet(
-        f"{output_path}/_lineage")
+    write_rows(spark, [lineage_row], f"{output_path}/_lineage", "append")
 
     if partition_stats:
         written = spark.read.parquet(output_path)

@@ -1,15 +1,17 @@
-"""End-to-end scrub pipeline: read -> quality -> scrub -> order -> write.
+"""End-to-end scrub pipeline: read -> gates -> order -> quality + scrub -> write.
 
 Spark-first shape (SURVEY.md §3.1 translation):
 
-* All heavy work is per-turn and embarrassingly parallel -- the hot path has
-  ZERO shuffles: scan -> project(quality_udf, scrub_udf) -> write.  Catalyst
-  fuses both UDF projections into one stage; Arrow batches stream through.
-* Ordering (north rule: stable (conv_id, turn_idx) order) is applied only at
-  the boundary via ``repartitionByRange + sortWithinPartitions``: a sampled
-  range exchange, not a single-reducer global sort, so hot conversations
-  split across partitions while the output file sequence stays totally
-  ordered.
+* All heavy work is per-turn and embarrassingly parallel.  The hot path is
+  scan -> range exchange -> sort -> project(quality_udf, scrub_udf) -> write:
+  both UDFs sit in one ``ArrowEvalPython`` stage ABOVE the exchange, so they
+  run once per row and the exchange (and its boundary-sampling job) moves
+  only the raw input columns.  Arrow UDF evaluation keeps row order, so the
+  sorted sequence reaches the writer unchanged.
+* Ordering (north rule: stable (conv_id, turn_idx) order) uses
+  ``repartitionByRange + sortWithinPartitions``: a sampled range exchange,
+  not a single-reducer global sort, so hot conversations split across
+  partitions while the output file sequence stays totally ordered.
 * Conversation-level rollups use two-phase salted aggregation
   (``conversation_stats``): partial agg on (conv_id, salt) first, so a
   10^7-turn hot conversation never lands on one reducer.  AQE's skew
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import DEFAULT_QUALITY_CONFIG, QualityConfig
 from ..functions.udfs import LANG_CODES, REASON_CODES, make_quality_udf, make_scrub_udf
+from .checkpoint import resume_filter, write_rows, write_with_lineage
 
 OUTPUT_COLUMNS = [
     "conv_id", "turn_idx", "role", "tool", "ts", "text", "masked_text",
@@ -435,8 +438,7 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
     n_in, checksum = fingerprint
     meta_row = {"threshold": threshold, "scope": scope, "n_input_rows": n_in,
                 "keys_checksum": checksum, "n_dropped": n_nd, **m}
-    spark.createDataFrame([meta_row]).write.mode("overwrite").parquet(
-        meta_path)
+    write_rows(spark, [meta_row], meta_path, "overwrite")
     return deduped, nd_row, nd_drops
 
 
@@ -1021,10 +1023,11 @@ def run_pipeline(
     metrics are appended to the ``_lineage_guards`` sidecar (separate from
     ``_lineage``: mixed schemas in one parquet dir read back unreliably).  ``scrub_transform``
     is the stage injection point (swap in a variant transform; tests use
-    it to prove a corrupting transform trips the guard)."""
+    it to prove a corrupting transform trips the guard).  It runs on the
+    already range-ordered frame, so it must be row-local and
+    order-preserving: per-row projections and Arrow/pandas UDFs are; a
+    shuffle, join or aggregation would scramble the written order."""
     from pyspark.sql import Observation
-
-    from .checkpoint import resume_filter, write_with_lineage
 
     t0 = time.time()
     df = spark.read.parquet(input_path)
@@ -1123,8 +1126,8 @@ def run_pipeline(
             # that later trips the retention guard is exactly the run whose
             # capping metrics an operator needs to see
             # (own sidecar: mixed schemas in one parquet dir read unreliably)
-            spark.createDataFrame([nd_row]).write.mode("append").parquet(
-                f"{output_path}/_lineage_neardup")
+            write_rows(spark, [nd_row], f"{output_path}/_lineage_neardup",
+                       "append")
         eb_drops = None
         eb_index_action = None  # ("create"|"append", kept_df)
         eb_changed_rows = None
@@ -1135,8 +1138,8 @@ def run_pipeline(
                 embedding_index_path, embedding_col, int(embedding_n_planes),
                 collect_changed=reindex_changed,
                 changed_probe_df=(df_pre_index if nd_gate_on else None))
-            spark.createDataFrame([eb_row]).write.mode("append").parquet(
-                f"{output_path}/_lineage_embdedup")
+            write_rows(spark, [eb_row], f"{output_path}/_lineage_embdedup",
+                       "append")
         # one definition of the sampling key set, shared by the row-sampling
         # gate, the token-mix gate, and the changed-upsert re-check
         sp_keys = (list(sample_key_cols) if sample_key_cols
@@ -1246,13 +1249,12 @@ def run_pipeline(
                       "n_dropped": sp_rows_in - sp_rows_kept}
             # explicit schema: fraction / n_per_stratum are None when the
             # other sub-gate is active, and inference cannot type all-None
-            spark.createDataFrame(
-                [sp_row],
+            write_rows(
+                spark, [sp_row], f"{output_path}/_lineage_sample", "append",
                 schema="stage string, fraction double, seed long, "
                        "key_cols string, n_per_stratum long, "
                        "strata_cols string, rows_in long, rows_kept long, "
-                       "n_dropped long",
-            ).write.mode("append").parquet(f"{output_path}/_lineage_sample")
+                       "n_dropped long")
         if sample_token_shares is not None:
             # token-budget mixture gate: like the row-sampling gate it sits
             # BEFORE resume_filter -- the per-stratum fractions are an
@@ -1297,13 +1299,13 @@ def run_pipeline(
                                             sort_keys=True),
                       "rows_in": tm_in, "rows_kept": tm_kept,
                       "n_dropped": tm_in - tm_kept}
-            spark.createDataFrame(
-                [tm_row],
+            write_rows(
+                spark, [tm_row], f"{output_path}/_lineage_token_mix",
+                "append",
                 schema="stage string, stratum_col string, shares string, "
                        "budget_tokens double, seed long, key_cols string, "
                        "token_col string, strata string, rows_in long, "
-                       "rows_kept long, n_dropped long",
-            ).write.mode("append").parquet(f"{output_path}/_lineage_token_mix")
+                       "rows_kept long, n_dropped long")
         if resume:
             df = resume_filter(df, output_path)
         dc_drops = None
@@ -1452,12 +1454,11 @@ def run_pipeline(
                       "benchmark_path": decontaminate_against}
             # explicit schema: min_containment is NULL when the hit-count
             # rule is active, and inference cannot type an all-None field
-            spark.createDataFrame(
-                [dc_row],
+            write_rows(
+                spark, [dc_row], f"{output_path}/_lineage_decontam", "append",
                 schema="stage string, n_dropped long, k long, min_hits long, "
                        "ngrams string, scope string, min_containment double, "
-                       "mode string, benchmark_path string",
-            ).write.mode("append").parquet(f"{output_path}/_lineage_decontam")
+                       "mode string, benchmark_path string")
         if drop_toxic_above is not None:
             from ..operators.toxicity import toxicity_score_col
             df = df.filter(toxicity_score_col(F.col("text"))
@@ -1479,16 +1480,15 @@ def run_pipeline(
             gq_str = ",".join(
                 f"{k}=[{lo},{hi}]" for k, (lo, hi) in
                 sorted(gq_rules.items()))
-            spark.createDataFrame(
-                [("gopher_quality", int(n_gq), gq_str)],
-                schema="stage string, n_dropped long, rules string",
-            ).write.mode("append").parquet(
-                f"{output_path}/_lineage_docquality")
+            write_rows(
+                spark, [("gopher_quality", int(n_gq), gq_str)],
+                f"{output_path}/_lineage_docquality", "append",
+                schema="stage string, n_dropped long, rules string")
         rep_drops = None
         if rep_thresholds is not None:
             # Gopher repetition battery: per-row-independent like toxicity
-            # but costs one explode per gram size, so it runs after the
-            # cheap regex gates and before the classifier.  (conv_id,
+            # but costs one Arrow UDF pass (the vectorized kernel), so it
+            # runs after the cheap regex gates and before the classifier.  (conv_id,
             # turn_idx) must uniquely key the input (duplicate keys would
             # merge two turns' counters -- run dedup=True first), the same
             # documented requirement as the sampling/index operators.
@@ -1507,11 +1507,10 @@ def run_pipeline(
             df = r_keyed.join(rep_drops, "_rk", "left_anti").drop("_rk")
             thr_str = ",".join(f"{k}={v}"
                                for k, v in sorted(rep_thresholds.items()))
-            spark.createDataFrame(
-                [("repetition", int(n_rep), thr_str)],
-                schema="stage string, n_dropped long, thresholds string",
-            ).write.mode("append").parquet(
-                f"{output_path}/_lineage_repetition")
+            write_rows(
+                spark, [("repetition", int(n_rep), thr_str)],
+                f"{output_path}/_lineage_repetition", "append",
+                schema="stage string, n_dropped long, thresholds string")
         qc_model = None
         if quality_model_path is not None:
             # Model-based quality filter (CCNet/GPT-3-style): per-row-
@@ -1539,14 +1538,15 @@ def run_pipeline(
             n_lowq = q_drops.count()
             df = (scored.join(q_drops, "_qk", "left_anti")
                   .drop("_qk", "_qscore"))
-            spark.createDataFrame(
+            write_rows(
+                spark,
                 [(str("quality_classifier"), int(n_lowq),
                   float(quality_min_score), str(quality_model_path),
                   int(qc_model["meta"]["dim"]),
                   int(qc_model["meta"]["ngram"]))],
+                f"{output_path}/_lineage_quality", "append",
                 schema="stage string, n_dropped long, min_score double, "
-                       "model_path string, dim long, ngram long",
-            ).write.mode("append").parquet(f"{output_path}/_lineage_quality")
+                       "model_path string, dim long, ngram long")
         lm_model = None
         if perplexity_model_path is not None:
             # CCNet-style LM perplexity gate: same shape and cost class as
@@ -1569,20 +1569,23 @@ def run_pipeline(
             n_hippl = p_drops.count()
             df = (p_scored.join(p_drops, "_pk", "left_anti")
                   .drop("_pk", "_ppl"))
-            spark.createDataFrame(
+            write_rows(
+                spark,
                 [(str("lm_perplexity"), int(n_hippl),
                   float(perplexity_max), str(perplexity_model_path),
                   int(lm_model["meta"]["n_tokens"]),
                   int(lm_model["meta"]["vocab_size"]),
                   int(lm_model["meta"]["min_count"]))],
+                f"{output_path}/_lineage_perplexity", "append",
                 schema="stage string, n_dropped long, max_log_ppl double, "
                        "model_path string, n_tokens long, vocab_size long, "
-                       "min_count long",
-            ).write.mode("append").parquet(
-                f"{output_path}/_lineage_perplexity")
+                       "min_count long")
 
+        # range-order the gated frame BEFORE the scrub: the boundary
+        # sampling job then reads the raw input columns, and the UDFs run
+        # once, after the exchange (Arrow UDF evaluation keeps row order)
         in_obs = Observation("retention_in")
-        df = df.observe(in_obs, F.count(F.lit(1)).alias("rows_in"))
+        df = ordered(df).observe(in_obs, F.count(F.lit(1)).alias("rows_in"))
         scrubbed = scrub_transform(df, **scrub_kwargs)
         out_obs = Observation("retention_out")
         scrubbed = scrubbed.observe(
@@ -1599,7 +1602,7 @@ def run_pipeline(
         # LSH subtree instead of the claimed one signature pass over the
         # kept rows (deterministic either way; this is purely the cost)
         try:
-            n = write_with_lineage(ordered(scrubbed), output_path, stage="scrub")
+            n = write_with_lineage(scrubbed, output_path, stage="scrub")
 
             def _obs(o) -> dict:
                 # a fully-empty write (e.g. resume found no new keys) lets AQE
@@ -1611,22 +1614,13 @@ def run_pipeline(
                     return {}
 
             m_in, m_out = _obs(in_obs), _obs(out_obs)
-            # Both observations sit BELOW the range exchange, whose
-            # boundary-sampling job executes the child plan an extra time --
-            # every metric is scaled by the same pass count, so the ==/ratio
-            # guards stay exact; normalize the reported numbers back to
-            # single-pass values via the true written count (observed once,
-            # above the exchange, by write_with_lineage).
-            rows_in = int(m_in.get("rows_in") or 0)
-            rows_out = int(m_out.get("rows_out") or 0)
-            lines_in = int(m_out.get("lines_in") or 0)
-            lines_out = int(m_out.get("lines_out") or 0)
-            passes = rows_out // n if n and rows_out % n == 0 else 1
             guard_row = _assert_retention(
-                "scrub", rows_in // passes, rows_out // passes,
-                lines_in // passes, lines_out // passes, min_line_ratio)
-            spark.createDataFrame([guard_row]).write.mode("append").parquet(
-                f"{output_path}/_lineage_guards")
+                "scrub", int(m_in.get("rows_in") or 0),
+                int(m_out.get("rows_out") or 0),
+                int(m_out.get("lines_in") or 0),
+                int(m_out.get("lines_out") or 0), min_line_ratio)
+            write_rows(spark, [guard_row], f"{output_path}/_lineage_guards",
+                       "append")
             if nd_index_action is not None:
                 # Index content = dedup-kept turns, BEFORE the toxicity/resume
                 # gates: the index answers "what has this corpus already seen",
@@ -2024,16 +2018,16 @@ def run_pipeline(
                     # additive schema (n_update / n_sampled_out joined the
                     # row): read the sidecar with mergeSchema=true, like
                     # every lineage sidecar here
-                    spark.createDataFrame(
+                    write_rows(
+                        spark,
                         [{"stage": "changed_upsert",
                           "n_upsert": int(uc["n_upsert"]),
                           "n_update": int(uc["n_update"]),
                           "n_delete": int(uc["n_delete"]),
                           "n_sampled_out": int(n_sampled_out)}],
+                        f"{output_path}/_lineage_upsert", "append",
                         schema="stage string, n_upsert long, n_update long, "
-                               "n_delete long, n_sampled_out long",
-                    ).write.mode("append").parquet(
-                        f"{output_path}/_lineage_upsert")
+                               "n_delete long, n_sampled_out long")
                 finally:
                     out_up.unpersist()
                     if up_cached is not None:
@@ -2056,11 +2050,11 @@ def run_pipeline(
             # markers at the index path remain the authoritative record of
             # every committed reindex.
             def _reindex_sidecar(stage, n_keys, epoch):
-                spark.createDataFrame(
+                write_rows(
+                    spark,
                     [{"stage": stage, "n_keys": n_keys, "epoch": int(epoch)}],
-                    schema="stage string, n_keys long, epoch long",
-                ).write.mode("append").parquet(
-                    f"{output_path}/_lineage_reindex")
+                    f"{output_path}/_lineage_reindex", "append",
+                    schema="stage string, n_keys long, epoch long")
             if nd_changed_rows is not None:
                 from ..operators.minhash_index import (
                     reindex_docs, reindex_groups)

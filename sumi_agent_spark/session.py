@@ -19,13 +19,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``local[N]`` width when the caller names none: ``SPARK_GRAFT_CPUS``
+    if set, else the cores this process may run on (its CPU affinity, which
+    honours cpuset and ``taskset`` limits, unlike ``os.cpu_count``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "sumi-agent-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or cores
     b = (
         SparkSession.builder.appName(app_name)

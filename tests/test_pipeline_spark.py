@@ -296,6 +296,43 @@ def test_retention_guard_trips_on_corrupting_transform(spark, fixture_pdf,
     assert guards["stage"].tolist() == ["scrub_retention"]
 
 
+def test_run_pipeline_runs_scrub_udfs_once_per_row(spark, fixture_pdf,
+                                                   tmp_path):
+    """The scrub stage sits above the range exchange, so its Python UDFs
+    see every input row exactly once -- the boundary-sampling job reads the
+    raw input, not the scrubbed frame -- and the output stays ordered."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    fixture_pdf.to_parquet(inp, index=False)
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("string")
+    def counted(masked: pd.Series) -> pd.Series:
+        seen.add(len(masked))
+        return masked
+
+    def counting_scrub(df, **kw):
+        # on the scrub output: a UDF feeding the scrub UDFs would be
+        # evaluated once per consumer inside the chained Python worker
+        return scrub_transcripts(df, **kw).withColumn(
+            "masked_text", counted("masked_text"))
+
+    stats = run_pipeline(spark, inp, out, scrub_transform=counting_scrub)
+    assert stats["rows"] == len(fixture_pdf)
+    assert seen.value == len(fixture_pdf)
+    # the part files, in name order, are the totally ordered sequence
+    got = pd.concat([pd.read_parquet(f) for f in
+                     sorted(glob.glob(f"{out}/part-*.parquet"))])
+    keys = list(zip(got["conv_id"], got["turn_idx"]))
+    assert keys == sorted(keys)
+    exp = oracle_expected(fixture_pdf)
+    assert got["masked_text"].tolist() == exp["masked_text"].tolist()
+
+
 def test_pipeline_byte_exact_on_rich_variants(spark):
     """End-to-end Spark scrub equals the Python oracle on the rich-PII
     (variant_level=2) fixture: fullwidth phones, bare postals, SNS labels."""

@@ -301,3 +301,17 @@ def test_gopher_threshold_catalog_matches_default_metrics(spark):
     # every catalog key is computable by the default stats frame
     repetition_keep_condition(stats, GOPHER_THRESHOLDS)
     assert set(GOPHER_THRESHOLDS) <= set(stats.columns)
+
+
+def test_r6_accepts_numpy2_style_float_repr():
+    """numpy >= 2 reprs a float64 as ``np.float64(0.25)``; the HALF_UP
+    replica must round the value, not parse its repr."""
+    from sumi_agent_spark.operators.repetition import _r6
+
+    class Float64(float):  # numpy 2 scalar repr on a float subclass
+        def __repr__(self):
+            return f"np.float64({float.__repr__(self)})"
+
+    for v in (3 / 640, 0.25, 1 / 3, 0.0):
+        assert _r6(Float64(v)) == _r6(v)
+    assert _r6(Float64(3 / 640)) == 0.004688
