@@ -330,8 +330,8 @@ def _py_repetition_metrics(
     dup_ns: tuple[int, ...],
 ) -> dict[str, float]:
     """Pure-Python replica of :func:`repetition_stats` for ONE document
-    -- the streaming path's kernel, and the parity reference the tests
-    pin against the batch kernel.  Exactness notes: counters are
+    -- the parity reference the tests pin against the batch kernel (no
+    pipeline path runs it).  Exactness notes: counters are
     exact ints and each metric is one float division, identical to the
     JVM's double division; rounding replicates Spark's
     ``F.round(x, 6)`` exactly via the shared :func:`_r6`
@@ -381,17 +381,43 @@ def _py_repetition_metrics(
     return out
 
 
-def make_repetition_keep_udf(thresholds: dict[str, float] | None = None):
-    """Arrow-batched keep/drop predicate over a text column for the
-    STATELESS streaming path: the batch operator's explode + groupBy is
-    a stateful aggregation under Structured Streaming, so the stream
-    gate recomputes the same per-document metrics row-locally
-    (:func:`_py_repetition_metrics` -- exact-int counters, one
-    division, HALF_UP rounding) and compares them to the same
-    thresholds.  Per-row Python, but documents are transcript turns
-    (short) and the batch path stays the JVM aggregation."""
-    from pyspark.sql.functions import pandas_udf
+def repetition_keep_col(text: Column,
+                        thresholds: dict[str, float] | None = None,
+                        ) -> Column:
+    """Row-local, non-NULL keep Column over ``text``: True when NO
+    metric breaches its threshold (Gopher drops on any breach).
 
+    The batch Arrow kernel (:func:`make_repetition_stats_udf`, only the
+    gram sizes the thresholds need) read as a struct -- no stats frame,
+    no key join, so the input needs no unique key.  One UDF call per
+    row: Spark extracts semantically equal Python UDF calls of one
+    operator once.  ``run_pipeline``'s repetition gate and the streaming
+    twin (:func:`make_repetition_keep_udf`) both build on it."""
+    if thresholds is None:
+        thresholds = GOPHER_THRESHOLDS
+    top_ns, dup_ns = threshold_gram_sizes(thresholds)
+    for g in (*top_ns, *dup_ns):
+        if g < 2:
+            raise ValueError(f"n-gram sizes must be >= 2, got {g}")
+    names = metric_names(top_ns, dup_ns)
+    missing = [k for k in thresholds if k not in names]
+    if missing:
+        raise ValueError(
+            f"thresholds reference metrics not in the stats frame: "
+            f"{missing}; computed: {names}")
+    r = make_repetition_stats_udf(top_ns, dup_ns)(text)
+    cond = F.lit(True)
+    for k, v in sorted(thresholds.items()):
+        cond = cond & (r[k] <= F.lit(float(v)))
+    return cond
+
+
+def make_repetition_keep_udf(thresholds: dict[str, float] | None = None):
+    """``text Column -> keep Column`` for the streaming path.  Every
+    metric is row-local, so the stream gate is the batch gate itself
+    (:func:`repetition_keep_col` over the same Arrow kernel): stateless,
+    no state store, drop decisions identical by construction.  Rejects
+    metric names outside the battery up front."""
     if thresholds is None:
         thresholds = GOPHER_THRESHOLDS
     thr = {k: float(v) for k, v in sorted(thresholds.items())}
@@ -402,16 +428,7 @@ def make_repetition_keep_udf(thresholds: dict[str, float] | None = None):
     unknown = [k for k in thr if k not in known]
     if unknown:
         raise ValueError(f"unknown repetition metrics: {unknown}")
-    top_ns, dup_ns = threshold_gram_sizes(thr)
-
-    @pandas_udf("boolean")
-    def keep(texts: pd.Series) -> pd.Series:
-        def one(t):
-            m = _py_repetition_metrics(t, top_ns, dup_ns)
-            return all(m[k] <= v for k, v in thr.items())
-        return texts.map(one)
-
-    return keep
+    return lambda text: repetition_keep_col(text, thr)
 
 
 def threshold_gram_sizes(

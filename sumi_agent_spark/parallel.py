@@ -31,8 +31,20 @@ from pyspark.sql import DataFrame
 # Joins are skipped too: a post-shuffle join is already parallel, and a
 # broadcast join inherits its streamed side's scan partitioning -- callers
 # that need a fanned broadcast-join input fan the scan side BEFORE joining
-# (as the incremental index probes do).
+# (as the incremental index probes do).  Matched against plan NODE names
+# (``RepartitionByExpression`` is a Repartition), never against the
+# rendered plan string, where a column named e.g. ``JoinKey`` would match.
 _WIDE_NODES = ("Repartition", "Join", "Aggregate", "Window", "Sort")
+
+
+def _plan_node_names(plan):
+    """Node names of a JVM logical plan tree, subquery plans included."""
+    todo = [plan]
+    while todo:
+        node = todo.pop()
+        yield node.nodeName()
+        for seq in (node.children(), node.subqueries()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -49,8 +61,9 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     spark = df.sparkSession
     target = int(min_partitions
                  or spark.sparkContext.defaultParallelism)
-    plan = df._jdf.queryExecution().analyzed().toString()
-    if any(node in plan for node in _WIDE_NODES):
+    plan = df._jdf.queryExecution().analyzed()
+    if any(wide in name for name in _plan_node_names(plan)
+           for wide in _WIDE_NODES):
         return df
     # narrow chain over scans/local relations: the RDD probe plans
     # without executing anything

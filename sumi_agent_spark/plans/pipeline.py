@@ -1,4 +1,5 @@
-"""End-to-end scrub pipeline: read -> gates -> order -> quality + scrub -> write.
+"""End-to-end scrub pipeline: read -> dedup/sample/decontam gates -> order ->
+row gates -> quality + scrub -> write.
 
 Spark-first shape (SURVEY.md §3.1 translation):
 
@@ -7,7 +8,9 @@ Spark-first shape (SURVEY.md §3.1 translation):
   both UDFs sit in one ``ArrowEvalPython`` stage ABOVE the exchange, so they
   run once per row and the exchange (and its boundary-sampling job) moves
   only the raw input columns.  Arrow UDF evaluation keeps row order, so the
-  sorted sequence reaches the writer unchanged.
+  sorted sequence reaches the writer unchanged.  The row-local quality
+  gates (:class:`RowGate`) sit in the same stage, between the sort and
+  the scrub, and are counted on the write pass.
 * Ordering (north rule: stable (conv_id, turn_idx) order) uses
   ``repartitionByRange + sortWithinPartitions``: a sampled range exchange,
   not a single-reducer global sort, so hot conversations split across
@@ -21,9 +24,9 @@ Spark-first shape (SURVEY.md §3.1 translation):
 from __future__ import annotations
 
 import time
-from typing import Optional
+from typing import Callable, NamedTuple, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.quality import DEFAULT_QUALITY_CONFIG, QualityConfig
@@ -336,6 +339,57 @@ def _try_read_first(spark: SparkSession, path: str):
         raise
 
 
+_ND_CAP_KEYS = ("n_capped_rows", "n_capped_buckets", "max_bucket_n")
+
+
+def _nd_row(stage, n_dropped, m, metrics_observed, n_pre=0,
+            n_pre_changed=0, reused=False) -> dict:
+    """One ``_lineage_neardup`` row (``m``: the capped-bucket metrics)."""
+    return {"stage": stage, "n_dropped": n_dropped,
+            "n_preindexed_rows_dropped": n_pre,
+            "n_preindexed_changed": n_pre_changed,
+            **{k: m[k] for k in _ND_CAP_KEYS},
+            "metrics_observed": metrics_observed,
+            "drop_set_reused": reused}
+
+
+def _in_slice_near_dedup(df, threshold, conv_scope, stage_name):
+    """Full in-slice MinHash near-dedup at turn or conversation scope:
+    the input-wide pass of :func:`_near_dedup_full_stage` and the
+    bootstrap slice of :func:`_near_dedup_slice_stage`.  The drop set is
+    persisted and counted here (fires the capping observation, pins the
+    set for the write).  Returns ``(deduped, nd_row, nd_drops)``."""
+    from pyspark.sql import Observation
+
+    from ..operators.dedup import (
+        capped_bucket_metrics, minhash_bucket_audit,
+        minhash_grouped_bucket_audit)
+
+    nd_obs = Observation("near_dedup_capping")
+    near = (near_deduplicate_conversations if conv_scope
+            else near_deduplicate_turns)
+    deduped, nd_drops = near(df, threshold=threshold, observation=nd_obs)
+    nd_drops.persist()
+    n_nd = nd_drops.count()  # fires the observation; pins the drop set
+    m = capped_bucket_metrics(nd_obs)
+    metrics_observed = m is not None
+    if m is None:
+        # the observed subtree was pruned: the run produced zero LSH
+        # pairs end to end -- which happens both when nothing was
+        # capped AND when EVERY bucket was capped, so writing zeros
+        # here would lie in exactly the pathological run this counter
+        # exists to surface.  Recount exactly with one dedicated audit
+        # job (rare path only; the hot path stays zero-extra-scan).
+        if conv_scope:
+            m = minhash_grouped_bucket_audit(
+                df, "conv_id", "text", threshold=threshold)
+        else:
+            m = minhash_bucket_audit(
+                df.withColumn("_nk", F.struct("conv_id", "turn_idx")),
+                "_nk", "text", threshold=threshold)
+    return deduped, _nd_row(stage_name, n_nd, m, metrics_observed), nd_drops
+
+
 def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
                            scope="turn"):
     """Full-input MinHash near-dedup with a persisted drop-set sidecar.
@@ -355,12 +409,6 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
     between runs) falls back to full recompute: correctness never depends
     on the reuse.  Returns (deduped_df, lineage_row,
     drops_to_unpersist_or_None)."""
-    from pyspark.sql import Observation
-
-    from ..operators.dedup import (
-        capped_bucket_metrics, minhash_bucket_audit,
-        minhash_grouped_bucket_audit)
-
     conv_scope = scope == "conversation"
     key_cols = ["conv_id"] if conv_scope else ["conv_id", "turn_idx"]
     stage_name = "near_dedup_conversations" if conv_scope else "near_dedup"
@@ -379,50 +427,14 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
                 if n_nd > 0:  # empty drop sets are meta-only (no parquet)
                     done = spark.read.parquet(drops_path)
                     df = df.join(done, key_cols, "left_anti")
-                nd_row = {"stage": stage_name, "n_dropped": n_nd,
-                          "n_preindexed_rows_dropped": 0,
-                          "n_preindexed_changed": 0,
-                          "n_capped_rows": int(meta["n_capped_rows"]),
-                          "n_capped_buckets": int(meta["n_capped_buckets"]),
-                          "max_bucket_n": int(meta["max_bucket_n"]),
-                          "metrics_observed": False,
-                          "drop_set_reused": True}
+                nd_row = _nd_row(stage_name, n_nd,
+                                 {k: int(meta[k]) for k in _ND_CAP_KEYS},
+                                 False, reused=True)
                 return df, nd_row, None
 
-    nd_obs = Observation("near_dedup_capping")
-    df_pre_nd = df
-    if conv_scope:
-        deduped, nd_drops = near_deduplicate_conversations(
-            df, threshold=threshold, observation=nd_obs)
-    else:
-        deduped, nd_drops = near_deduplicate_turns(
-            df, threshold=threshold, observation=nd_obs)
-    nd_drops.persist()
-    n_nd = nd_drops.count()  # fires the observation; pins the drop set
-    m = capped_bucket_metrics(nd_obs)
-    metrics_observed = m is not None
-    if m is None:
-        # the observed subtree was pruned: the run produced zero LSH
-        # pairs end to end -- which happens both when nothing was
-        # capped AND when EVERY bucket was capped, so writing zeros
-        # here would lie in exactly the pathological run this counter
-        # exists to surface.  Recount exactly with one dedicated audit
-        # job (rare path only; the hot path stays zero-extra-scan).
-        if conv_scope:
-            m = minhash_grouped_bucket_audit(
-                df_pre_nd, "conv_id", "text", threshold=threshold)
-        else:
-            m = minhash_bucket_audit(
-                df_pre_nd.withColumn("_nk", F.struct("conv_id", "turn_idx")),
-                "_nk", "text", threshold=threshold)
-    nd_row = {"stage": stage_name, "n_dropped": n_nd,
-              "n_preindexed_rows_dropped": 0,
-              "n_preindexed_changed": 0,
-              "n_capped_rows": m["n_capped_rows"],
-              "n_capped_buckets": m["n_capped_buckets"],
-              "max_bucket_n": m["max_bucket_n"],
-              "metrics_observed": metrics_observed,
-              "drop_set_reused": False}
+    deduped, nd_row, nd_drops = _in_slice_near_dedup(
+        df, threshold, conv_scope, stage_name)
+    n_nd = nd_row["n_dropped"]
     # persist the drop set + input fingerprint BEFORE the main write so a
     # crashed run's restart can reuse it (drops first, meta last: meta's
     # presence certifies the drop parquet is complete)
@@ -434,10 +446,11 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
                              F.col("_nk.turn_idx").alias("turn_idx"))
              .write.mode("overwrite").parquet(drops_path))
     if fingerprint is None:
-        fingerprint = _nd_input_fingerprint(df_pre_nd)
+        fingerprint = _nd_input_fingerprint(df)
     n_in, checksum = fingerprint
     meta_row = {"threshold": threshold, "scope": scope, "n_input_rows": n_in,
-                "keys_checksum": checksum, "n_dropped": n_nd, **m}
+                "keys_checksum": checksum, "n_dropped": n_nd,
+                **{k: nd_row[k] for k in _ND_CAP_KEYS}}
     write_rows(spark, [meta_row], meta_path, "overwrite")
     return deduped, nd_row, nd_drops
 
@@ -468,9 +481,7 @@ def _near_dedup_slice_stage(spark, df, threshold, index_path,
     unpersists it in its finally block)."""
     from pyspark.sql import Observation
 
-    from ..operators.dedup import (
-        capped_bucket_metrics, minhash_bucket_audit,
-        minhash_grouped_bucket_audit)
+    from ..operators.dedup import capped_bucket_metrics
     from ..operators.minhash_index import (
         incremental_drop_keys, minhash_grouped_index_bucket_audit,
         minhash_index_bucket_audit,
@@ -480,33 +491,8 @@ def _near_dedup_slice_stage(spark, df, threshold, index_path,
     conv_scope = scope == "conversation"
     meta = _try_read_first(spark, f"{index_path}/meta")
     if meta is None:  # bootstrap slice: plain in-slice near-dedup
-        nd_obs = Observation("near_dedup_capping")
-        if conv_scope:
-            deduped, nd_drops = near_deduplicate_conversations(
-                df, threshold=threshold, observation=nd_obs)
-        else:
-            deduped, nd_drops = near_deduplicate_turns(
-                df, threshold=threshold, observation=nd_obs)
-        nd_drops.persist()
-        n_nd = nd_drops.count()
-        m = capped_bucket_metrics(nd_obs)
-        metrics_observed = m is not None
-        if m is None:
-            if conv_scope:
-                m = minhash_grouped_bucket_audit(
-                    df, "conv_id", "text", threshold=threshold)
-            else:
-                m = minhash_bucket_audit(
-                    df.withColumn("_nk", F.struct("conv_id", "turn_idx")),
-                    "_nk", "text", threshold=threshold)
-        nd_row = {"stage": "near_dedup_bootstrap", "n_dropped": n_nd,
-                  "n_preindexed_rows_dropped": 0,
-                  "n_preindexed_changed": 0,
-                  "n_capped_rows": m["n_capped_rows"],
-                  "n_capped_buckets": m["n_capped_buckets"],
-                  "max_bucket_n": m["max_bucket_n"],
-                  "metrics_observed": metrics_observed,
-                  "drop_set_reused": False}
+        deduped, nd_row, nd_drops = _in_slice_near_dedup(
+            df, threshold, conv_scope, "near_dedup_bootstrap")
         return deduped, nd_row, nd_drops, ("create", deduped), None
 
     if abs(float(meta["threshold"]) - threshold) > 1e-12:
@@ -595,14 +581,8 @@ def _near_dedup_slice_stage(spark, df, threshold, index_path,
             m = minhash_index_bucket_audit(keyed, "_nk", "text", index_path)
         deduped = (keyed.join(drops, "_nk", "left_anti")
                    .join(committed, "_nk", "left_anti").drop("_nk"))
-    nd_row = {"stage": "near_dedup_incremental", "n_dropped": n_nd,
-              "n_preindexed_rows_dropped": n_pre,
-              "n_preindexed_changed": n_pre_changed,
-              "n_capped_rows": m["n_capped_rows"],
-              "n_capped_buckets": m["n_capped_buckets"],
-              "max_bucket_n": m["max_bucket_n"],
-              "metrics_observed": metrics_observed,
-              "drop_set_reused": False}
+    nd_row = _nd_row("near_dedup_incremental", n_nd, m, metrics_observed,
+                     n_pre=n_pre, n_pre_changed=n_pre_changed)
     return deduped, nd_row, drops, ("append", deduped), changed_rows
 
 
@@ -777,6 +757,105 @@ def _assert_retention(stage: str, rows_in: int, rows_out: int,
             "lines_out": lines_out}
 
 
+class RowGate(NamedTuple):
+    """One row-local keep/drop gate of :func:`run_pipeline`.
+
+    ``keep`` is a non-NULL boolean Column that decides each row on its
+    own (a JVM expression or an Arrow kernel read as a struct) over the
+    frame ``prepare`` returns; ``prepare`` attaches the columns ``keep``
+    reads (a model score; it may join) and runs before the range
+    exchange.  Each run appends ``(name, n_dropped, *params)`` to the
+    ``sidecar`` lineage directory with schema ``stage string, n_dropped
+    long, <ddl>``."""
+    name: str
+    sidecar: str
+    keep: Column
+    params: tuple
+    ddl: str
+    prepare: Optional[Callable[[DataFrame], DataFrame]] = None
+
+
+def _scored(score, model, out_col):
+    """``prepare`` for a model gate: attach ``out_col`` via a keyed
+    token aggregate (``(conv_id, turn_idx)`` must key the input)."""
+    def prepare(df: DataFrame) -> DataFrame:
+        keyed = df.withColumn("_gk", F.struct("conv_id", "turn_idx"))
+        return score(keyed, model, ["_gk"], output_col=out_col).drop("_gk")
+    return prepare
+
+
+def _row_gates(spark, drop_toxic_above, gq_rules, rep_thresholds,
+               quality_model_path, quality_min_score,
+               perplexity_model_path, perplexity_max) -> list[RowGate]:
+    """The configured row gates, cheapest first: toxicity and Gopher
+    quality are JVM expressions, repetition one Arrow kernel pass,
+    the classifier and the LM an explode + broadcast join each.  A row
+    is charged to the first gate it fails."""
+    text = F.col("text")
+    gates = []
+    if drop_toxic_above is not None:
+        from ..operators.toxicity import toxicity_score_col
+        thr = float(drop_toxic_above)
+        gates.append(RowGate("toxicity", "_lineage_toxicity",
+                             toxicity_score_col(text) <= thr, (thr,),
+                             "threshold double"))
+    if gq_rules is not None:
+        from ..operators.doc_quality import gopher_quality_keep_condition
+        gates.append(RowGate(
+            "gopher_quality", "_lineage_docquality",
+            gopher_quality_keep_condition(text, gq_rules),
+            (",".join(f"{k}=[{lo},{hi}]"
+                      for k, (lo, hi) in sorted(gq_rules.items())),),
+            "rules string"))
+    if rep_thresholds is not None:
+        from ..operators.repetition import repetition_keep_col
+        gates.append(RowGate(
+            "repetition", "_lineage_repetition",
+            repetition_keep_col(text, rep_thresholds),
+            (",".join(f"{k}={v}" for k, v in sorted(rep_thresholds.items())),),
+            "thresholds string"))
+    if quality_model_path is not None:
+        from ..operators.quality_classifier import (
+            read_quality_model, score_quality_classifier)
+        qc = read_quality_model(spark, quality_model_path)
+        gates.append(RowGate(
+            "quality_classifier", "_lineage_quality",
+            F.col("_qscore") >= float(quality_min_score),
+            (float(quality_min_score), str(quality_model_path),
+             int(qc["meta"]["dim"]), int(qc["meta"]["ngram"])),
+            "min_score double, model_path string, dim long, ngram long",
+            _scored(score_quality_classifier, qc, "_qscore")))
+    if perplexity_model_path is not None:
+        from ..operators.lm_perplexity import read_unigram_lm, score_perplexity
+        lm = read_unigram_lm(spark, perplexity_model_path)
+        # token-less rows score NULL and pass, like NULL text elsewhere
+        gates.append(RowGate(
+            "lm_perplexity", "_lineage_perplexity",
+            F.coalesce(F.col("_ppl") <= float(perplexity_max), F.lit(True)),
+            (float(perplexity_max), str(perplexity_model_path),
+             int(lm["meta"]["n_tokens"]), int(lm["meta"]["vocab_size"]),
+             int(lm["meta"]["min_count"])),
+            "max_log_ppl double, model_path string, n_tokens long, "
+            "vocab_size long, min_count long",
+            _scored(score_perplexity, lm, "_ppl")))
+    return gates
+
+
+def _prepared(df: DataFrame, gates: list[RowGate]) -> DataFrame:
+    for g in gates:
+        if g.prepare is not None:
+            df = g.prepare(df)
+    return df
+
+
+def _gate_index(gates: list[RowGate]) -> Column:
+    """The 1-based index of the first gate a (prepared) row fails, 0 when
+    every gate keeps it."""
+    return F.coalesce(
+        *[F.when(~g.keep, F.lit(i)) for i, g in enumerate(gates, 1)],
+        F.lit(0))
+
+
 def run_pipeline(
     spark: SparkSession,
     input_path: str,
@@ -871,7 +950,7 @@ def run_pipeline(
     is the caller's upsert -- Iceberg MERGE in the nominal deployment).
     To give that MERGE a source, the changed keys' current content is
     ALSO run through the same gates as the main path -- decontamination,
-    toxicity (pre-scrub, like the main gate), the replacement probes
+    the row gates (pre-scrub, like the main path), the replacement probes
     against the near-dedup indexes (``probe_index_near_duplicates`` /
     ``probe_embedding_index_near_duplicates``: new content duplicating a
     DIFFERENT surviving committed key must not land; resembling the
@@ -939,46 +1018,43 @@ def run_pipeline(
     char proxy.  Runs BEFORE resume_filter too -- the fractions are an
     aggregate of the FULL input, so a resumed run recomputes the same
     thresholds and the same membership; counts land in the
-    ``_lineage_token_mix`` sidecar.  ``drop_toxic_above`` (e.g. 0.3) drops turns
-    whose lexicon toxicity score exceeds the threshold, also pre-scrub so
-    toxic turns never pay detection cost (operators/toxicity.py; NULL text
-    scores 0 and is never dropped by this gate).
-    ``gopher_quality_rules`` (the literal ``"gopher"`` or a
-    metric->(min, max) dict) drops turns breaching any Gopher quality
-    rule (:mod:`operators.doc_quality`: word count / mean word length
-    bounds, hash/ellipsis symbol ratios, bullet/ellipsis line
-    fractions, alphabetic-word fraction, stopword count).  Row-local
-    column expressions -- the cheapest gate, so it runs first among
-    the text-quality gates; drop count and the rule catalog land in
-    the ``_lineage_docquality`` sidecar, and changed-upsert
-    replacement rows are re-checked against the same rules.  NOTE:
-    the full catalog's stopword/alpha rules are English-centric --
-    pass a custom dict for the ja/en transcript mix.
-    ``repetition_thresholds`` (the literal ``"gopher"`` or a metric->max
-    dict) drops turns breaching any Gopher/MassiveText repetition rule
-    (:mod:`operators.repetition`: duplicate line/paragraph fractions,
-    top/duplicate n-gram char coverage), pre-scrub, after the cheap
-    regex gates and before the classifier; drop count and the threshold
-    catalog land in the ``_lineage_repetition`` sidecar, and
-    changed-upsert replacement rows are re-checked against the same
-    thresholds.  Requires unique ``(conv_id, turn_idx)`` keys.
-    ``quality_model_path`` + ``quality_min_score`` apply a model-based
-    quality filter (the CCNet/GPT-3 pattern): a persisted hashed-NB
-    classifier (:mod:`operators.quality_classifier`) scores each turn
-    fully JVM-side and rows below the threshold drop pre-scrub, last
-    among the row gates (it is the most expensive one); drop counts and
-    the model geometry land in the ``_lineage_quality`` sidecar, and
-    changed-upsert replacement rows are re-checked with the same model.
-    Requires unique ``(conv_id, turn_idx)`` keys (run ``dedup=True``
-    first on dirty input).
-    ``perplexity_model_path`` + ``perplexity_max`` apply the CCNet
-    pattern's other half: a persisted smoothed unigram LM
+    ``_lineage_token_mix`` sidecar.
+    Row gates (:class:`RowGate`, applied in this order; a row failing
+    several is charged to the first): ``drop_toxic_above`` (e.g. 0.3)
+    drops turns whose lexicon toxicity score exceeds the threshold
+    (operators/toxicity.py; NULL text scores 0 and is never dropped)
+    -> ``_lineage_toxicity``.  ``gopher_quality_rules`` (the literal
+    ``"gopher"`` or a metric->(min, max) dict) drops turns breaching any
+    Gopher quality rule (:mod:`operators.doc_quality`: word count / mean
+    word length bounds, hash/ellipsis symbol ratios, bullet/ellipsis
+    line fractions, alphabetic-word fraction, stopword count) ->
+    ``_lineage_docquality``.  NOTE: the full catalog's stopword/alpha
+    rules are English-centric -- pass a custom dict for the ja/en
+    transcript mix.  ``repetition_thresholds`` (the literal ``"gopher"``
+    or a metric->max dict) drops turns breaching any Gopher/MassiveText
+    repetition rule (:mod:`operators.repetition`: duplicate line/
+    paragraph fractions, top/duplicate n-gram char coverage; one Arrow
+    kernel pass per row, no key join, so keys need not be unique) ->
+    ``_lineage_repetition``.  ``quality_model_path`` +
+    ``quality_min_score`` apply a model-based quality filter (the
+    CCNet/GPT-3 pattern): a persisted hashed-NB classifier
+    (:mod:`operators.quality_classifier`) scores each turn JVM-side and
+    rows below the threshold drop -> ``_lineage_quality`` (with the
+    model geometry).  ``perplexity_model_path`` + ``perplexity_max``
+    apply the pattern's other half: a persisted smoothed unigram LM
     (:mod:`operators.lm_perplexity`) scores each turn's mean negative
-    token log-prob (nats) fully JVM-side and rows above the cutoff
-    drop pre-scrub; token-less rows score NULL and pass.  Drop counts
-    and the model geometry land in the ``_lineage_perplexity``
-    sidecar; changed-upsert replacement rows are re-checked with the
-    same model.  Same unique-key requirement as the classifier.
+    token log-prob (nats) and rows above the cutoff drop; token-less
+    rows score NULL and pass -> ``_lineage_perplexity``.  The two model
+    scores are attached by a keyed token aggregate, so they require
+    unique ``(conv_id, turn_idx)`` keys (run ``dedup=True`` first on
+    dirty input).  All five gates run pre-scrub, on the range-ordered
+    frame: one projection computes each row's first failing gate, the
+    write pass itself counts rows in and each gate's drops (one
+    Observation, no extra job), and the survivors are scrubbed.  Each
+    gate's sidecar row ``(stage, n_dropped, <params>)`` is appended
+    after the write and before the retention guard can raise.
+    Changed-upsert replacement rows are re-checked against the same
+    gate list.
     ``decontaminate_against`` (a parquet path of benchmark rows with a
     ``decontam_text_col`` text column) drops turns that share at least
     ``decontam_min_hits`` exact ``decontam_k``-gram shingles with the
@@ -1083,19 +1159,13 @@ def run_pipeline(
     nd_drops = None
     eb_drops = None
     dc_drops = None
-    rep_drops = None
-    q_drops = None
-    p_drops = None
     nd_changed_rows = None
     eb_changed_rows = None
     up_cached = None
-    # Outer cache guard: every persisted frame the body creates is
-    # released here even when a gate raises BEFORE the write-tail
-    # try/finally is entered (model reads, benchmark reads and
-    # sidecar writes all sit between a persist and that try) -- a
-    # long-lived session must not accumulate dead cache entries.
-    # The inner finally keeps its own unpersists; unpersist is
-    # idempotent.
+    # Cache guard: every persisted frame the body creates is released in
+    # the finally, also when a model read, a sidecar write, the main
+    # write, a guard or index maintenance raises -- a long-lived session
+    # must not accumulate dead cache entries.
     try:
         nd_row = None
         nd_drops = None
@@ -1459,133 +1529,25 @@ def run_pipeline(
                 schema="stage string, n_dropped long, k long, min_hits long, "
                        "ngrams string, scope string, min_containment double, "
                        "mode string, benchmark_path string")
-        if drop_toxic_above is not None:
-            from ..operators.toxicity import toxicity_score_col
-            df = df.filter(toxicity_score_col(F.col("text"))
-                           <= float(drop_toxic_above))
-        if gq_rules is not None:
-            # Gopher quality battery: row-local column expressions --
-            # the cheapest gate in the battery, so it runs before the
-            # aggregation-shaped ones (repetition, classifier, LM).
-            # The keep verdict is a pure per-row function of text, so
-            # counting and filtering in two jobs cannot disagree (no
-            # cross-row float accumulation -- unlike the classifier
-            # score, which pins its drop keys).
-            from ..operators.doc_quality import (
-                gopher_quality_keep_condition)
-            gq_keep = gopher_quality_keep_condition(F.col("text"),
-                                                    gq_rules)
-            n_gq = df.filter(~gq_keep).count()
-            df = df.filter(gq_keep)
-            gq_str = ",".join(
-                f"{k}=[{lo},{hi}]" for k, (lo, hi) in
-                sorted(gq_rules.items()))
-            write_rows(
-                spark, [("gopher_quality", int(n_gq), gq_str)],
-                f"{output_path}/_lineage_docquality", "append",
-                schema="stage string, n_dropped long, rules string")
-        rep_drops = None
-        if rep_thresholds is not None:
-            # Gopher repetition battery: per-row-independent like toxicity
-            # but costs one Arrow UDF pass (the vectorized kernel), so it
-            # runs after the cheap regex gates and before the classifier.  (conv_id,
-            # turn_idx) must uniquely key the input (duplicate keys would
-            # merge two turns' counters -- run dedup=True first), the same
-            # documented requirement as the sampling/index operators.
-            from ..operators.repetition import (
-                repetition_keep_condition, repetition_stats,
-                threshold_gram_sizes)
-            r_tn, r_dn = threshold_gram_sizes(rep_thresholds)
-            r_keyed = df.withColumn("_rk", F.struct("conv_id", "turn_idx"))
-            r_stats = repetition_stats(r_keyed, "text", ["_rk"],
-                                       top_ns=r_tn, dup_ns=r_dn)
-            rep_drops = (r_stats.filter(
-                ~repetition_keep_condition(r_stats, rep_thresholds))
-                .select("_rk"))
-            rep_drops.persist()
-            n_rep = rep_drops.count()  # pins the drop set for the write
-            df = r_keyed.join(rep_drops, "_rk", "left_anti").drop("_rk")
-            thr_str = ",".join(f"{k}={v}"
-                               for k, v in sorted(rep_thresholds.items()))
-            write_rows(
-                spark, [("repetition", int(n_rep), thr_str)],
-                f"{output_path}/_lineage_repetition", "append",
-                schema="stage string, n_dropped long, thresholds string")
-        qc_model = None
-        if quality_model_path is not None:
-            # Model-based quality filter (CCNet/GPT-3-style): per-row-
-            # independent like toxicity, but costs an explode + broadcast
-            # join, so it runs LAST among the row gates -- rows the cheaper
-            # gates drop never pay the classifier.  (conv_id, turn_idx)
-            # must uniquely key the input (the per-row token aggregate is
-            # joined back on it -- same documented requirement as the
-            # sampling/index operators; run dedup=True first otherwise).
-            from ..operators.quality_classifier import (
-                read_quality_model, score_quality_classifier)
-            qc_model = read_quality_model(spark, quality_model_path)
-            scored = score_quality_classifier(
-                df.withColumn("_qk", F.struct("conv_id", "turn_idx")),
-                qc_model, ["_qk"], output_col="_qscore")
-            # persist the drop KEYS and anti-join them, instead of counting
-            # and filtering in two independent jobs: the score is a sum of
-            # doubles, so a row at the threshold boundary could flip
-            # between the two executions and the lineage count would
-            # misstate the rows actually dropped (same pinning the
-            # decontam/near-dedup drop sets get)
-            q_drops = (scored.filter(
-                F.col("_qscore") < float(quality_min_score)).select("_qk"))
-            q_drops.persist()
-            n_lowq = q_drops.count()
-            df = (scored.join(q_drops, "_qk", "left_anti")
-                  .drop("_qk", "_qscore"))
-            write_rows(
-                spark,
-                [(str("quality_classifier"), int(n_lowq),
-                  float(quality_min_score), str(quality_model_path),
-                  int(qc_model["meta"]["dim"]),
-                  int(qc_model["meta"]["ngram"]))],
-                f"{output_path}/_lineage_quality", "append",
-                schema="stage string, n_dropped long, min_score double, "
-                       "model_path string, dim long, ngram long")
-        lm_model = None
-        if perplexity_model_path is not None:
-            # CCNet-style LM perplexity gate: same shape and cost class as
-            # the classifier (explode + broadcast token join), same
-            # unique-key requirement.  A row whose mean token log-prob is
-            # worse (higher log-perplexity) than the cutoff drops; rows
-            # with NO tokens score NULL and pass, like NULL text in the
-            # toxicity gate -- emptiness is the length gates' concern.
-            from ..operators.lm_perplexity import (
-                read_unigram_lm, score_perplexity)
-            lm_model = read_unigram_lm(spark, perplexity_model_path)
-            p_scored = score_perplexity(
-                df.withColumn("_pk", F.struct("conv_id", "turn_idx")),
-                lm_model, ["_pk"], output_col="_ppl")
-            # pinned drop keys, for the same float-boundary reason as the
-            # classifier gate above (NULL scores never match `>` -> pass)
-            p_drops = (p_scored.filter(
-                F.col("_ppl") > float(perplexity_max)).select("_pk"))
-            p_drops.persist()
-            n_hippl = p_drops.count()
-            df = (p_scored.join(p_drops, "_pk", "left_anti")
-                  .drop("_pk", "_ppl"))
-            write_rows(
-                spark,
-                [(str("lm_perplexity"), int(n_hippl),
-                  float(perplexity_max), str(perplexity_model_path),
-                  int(lm_model["meta"]["n_tokens"]),
-                  int(lm_model["meta"]["vocab_size"]),
-                  int(lm_model["meta"]["min_count"]))],
-                f"{output_path}/_lineage_perplexity", "append",
-                schema="stage string, n_dropped long, max_log_ppl double, "
-                       "model_path string, n_tokens long, vocab_size long, "
-                       "min_count long")
-
-        # range-order the gated frame BEFORE the scrub: the boundary
-        # sampling job then reads the raw input columns, and the UDFs run
-        # once, after the exchange (Arrow UDF evaluation keeps row order)
+        gates = _row_gates(spark, drop_toxic_above, gq_rules, rep_thresholds,
+                           quality_model_path, quality_min_score,
+                           perplexity_model_path, perplexity_max)
+        # range-order BEFORE the row gates and the scrub: the boundary
+        # sampling job then reads the raw input columns (plus the model
+        # scores ``prepare`` attaches), and the gate kernels and scrub
+        # UDFs run once, after the exchange.  Rows in and each gate's
+        # drops are observed there too, on the write pass itself: an
+        # Observation below the exchange would also count the rows the
+        # boundary-sampling job reads.
         in_obs = Observation("retention_in")
-        df = ordered(df).observe(in_obs, F.count(F.lit(1)).alias("rows_in"))
+        df = (ordered(_prepared(df, gates))
+              .withColumn("_gate", _gate_index(gates))
+              .observe(in_obs, *[
+                  F.sum((F.col("_gate") == i).cast("long")).alias(name)
+                  for i, name in enumerate(
+                      ["rows_in", *(g.name for g in gates)])])
+              .filter(F.col("_gate") == 0)
+              .select(*df.columns))
         scrubbed = scrub_transform(df, **scrub_kwargs)
         out_obs = Observation("retention_out")
         scrubbed = scrubbed.observe(
@@ -1595,511 +1557,456 @@ def run_pipeline(
             F.sum(_nonempty_lines(F.col("masked_text")).cast("long"))
              .alias("lines_out"))
 
-        # the finally guards the whole tail -- write, guards, AND index
-        # maintenance: the index create/append consumes ``kept``, whose plan
+        # the persisted drop sets stay cached through the whole tail --
+        # write, guards, AND index maintenance; the outer finally releases
+        # them: the index create/append consumes ``kept``, whose plan
         # anti-joins the persisted drop set, so unpersisting right after the
         # write would make index maintenance recompute the full near-dedup
         # LSH subtree instead of the claimed one signature pass over the
         # kept rows (deterministic either way; this is purely the cost)
-        try:
-            n = write_with_lineage(scrubbed, output_path, stage="scrub")
+        n = write_with_lineage(scrubbed, output_path, stage="scrub")
 
-            def _obs(o) -> dict:
-                # a fully-empty write (e.g. resume found no new keys) lets AQE
-                # empty-propagation prune the observed subtree; the metrics row
-                # is then absent and .get raises -- all-zero is correct
-                try:
-                    return o.get
-                except Exception:
-                    return {}
+        def _obs(o) -> dict:
+            # a fully-empty write (e.g. resume found no new keys) lets AQE
+            # empty-propagation prune the observed subtree; the metrics row
+            # is then absent and .get raises -- all-zero is correct
+            try:
+                return o.get
+            except Exception:
+                return {}
 
-            m_in, m_out = _obs(in_obs), _obs(out_obs)
-            guard_row = _assert_retention(
-                "scrub", int(m_in.get("rows_in") or 0),
-                int(m_out.get("rows_out") or 0),
-                int(m_out.get("lines_in") or 0),
-                int(m_out.get("lines_out") or 0), min_line_ratio)
-            write_rows(spark, [guard_row], f"{output_path}/_lineage_guards",
-                       "append")
-            if nd_index_action is not None:
-                # Index content = dedup-kept turns, BEFORE the toxicity/resume
-                # gates: the index answers "what has this corpus already seen",
-                # so a toxic turn dropped from the OUTPUT still anchors dedup of
-                # its future near-copies (which the toxicity gate would drop
-                # anyway -- near-copies of toxic text score toxic).
-                # index maintenance runs LAST, only after the write + guards
-                # succeeded: a crash anywhere above leaves the index in its
-                # pre-slice state, so a resumed run recomputes the same drops
-                # against the same index (idempotent restart).  Cost: one extra
-                # signature pass over the kept slice rows.
-                from ..operators.minhash_index import (
-                    append_grouped_to_minhash_index, append_to_minhash_index,
-                    write_grouped_minhash_index, write_minhash_index)
-                action, kept = nd_index_action
-                conv_scope = near_dedup_scope == "conversation"
-                if conv_scope:
-                    kept_keyed, key_col = kept, "conv_id"
-                else:
-                    kept_keyed = kept.withColumn(
-                        "_nk", F.struct("conv_id", "turn_idx"))
-                    key_col = "_nk"
-                if action == "create":
-                    # gate on the KEPT set, not rows written this call: a
-                    # bootstrap that crashed mid-create and RESUMED writes zero
-                    # new output rows (resume_filter removed them) but must
-                    # still create the index, or the whole bootstrap corpus
-                    # silently never enters it and later slices dedup against
-                    # nothing
-                    if not kept_keyed.isEmpty():  # empty input: no index
-                        create = (write_grouped_minhash_index if conv_scope
-                                  else write_minhash_index)
-                        create(kept_keyed, key_col, "text",
-                               near_dedup_index_path,
-                               threshold=float(near_dedup_threshold))
-                else:
-                    # idempotent by construction: the append fns anti-join each
-                    # store's already-committed keys, so a completed-slice
-                    # re-run appends nothing and a half-crashed append
-                    # completes exactly-once
-                    append = (append_grouped_to_minhash_index if conv_scope
-                              else append_to_minhash_index)
-                    append(kept_keyed, key_col, "text", near_dedup_index_path)
-            if eb_index_action is not None:
-                # same last-step commit protocol as the MinHash index: a
-                # crash anywhere above leaves the embedding index in its
-                # pre-slice state, and the append functions are idempotent
-                from ..operators.embedding_index import (
-                    append_to_embedding_index, write_embedding_index)
-                eb_action, eb_kept = eb_index_action
-                eb_keyed = eb_kept.withColumn(
-                    "_ek", F.struct("conv_id", "turn_idx"))
-                if eb_action == "create":
-                    # the index needs >= 1 non-null vector to pin its dim; a
-                    # bootstrap slice without any stays index-less and the
-                    # next run bootstraps again
-                    if not eb_keyed.filter(
-                            F.col(embedding_col).isNotNull()).isEmpty():
-                        write_embedding_index(
-                            eb_keyed, "_ek", embedding_col,
-                            embedding_index_path,
-                            threshold=float(embedding_dedup_threshold),
-                            n_planes=int(embedding_n_planes))
-                else:
-                    append_to_embedding_index(
-                        eb_keyed, "_ek", embedding_col, embedding_index_path)
-            # Processed replacement rows for changed re-exports: the
-            # changed keys' CURRENT content run through the same content
-            # gates (decontamination, toxicity, near-dedup probes, the pure
-            # sampling rule) and the same scrub as the main path, written to
-            # ``_changed_upsert`` with an ``_action`` column so the caller's
-            # documented MERGE (Iceberg in the nominal deployment) has
-            # pipeline-PROCESSED rows to apply -- without this the only
-            # route to the new content would bypass the gates entirely, or
-            # the content would be lost while the reindexed signature
-            # actively blocks its re-ingestion.  Actions:
-            #   ``upsert``  replace the matched output row, or insert (a
-            #               grown conversation's new turns);
-            #   ``update``  replace IF MATCHED, never insert -- emitted
-            #               instead of ``upsert`` whenever a rank-based
-            #               sampling gate (exact-n stratified / token-budget
-            #               mix) is active, because membership in a rank
-            #               gate is a property of the original run's full
-            #               population and cannot be re-derived per key:
-            #               inserting an unmatched key could exceed the
-            #               original sample.  The pure fraction gate IS
-            #               re-derived (same hash rule, same seed), so
-            #               fraction-excluded replacement keys are dropped
-            #               from the sidecar outright (``n_sampled_out``);
-            #   ``delete``  the NEW content fails a drop gate (contaminated,
-            #               toxic, or a near-duplicate of a DIFFERENT
-            #               surviving committed key -- the replacement
-            #               probes), or the key belongs to a conversation
-            #               retroactively poisoned this run: remove the
-            #               stale output row.  Retro-delete rows carry only
-            #               the key columns (content fields NULL).
-            # Written BEFORE the reindex commits: a crash in between makes
-            # the re-run redetect the same keys and append byte-identical
-            # rows (the MERGE source should dedupe by key), never lose them.
-            retro_deletes = None
-            # n_contam > 0 gates the whole branch: with zero poisoned
-            # conversations the semi-join below is empty by construction,
-            # and building it anyway would make retro_deletes a non-None
-            # empty frame on EVERY converged steady-state run -- paying a
-            # committed-key scan per run and appending a zero-row
-            # _changed_upsert parquet (whose first write can be a
-            # _SUCCESS-only directory that breaks the caller's documented
-            # MERGE-source schema inference) plus a spurious all-zero
-            # lineage row
-            if (reindex_changed and decontam_scope == "conversation"
-                    and dc_drops is not None and n_contam > 0):
-                # Retroactive contamination: a conversation poisoned THIS
-                # run (by a new or changed turn) may have clean turns in the
-                # output from earlier slices; an uninterrupted run over the
-                # same content would have dropped the whole conversation.
-                # Enumerate the poisoned conversations' committed keys from
-                # a turn-keyed index and emit deletes for them.  (A group-
-                # granularity index alone cannot enumerate turn keys --
-                # documented gap.  Keys the index holds but the output never
-                # wrote -- decontam/toxicity-dropped at their own ingest --
-                # produce deletes that match nothing; harmless.)
-                ck_src = None
-                if (nd_gate_on and near_dedup_scope == "turn"
-                        and _try_read_first(
-                            spark, f"{near_dedup_index_path}/meta") is not None):
-                    from ..operators.minhash_index import _committed_doc_ids
-                    ck_src = _committed_doc_ids(spark, near_dedup_index_path)
-                elif eb_gate_on and _try_read_first(
-                        spark, f"{embedding_index_path}/meta") is not None:
-                    from ..operators.embedding_index import _committed_ids
-                    ck_src = _committed_ids(spark, embedding_index_path)
-                if ck_src is not None:
-                    dcv_r = dc_drops.withColumnRenamed("conv_id", "_dc_conv")
-                    retro_deletes = (
-                        ck_src.select(
-                            F.col("doc_id.conv_id").alias("conv_id"),
-                            F.col("doc_id.turn_idx").alias("turn_idx"))
-                        .join(F.broadcast(dcv_r),
-                              F.col("conv_id").eqNullSafe(F.col("_dc_conv")),
-                              "left_semi"))
-            if (nd_changed_rows is not None or eb_changed_rows is not None
-                    or retro_deletes is not None):
-                from pyspark.sql.window import Window as _W
+        m_in, m_out = _obs(in_obs), _obs(out_obs)
+        # before the guard can raise: a run that trips it is exactly
+        # the run whose gate counts an operator needs to see
+        for g in gates:
+            write_rows(
+                spark, [(g.name, int(m_in.get(g.name) or 0), *g.params)],
+                f"{output_path}/{g.sidecar}", "append",
+                schema="stage string, n_dropped long, " + g.ddl)
+        guard_row = _assert_retention(
+            "scrub", int(m_in.get("rows_in") or 0),
+            int(m_out.get("rows_out") or 0),
+            int(m_out.get("lines_in") or 0),
+            int(m_out.get("lines_out") or 0), min_line_ratio)
+        write_rows(spark, [guard_row], f"{output_path}/_lineage_guards",
+                   "append")
+        if nd_index_action is not None:
+            # Index content = dedup-kept turns, BEFORE the toxicity/resume
+            # gates: the index answers "what has this corpus already seen",
+            # so a toxic turn dropped from the OUTPUT still anchors dedup of
+            # its future near-copies (which the toxicity gate would drop
+            # anyway -- near-copies of toxic text score toxic).
+            # index maintenance runs LAST, only after the write + guards
+            # succeeded: a crash anywhere above leaves the index in its
+            # pre-slice state, so a resumed run recomputes the same drops
+            # against the same index (idempotent restart).  Cost: one extra
+            # signature pass over the kept slice rows.
+            from ..operators.minhash_index import (
+                append_grouped_to_minhash_index, append_to_minhash_index,
+                write_grouped_minhash_index, write_minhash_index)
+            action, kept = nd_index_action
+            conv_scope = near_dedup_scope == "conversation"
+            if conv_scope:
+                kept_keyed, key_col = kept, "conv_id"
+            else:
+                kept_keyed = kept.withColumn(
+                    "_nk", F.struct("conv_id", "turn_idx"))
+                key_col = "_nk"
+            if action == "create":
+                # gate on the KEPT set, not rows written this call: a
+                # bootstrap that crashed mid-create and RESUMED writes zero
+                # new output rows (resume_filter removed them) but must
+                # still create the index, or the whole bootstrap corpus
+                # silently never enters it and later slices dedup against
+                # nothing
+                if not kept_keyed.isEmpty():  # empty input: no index
+                    create = (write_grouped_minhash_index if conv_scope
+                              else write_minhash_index)
+                    create(kept_keyed, key_col, "text",
+                           near_dedup_index_path,
+                           threshold=float(near_dedup_threshold))
+            else:
+                # idempotent by construction: the append fns anti-join each
+                # store's already-committed keys, so a completed-slice
+                # re-run appends nothing and a half-crashed append
+                # completes exactly-once
+                append = (append_grouped_to_minhash_index if conv_scope
+                          else append_to_minhash_index)
+                append(kept_keyed, key_col, "text", near_dedup_index_path)
+        if eb_index_action is not None:
+            # same last-step commit protocol as the MinHash index: a
+            # crash anywhere above leaves the embedding index in its
+            # pre-slice state, and the append functions are idempotent
+            from ..operators.embedding_index import (
+                append_to_embedding_index, write_embedding_index)
+            eb_action, eb_kept = eb_index_action
+            eb_keyed = eb_kept.withColumn(
+                "_ek", F.struct("conv_id", "turn_idx"))
+            if eb_action == "create":
+                # the index needs >= 1 non-null vector to pin its dim; a
+                # bootstrap slice without any stays index-less and the
+                # next run bootstraps again
+                if not eb_keyed.filter(
+                        F.col(embedding_col).isNotNull()).isEmpty():
+                    write_embedding_index(
+                        eb_keyed, "_ek", embedding_col,
+                        embedding_index_path,
+                        threshold=float(embedding_dedup_threshold),
+                        n_planes=int(embedding_n_planes))
+            else:
+                append_to_embedding_index(
+                    eb_keyed, "_ek", embedding_col, embedding_index_path)
+        # Processed replacement rows for changed re-exports: the
+        # changed keys' CURRENT content run through the same content
+        # gates (decontamination, toxicity, near-dedup probes, the pure
+        # sampling rule) and the same scrub as the main path, written to
+        # ``_changed_upsert`` with an ``_action`` column so the caller's
+        # documented MERGE (Iceberg in the nominal deployment) has
+        # pipeline-PROCESSED rows to apply -- without this the only
+        # route to the new content would bypass the gates entirely, or
+        # the content would be lost while the reindexed signature
+        # actively blocks its re-ingestion.  Actions:
+        #   ``upsert``  replace the matched output row, or insert (a
+        #               grown conversation's new turns);
+        #   ``update``  replace IF MATCHED, never insert -- emitted
+        #               instead of ``upsert`` whenever a rank-based
+        #               sampling gate (exact-n stratified / token-budget
+        #               mix) is active, because membership in a rank
+        #               gate is a property of the original run's full
+        #               population and cannot be re-derived per key:
+        #               inserting an unmatched key could exceed the
+        #               original sample.  The pure fraction gate IS
+        #               re-derived (same hash rule, same seed), so
+        #               fraction-excluded replacement keys are dropped
+        #               from the sidecar outright (``n_sampled_out``);
+        #   ``delete``  the NEW content fails a drop gate (contaminated,
+        #               toxic, or a near-duplicate of a DIFFERENT
+        #               surviving committed key -- the replacement
+        #               probes), or the key belongs to a conversation
+        #               retroactively poisoned this run: remove the
+        #               stale output row.  Retro-delete rows carry only
+        #               the key columns (content fields NULL).
+        # Written BEFORE the reindex commits: a crash in between makes
+        # the re-run redetect the same keys and append byte-identical
+        # rows (the MERGE source should dedupe by key), never lose them.
+        retro_deletes = None
+        # n_contam > 0 gates the whole branch: with zero poisoned
+        # conversations the semi-join below is empty by construction,
+        # and building it anyway would make retro_deletes a non-None
+        # empty frame on EVERY converged steady-state run -- paying a
+        # committed-key scan per run and appending a zero-row
+        # _changed_upsert parquet (whose first write can be a
+        # _SUCCESS-only directory that breaks the caller's documented
+        # MERGE-source schema inference) plus a spurious all-zero
+        # lineage row
+        if (reindex_changed and decontam_scope == "conversation"
+                and dc_drops is not None and n_contam > 0):
+            # Retroactive contamination: a conversation poisoned THIS
+            # run (by a new or changed turn) may have clean turns in the
+            # output from earlier slices; an uninterrupted run over the
+            # same content would have dropped the whole conversation.
+            # Enumerate the poisoned conversations' committed keys from
+            # a turn-keyed index and emit deletes for them.  (A group-
+            # granularity index alone cannot enumerate turn keys --
+            # documented gap.  Keys the index holds but the output never
+            # wrote -- decontam/toxicity-dropped at their own ingest --
+            # produce deletes that match nothing; harmless.)
+            ck_src = None
+            if (nd_gate_on and near_dedup_scope == "turn"
+                    and _try_read_first(
+                        spark, f"{near_dedup_index_path}/meta") is not None):
+                from ..operators.minhash_index import _committed_doc_ids
+                ck_src = _committed_doc_ids(spark, near_dedup_index_path)
+            elif eb_gate_on and _try_read_first(
+                    spark, f"{embedding_index_path}/meta") is not None:
+                from ..operators.embedding_index import _committed_ids
+                ck_src = _committed_ids(spark, embedding_index_path)
+            if ck_src is not None:
+                dcv_r = dc_drops.withColumnRenamed("conv_id", "_dc_conv")
+                retro_deletes = (
+                    ck_src.select(
+                        F.col("doc_id.conv_id").alias("conv_id"),
+                        F.col("doc_id.turn_idx").alias("turn_idx"))
+                    .join(F.broadcast(dcv_r),
+                          F.col("conv_id").eqNullSafe(F.col("_dc_conv")),
+                          "left_semi"))
+        if (nd_changed_rows is not None or eb_changed_rows is not None
+                or retro_deletes is not None):
+            from pyspark.sql.window import Window as _W
 
-                from ..operators.minhash_index import incremental_drop_keys
-                rank_gated = (sample_n_per_stratum is not None
-                              or sample_token_shares is not None)
-                srcs = []
-                if nd_changed_rows is not None:
-                    srcs.append(nd_changed_rows.drop("_nk"))
-                if eb_changed_rows is not None:
-                    srcs.append(eb_changed_rows.drop("_ek"))
-                up = None
-                if srcs:
-                    up = srcs[0]
-                    for s in srcs[1:]:
-                        # the sets can overlap (a doubly-committed key whose
-                        # text AND embedding changed); the collapse below
-                        # dedupes the identical rows
-                        up = up.unionByName(s, allowMissingColumns=True)
-                    # duplicate keys (reachable with dedup=False) collapse
-                    # to the min-text row: asc_nulls_last matches the
-                    # null-IGNORING F.min(text) winner the doc index's
-                    # _unique_doc_rows applies, so the upsert row carries
-                    # the text the reindexed signature describes.  (The
-                    # grouped reindex unions ALL duplicate rows' shingles --
-                    # strictly more conservative than any single kept row;
-                    # the embedding index collapses by min VECTOR.  Both
-                    # divergences are reachable only with dedup=False AND
-                    # conflicting duplicate content for one key.)
-                    up = (up.withColumn(
-                              "_rn", F.row_number().over(
-                                  _W.partitionBy("conv_id", "turn_idx")
-                                    .orderBy(F.col("text").asc_nulls_last())))
-                          .filter(F.col("_rn") == 1).drop("_rn"))
-                up_cached = None
-                if up is not None:
-                    # Persist + materialize NOW, at the ROOT frame every
-                    # consumer below derives from (the sampling count, the
-                    # gates -- the grouped probe alone instantiates it ~8x
-                    # -- and the scrub input): its lineage carries the
-                    # changed-detection joins over epoch-resolved index
-                    # reads, and without the cache each consumer replays
-                    # that whole subtree (observed: a toy-fixture
-                    # conversation-scope run went from minutes to seconds).
-                    # CacheManager substitutes subtrees matching the cached
-                    # ANALYZED plan, so every derived frame must be built
-                    # on top of THIS object, not re-derived from its
-                    # ingredients.  The eager count serializes the
-                    # materialization so the gate jobs race against a
-                    # built cache, not each other.
-                    up_cached = up
-                    up_cached.persist()
-                    up_cached.count()
-                n_sampled_out = 0
-                if up is not None and sample_fraction is not None:
-                    from ..operators.sampling import sample_keep_condition
-                    cond = sample_keep_condition(
-                        sp_keys, float(sample_fraction), int(sample_seed))
-                    n_sampled_out = up.filter(~cond).count()
-                    if n_sampled_out:
-                        up = up.filter(cond)
-                out_up = None
-                if up is not None:
-                    up_keyed = up.withColumn(
-                        "_ck", F.struct("conv_id", "turn_idx"))
-                    del_srcs = []  # one-column ``_ck`` frames to delete
-                    if dc_flagger is not None:
-                        if decontam_scope == "conversation":
-                            # the main gate's poisoned-conversation set
-                            # already includes convs flagged by changed rows
-                            # (the flag source unions them) -- reuse it, one
-                            # rule, no second flagger pass
-                            dcv = dc_drops.withColumnRenamed(
-                                "conv_id", "_dc_conv")
-                            del_srcs.append(
-                                up_keyed.join(
-                                    F.broadcast(dcv),
-                                    up_keyed["conv_id"].eqNullSafe(
-                                        F.col("_dc_conv")),
-                                    "left_semi").select("_ck"))
-                        else:
-                            del_srcs.append(dc_flagger(up_keyed))
-                    if drop_toxic_above is not None:
-                        from ..operators.toxicity import toxicity_score_col
-                        # evaluated PRE-scrub like the main gate (the post-
-                        # scrub frame's columns belong to scrub_transform; a
-                        # grouped transform has no ``text`` column)
+            from ..operators.minhash_index import incremental_drop_keys
+            rank_gated = (sample_n_per_stratum is not None
+                          or sample_token_shares is not None)
+            srcs = []
+            if nd_changed_rows is not None:
+                srcs.append(nd_changed_rows.drop("_nk"))
+            if eb_changed_rows is not None:
+                srcs.append(eb_changed_rows.drop("_ek"))
+            up = None
+            if srcs:
+                up = srcs[0]
+                for s in srcs[1:]:
+                    # the sets can overlap (a doubly-committed key whose
+                    # text AND embedding changed); the collapse below
+                    # dedupes the identical rows
+                    up = up.unionByName(s, allowMissingColumns=True)
+                # duplicate keys (reachable with dedup=False) collapse
+                # to the min-text row: asc_nulls_last matches the
+                # null-IGNORING F.min(text) winner the doc index's
+                # _unique_doc_rows applies, so the upsert row carries
+                # the text the reindexed signature describes.  (The
+                # grouped reindex unions ALL duplicate rows' shingles --
+                # strictly more conservative than any single kept row;
+                # the embedding index collapses by min VECTOR.  Both
+                # divergences are reachable only with dedup=False AND
+                # conflicting duplicate content for one key.)
+                up = (up.withColumn(
+                          "_rn", F.row_number().over(
+                              _W.partitionBy("conv_id", "turn_idx")
+                                .orderBy(F.col("text").asc_nulls_last())))
+                      .filter(F.col("_rn") == 1).drop("_rn"))
+            up_cached = None
+            if up is not None:
+                # Persist + materialize NOW, at the ROOT frame every
+                # consumer below derives from (the sampling count, the
+                # gates -- the grouped probe alone instantiates it ~8x
+                # -- and the scrub input): its lineage carries the
+                # changed-detection joins over epoch-resolved index
+                # reads, and without the cache each consumer replays
+                # that whole subtree (observed: a toy-fixture
+                # conversation-scope run went from minutes to seconds).
+                # CacheManager substitutes subtrees matching the cached
+                # ANALYZED plan, so every derived frame must be built
+                # on top of THIS object, not re-derived from its
+                # ingredients.  The eager count serializes the
+                # materialization so the gate jobs race against a
+                # built cache, not each other.
+                up_cached = up
+                up_cached.persist()
+                up_cached.count()
+            n_sampled_out = 0
+            if up is not None and sample_fraction is not None:
+                from ..operators.sampling import sample_keep_condition
+                cond = sample_keep_condition(
+                    sp_keys, float(sample_fraction), int(sample_seed))
+                n_sampled_out = up.filter(~cond).count()
+                if n_sampled_out:
+                    up = up.filter(cond)
+            out_up = None
+            if up is not None:
+                up_keyed = up.withColumn(
+                    "_ck", F.struct("conv_id", "turn_idx"))
+                del_srcs = []  # one-column ``_ck`` frames to delete
+                if dc_flagger is not None:
+                    if decontam_scope == "conversation":
+                        # the main gate's poisoned-conversation set
+                        # already includes convs flagged by changed rows
+                        # (the flag source unions them) -- reuse it, one
+                        # rule, no second flagger pass
+                        dcv = dc_drops.withColumnRenamed(
+                            "conv_id", "_dc_conv")
                         del_srcs.append(
-                            up_keyed.filter(
-                                toxicity_score_col(F.col("text"))
-                                > float(drop_toxic_above)).select("_ck"))
-                    if gq_rules is not None:
-                        # same rules as the main gopher-quality gate,
-                        # evaluated pre-scrub like the other row gates
-                        from ..operators.doc_quality import (
-                            gopher_quality_keep_condition)
-                        del_srcs.append(
-                            up_keyed.filter(
-                                ~gopher_quality_keep_condition(
-                                    F.col("text"), gq_rules))
-                            .select("_ck"))
-                    if rep_thresholds is not None:
-                        # same thresholds as the main repetition gate
-                        from ..operators.repetition import (
-                            repetition_keep_condition, repetition_stats,
-                            threshold_gram_sizes)
-                        u_tn, u_dn = threshold_gram_sizes(rep_thresholds)
-                        u_stats = repetition_stats(
-                            up_keyed, "text", ["_ck"],
-                            top_ns=u_tn, dup_ns=u_dn)
-                        del_srcs.append(
-                            u_stats.filter(~repetition_keep_condition(
-                                u_stats, rep_thresholds))
-                            .select("_ck"))
-                    if qc_model is not None:
-                        # same model, same threshold, evaluated pre-scrub
-                        # like the main quality gate
-                        from ..operators.quality_classifier import (
-                            score_quality_classifier)
-                        del_srcs.append(
-                            score_quality_classifier(
-                                up_keyed, qc_model, ["_ck"],
-                                output_col="_qscore")
-                            .filter(F.col("_qscore")
-                                    < float(quality_min_score))
-                            .select("_ck"))
-                    if lm_model is not None:
-                        # same LM, same cutoff; NULL (token-less) passes
-                        from ..operators.lm_perplexity import (
-                            score_perplexity)
-                        del_srcs.append(
-                            score_perplexity(
-                                up_keyed, lm_model, ["_ck"],
-                                output_col="_ppl")
-                            .filter(F.col("_ppl")
-                                    > float(perplexity_max))
-                            .select("_ck"))
-                    # replacement content re-checked against the near-dedup
-                    # gates: the incremental operators exclude committed
-                    # keys, so without these probes a re-export rewritten
-                    # into a near-copy of a DIFFERENT committed doc (or
-                    # conversation) would sail in as its replacement
-                    if (nd_gate_on and _try_read_first(
-                            spark, f"{near_dedup_index_path}/meta")
-                            is not None):
-                        if near_dedup_scope == "turn":
-                            from ..operators.minhash_index import (
-                                probe_index_near_duplicates)
-                            del_srcs.append(
-                                incremental_drop_keys(
-                                    probe_index_near_duplicates(
-                                        up_keyed, "_ck", "text",
-                                        near_dedup_index_path))
-                                .withColumnRenamed("doc_id", "_ck"))
-                        else:
-                            # conversation scope: a dropped gid deletes ALL
-                            # of the conversation's replacement rows
-                            # (eqNullSafe: a NULL conv_id group must not
-                            # slip the drop, same as the decontam drop).
-                            # Probe ONLY conversations whose TEXT changed
-                            # (gids present in nd_changed_rows, the full-
-                            # member changed set): with the embedding gate
-                            # on, up_keyed can also carry embedding-changed-
-                            # only turn rows -- a PARTIAL member set whose
-                            # partial content the grouped probe would treat
-                            # as the conversation's full current text,
-                            # skewing the probe jaccard and the own-history
-                            # carve-out (r6 ADVICE).  An embedding-only
-                            # change leaves the text signature valid, so
-                            # those conversations need no text probe.
-                            from ..operators.minhash_index import (
-                                probe_grouped_index_near_duplicates)
-                            gprobe_in = up_keyed
-                            if eb_changed_rows is not None:
-                                if nd_changed_rows is None:
-                                    gprobe_in = None
-                                else:
-                                    nd_gids = (nd_changed_rows
-                                               .select(F.col("conv_id")
-                                                       .alias("_nd_conv"))
-                                               .distinct())
-                                    gprobe_in = up_keyed.join(
-                                        F.broadcast(nd_gids),
-                                        up_keyed["conv_id"].eqNullSafe(
-                                            F.col("_nd_conv")),
-                                        "left_semi")
-                            if gprobe_in is not None:
-                                gdrop = incremental_drop_keys(
-                                    probe_grouped_index_near_duplicates(
-                                        gprobe_in, "conv_id", "text",
-                                        near_dedup_index_path)
-                                ).withColumnRenamed("doc_id", "_gdrop")
-                                del_srcs.append(
-                                    up_keyed.join(
-                                        F.broadcast(gdrop),
-                                        up_keyed["conv_id"].eqNullSafe(
-                                            F.col("_gdrop")),
-                                        "left_semi").select("_ck"))
-                    if eb_gate_on and _try_read_first(
-                            spark, f"{embedding_index_path}/meta") is not None:
-                        from ..operators.embedding_index import (
-                            probe_embedding_index_near_duplicates)
+                            up_keyed.join(
+                                F.broadcast(dcv),
+                                up_keyed["conv_id"].eqNullSafe(
+                                    F.col("_dc_conv")),
+                                "left_semi").select("_ck"))
+                    else:
+                        del_srcs.append(dc_flagger(up_keyed))
+                if gates:
+                    # the main path's row gates, same order and same
+                    # predicates, evaluated pre-scrub (the post-scrub
+                    # frame's columns belong to scrub_transform; a
+                    # grouped transform has no ``text`` column)
+                    del_srcs.append(
+                        _prepared(up_keyed, gates)
+                        .filter(_gate_index(gates) != 0).select("_ck"))
+                # replacement content re-checked against the near-dedup
+                # gates: the incremental operators exclude committed
+                # keys, so without these probes a re-export rewritten
+                # into a near-copy of a DIFFERENT committed doc (or
+                # conversation) would sail in as its replacement
+                if (nd_gate_on and _try_read_first(
+                        spark, f"{near_dedup_index_path}/meta")
+                        is not None):
+                    if near_dedup_scope == "turn":
+                        from ..operators.minhash_index import (
+                            probe_index_near_duplicates)
                         del_srcs.append(
                             incremental_drop_keys(
-                                probe_embedding_index_near_duplicates(
-                                    up_keyed, "_ck", embedding_col,
-                                    embedding_index_path))
+                                probe_index_near_duplicates(
+                                    up_keyed, "_ck", "text",
+                                    near_dedup_index_path))
                             .withColumnRenamed("doc_id", "_ck"))
-                    out_up = scrub_transform(up, **scrub_kwargs).withColumn(
-                        "_ck", F.struct("conv_id", "turn_idx"))
-                    if del_srcs:
-                        dset = del_srcs[0]
-                        for s in del_srcs[1:]:
-                            dset = dset.union(s)
-                        dset = (dset.distinct()
-                                .withColumn("_del", F.lit(True)))
-                        out_up = out_up.join(F.broadcast(dset), "_ck", "left")
                     else:
-                        out_up = out_up.withColumn(
-                            "_del", F.lit(None).cast("boolean"))
-                    out_up = (out_up.withColumn(
-                                  "_action",
-                                  F.when(F.coalesce(F.col("_del"), F.lit(False)),
-                                         F.lit("delete"))
-                                   .otherwise(F.lit("update" if rank_gated
-                                                    else "upsert")))
-                              .drop("_ck", "_del"))
-                if retro_deletes is not None:
-                    retro_rows = retro_deletes.withColumn(
-                        "_action", F.lit("delete"))
-                    if out_up is not None:
-                        # keys already in the changed set keep their computed
-                        # action; retro deletes cover only the REST of the
-                        # poisoned conversations' committed keys
-                        have = out_up.select(
-                            F.struct("conv_id", "turn_idx").alias("_k"))
-                        retro_rows = (retro_rows.withColumn(
-                                          "_k",
-                                          F.struct("conv_id", "turn_idx"))
-                                      .join(have, "_k", "left_anti")
-                                      .drop("_k"))
-                        out_up = out_up.unionByName(
-                            retro_rows, allowMissingColumns=True)
-                    else:
-                        out_up = retro_rows
-                out_up.persist()
-                try:
-                    uc = out_up.agg(*[
-                        F.coalesce(F.sum((F.col("_action") == a).cast("long")),
-                                   F.lit(0)).alias(f"n_{a}")
-                        for a in ("upsert", "update", "delete")]).first()
-                    out_up.write.mode("append").parquet(
-                        f"{output_path}/_changed_upsert")
-                    # additive schema (n_update / n_sampled_out joined the
-                    # row): read the sidecar with mergeSchema=true, like
-                    # every lineage sidecar here
-                    write_rows(
-                        spark,
-                        [{"stage": "changed_upsert",
-                          "n_upsert": int(uc["n_upsert"]),
-                          "n_update": int(uc["n_update"]),
-                          "n_delete": int(uc["n_delete"]),
-                          "n_sampled_out": int(n_sampled_out)}],
-                        f"{output_path}/_lineage_upsert", "append",
-                        schema="stage string, n_upsert long, n_update long, "
-                               "n_delete long, n_sampled_out long")
-                finally:
-                    out_up.unpersist()
-                    if up_cached is not None:
-                        up_cached.unpersist()
-            # reindex_changed runs LAST, after the appends (disjoint key
-            # sets; changed_rows is persisted, so the reindex sees exactly
-            # the rows the gate counted).  Delete-action replacements are
-            # reindexed TOO: skipping them would leave the stale signature,
-            # and every later run would re-detect the key as changed and
-            # commit a fresh epoch forever (non-convergent).  The resulting
-            # ghost entries (index content for rows the output deleted) are
-            # exactly what the replacement probes' predecessor-shadow
-            # carve-out accounts for.  Each reindex commits one fresh
-            # epoch (meta_eN marker last -- a crash BEFORE the marker leaves
-            # the old epoch live and the next run redetects the same changed
-            # keys); a completed re-run finds zero changed keys and adds no
-            # epoch.  A crash in the window between the marker commit and
-            # the _lineage_reindex append loses only the ADVISORY lineage
-            # row: the index itself is correct and the append-only meta_eN
-            # markers at the index path remain the authoritative record of
-            # every committed reindex.
-            def _reindex_sidecar(stage, n_keys, epoch):
+                        # conversation scope: a dropped gid deletes ALL
+                        # of the conversation's replacement rows
+                        # (eqNullSafe: a NULL conv_id group must not
+                        # slip the drop, same as the decontam drop).
+                        # Probe ONLY conversations whose TEXT changed
+                        # (gids present in nd_changed_rows, the full-
+                        # member changed set): with the embedding gate
+                        # on, up_keyed can also carry embedding-changed-
+                        # only turn rows -- a PARTIAL member set whose
+                        # partial content the grouped probe would treat
+                        # as the conversation's full current text,
+                        # skewing the probe jaccard and the own-history
+                        # carve-out (r6 ADVICE).  An embedding-only
+                        # change leaves the text signature valid, so
+                        # those conversations need no text probe.
+                        from ..operators.minhash_index import (
+                            probe_grouped_index_near_duplicates)
+                        gprobe_in = up_keyed
+                        if eb_changed_rows is not None:
+                            if nd_changed_rows is None:
+                                gprobe_in = None
+                            else:
+                                nd_gids = (nd_changed_rows
+                                           .select(F.col("conv_id")
+                                                   .alias("_nd_conv"))
+                                           .distinct())
+                                gprobe_in = up_keyed.join(
+                                    F.broadcast(nd_gids),
+                                    up_keyed["conv_id"].eqNullSafe(
+                                        F.col("_nd_conv")),
+                                    "left_semi")
+                        if gprobe_in is not None:
+                            gdrop = incremental_drop_keys(
+                                probe_grouped_index_near_duplicates(
+                                    gprobe_in, "conv_id", "text",
+                                    near_dedup_index_path)
+                            ).withColumnRenamed("doc_id", "_gdrop")
+                            del_srcs.append(
+                                up_keyed.join(
+                                    F.broadcast(gdrop),
+                                    up_keyed["conv_id"].eqNullSafe(
+                                        F.col("_gdrop")),
+                                    "left_semi").select("_ck"))
+                if eb_gate_on and _try_read_first(
+                        spark, f"{embedding_index_path}/meta") is not None:
+                    from ..operators.embedding_index import (
+                        probe_embedding_index_near_duplicates)
+                    del_srcs.append(
+                        incremental_drop_keys(
+                            probe_embedding_index_near_duplicates(
+                                up_keyed, "_ck", embedding_col,
+                                embedding_index_path))
+                        .withColumnRenamed("doc_id", "_ck"))
+                out_up = scrub_transform(up, **scrub_kwargs).withColumn(
+                    "_ck", F.struct("conv_id", "turn_idx"))
+                if del_srcs:
+                    dset = del_srcs[0]
+                    for s in del_srcs[1:]:
+                        dset = dset.union(s)
+                    dset = (dset.distinct()
+                            .withColumn("_del", F.lit(True)))
+                    out_up = out_up.join(F.broadcast(dset), "_ck", "left")
+                else:
+                    out_up = out_up.withColumn(
+                        "_del", F.lit(None).cast("boolean"))
+                out_up = (out_up.withColumn(
+                              "_action",
+                              F.when(F.coalesce(F.col("_del"), F.lit(False)),
+                                     F.lit("delete"))
+                               .otherwise(F.lit("update" if rank_gated
+                                                else "upsert")))
+                          .drop("_ck", "_del"))
+            if retro_deletes is not None:
+                retro_rows = retro_deletes.withColumn(
+                    "_action", F.lit("delete"))
+                if out_up is not None:
+                    # keys already in the changed set keep their computed
+                    # action; retro deletes cover only the REST of the
+                    # poisoned conversations' committed keys
+                    have = out_up.select(
+                        F.struct("conv_id", "turn_idx").alias("_k"))
+                    retro_rows = (retro_rows.withColumn(
+                                      "_k",
+                                      F.struct("conv_id", "turn_idx"))
+                                  .join(have, "_k", "left_anti")
+                                  .drop("_k"))
+                    out_up = out_up.unionByName(
+                        retro_rows, allowMissingColumns=True)
+                else:
+                    out_up = retro_rows
+            out_up.persist()
+            try:
+                uc = out_up.agg(*[
+                    F.coalesce(F.sum((F.col("_action") == a).cast("long")),
+                               F.lit(0)).alias(f"n_{a}")
+                    for a in ("upsert", "update", "delete")]).first()
+                out_up.write.mode("append").parquet(
+                    f"{output_path}/_changed_upsert")
+                # additive schema (n_update / n_sampled_out joined the
+                # row): read the sidecar with mergeSchema=true, like
+                # every lineage sidecar here
                 write_rows(
                     spark,
-                    [{"stage": stage, "n_keys": n_keys, "epoch": int(epoch)}],
-                    f"{output_path}/_lineage_reindex", "append",
-                    schema="stage string, n_keys long, epoch long")
-            if nd_changed_rows is not None:
-                from ..operators.minhash_index import (
-                    reindex_docs, reindex_groups)
-                # Every turn contributes >=1 shingle row to the exploded
-                # grouped store -- sub-shingle_k texts are padded
-                # (``_batch_shingles``: "always >=1 per row") -- so a
-                # changed conversation ALWAYS gains epoch-N rows here and
-                # the per-gid max-epoch window resolves to them; an
-                # all-short re-export cannot strand a key on its stale
-                # epoch-0 state.
-                if near_dedup_scope == "conversation":
-                    ri_meta = reindex_groups(
-                        nd_changed_rows, "conv_id", "text",
-                        near_dedup_index_path)
-                    ri_keys = (nd_changed_rows.select("conv_id")
-                               .distinct().count())
-                else:
-                    ri_meta = reindex_docs(
-                        nd_changed_rows, "_nk", "text", near_dedup_index_path)
-                    ri_keys = nd_changed_rows.select("_nk").distinct().count()
-                _reindex_sidecar("near_dedup_reindex", ri_keys,
-                                 ri_meta["epoch"])
-            if eb_changed_rows is not None:
-                from ..operators.embedding_index import reindex_embeddings
-                ri_meta = reindex_embeddings(
-                    eb_changed_rows, "_ek", embedding_col,
-                    embedding_index_path)
-                ri_keys = eb_changed_rows.select("_ek").distinct().count()
-                _reindex_sidecar("embedding_reindex", ri_keys,
-                                 ri_meta["epoch"])
-        finally:
-            # the cached drop sets must not outlive the run even when the
-            # write or a downstream guard raises (long-lived sessions)
-            if nd_drops is not None:
-                nd_drops.unpersist()
-            if eb_drops is not None:
-                eb_drops.unpersist()
-            if dc_drops is not None:
-                dc_drops.unpersist()
-            if rep_drops is not None:
-                rep_drops.unpersist()
-            if nd_changed_rows is not None:
-                nd_changed_rows.unpersist()
-            if eb_changed_rows is not None:
-                eb_changed_rows.unpersist()
+                    [{"stage": "changed_upsert",
+                      "n_upsert": int(uc["n_upsert"]),
+                      "n_update": int(uc["n_update"]),
+                      "n_delete": int(uc["n_delete"]),
+                      "n_sampled_out": int(n_sampled_out)}],
+                    f"{output_path}/_lineage_upsert", "append",
+                    schema="stage string, n_upsert long, n_update long, "
+                           "n_delete long, n_sampled_out long")
+            finally:
+                out_up.unpersist()
+                if up_cached is not None:
+                    up_cached.unpersist()
+        # reindex_changed runs LAST, after the appends (disjoint key
+        # sets; changed_rows is persisted, so the reindex sees exactly
+        # the rows the gate counted).  Delete-action replacements are
+        # reindexed TOO: skipping them would leave the stale signature,
+        # and every later run would re-detect the key as changed and
+        # commit a fresh epoch forever (non-convergent).  The resulting
+        # ghost entries (index content for rows the output deleted) are
+        # exactly what the replacement probes' predecessor-shadow
+        # carve-out accounts for.  Each reindex commits one fresh
+        # epoch (meta_eN marker last -- a crash BEFORE the marker leaves
+        # the old epoch live and the next run redetects the same changed
+        # keys); a completed re-run finds zero changed keys and adds no
+        # epoch.  A crash in the window between the marker commit and
+        # the _lineage_reindex append loses only the ADVISORY lineage
+        # row: the index itself is correct and the append-only meta_eN
+        # markers at the index path remain the authoritative record of
+        # every committed reindex.
+        def _reindex_sidecar(stage, n_keys, epoch):
+            write_rows(
+                spark,
+                [{"stage": stage, "n_keys": n_keys, "epoch": int(epoch)}],
+                f"{output_path}/_lineage_reindex", "append",
+                schema="stage string, n_keys long, epoch long")
+        if nd_changed_rows is not None:
+            from ..operators.minhash_index import (
+                reindex_docs, reindex_groups)
+            # Every turn contributes >=1 shingle row to the exploded
+            # grouped store -- sub-shingle_k texts are padded
+            # (``_batch_shingles``: "always >=1 per row") -- so a
+            # changed conversation ALWAYS gains epoch-N rows here and
+            # the per-gid max-epoch window resolves to them; an
+            # all-short re-export cannot strand a key on its stale
+            # epoch-0 state.
+            if near_dedup_scope == "conversation":
+                ri_meta = reindex_groups(
+                    nd_changed_rows, "conv_id", "text",
+                    near_dedup_index_path)
+                ri_keys = (nd_changed_rows.select("conv_id")
+                           .distinct().count())
+            else:
+                ri_meta = reindex_docs(
+                    nd_changed_rows, "_nk", "text", near_dedup_index_path)
+                ri_keys = nd_changed_rows.select("_nk").distinct().count()
+            _reindex_sidecar("near_dedup_reindex", ri_keys,
+                             ri_meta["epoch"])
+        if eb_changed_rows is not None:
+            from ..operators.embedding_index import reindex_embeddings
+            ri_meta = reindex_embeddings(
+                eb_changed_rows, "_ek", embedding_col,
+                embedding_index_path)
+            ri_keys = eb_changed_rows.select("_ek").distinct().count()
+            _reindex_sidecar("embedding_reindex", ri_keys,
+                             ri_meta["epoch"])
         wall = time.time() - t0
         stats = {"rows": n, "wall_sec": round(wall, 3),
                  "rows_per_sec": round(n / wall, 1) if wall > 0 else None,
@@ -2124,9 +2031,8 @@ def run_pipeline(
             stats["token_mix_budget"] = tm_row["budget_tokens"]
         return stats
     finally:
-        for _f in (nd_drops, eb_drops, dc_drops, rep_drops, q_drops,
-                   p_drops, nd_changed_rows, eb_changed_rows,
-                   up_cached):
+        for _f in (nd_drops, eb_drops, dc_drops, nd_changed_rows,
+                   eb_changed_rows, up_cached):
             if _f is not None:
                 _f.unpersist()
 

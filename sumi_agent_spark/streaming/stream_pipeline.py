@@ -171,15 +171,14 @@ def repetition_stream(
     """Drop stream rows breaching any Gopher repetition threshold
     (operators/repetition.py semantics, online).
 
-    The metrics are per-row functions of the text, but the batch
-    operator computes them as explode + groupBy aggregations -- a
-    STATEFUL shape under Structured Streaming -- so the stream gate
-    recomputes them row-locally inside an Arrow-batched predicate
-    (``repetition.make_repetition_keep_udf``: the same exact-integer
-    counters, the same single division, the same HALF_UP rounding --
-    drop decisions are pinned identical to the batch gate by the parity
-    tests).  No state store, no watermark, immediate emission.
-    ``thresholds`` as in ``run_pipeline`` (None = the Gopher catalog)."""
+    The metrics are per-row functions of the text, and the batch
+    operator computes them in one row-local Arrow kernel, so the stream
+    gate is the batch gate's own keep Column
+    (``repetition.make_repetition_keep_udf`` over
+    ``repetition_keep_col``): drop decisions are identical by
+    construction, pinned by the parity test.  No state store, no
+    watermark, immediate emission.  ``thresholds`` as in
+    ``run_pipeline`` (None = the Gopher catalog)."""
     from ..operators.repetition import make_repetition_keep_udf
 
     keep = make_repetition_keep_udf(thresholds)
@@ -194,11 +193,10 @@ def gopher_quality_stream(
     """Drop stream rows breaching any Gopher quality rule
     (operators/doc_quality.py semantics, online).
 
-    Unlike the repetition battery, these metrics are ALREADY row-local
-    Catalyst expressions in the batch operator, so the stream gate is
-    the identical filter -- no UDF, no state store, no watermark; batch
-    parity is by construction (one shared keep-condition), not by a
-    Python replica.  ``rules`` as in ``run_pipeline`` (None = the full
+    Like the repetition gate, the stream gate is the batch operator's
+    own keep condition -- here pure row-local Catalyst expressions: no
+    UDF, no state store, no watermark; batch parity is by construction
+    (one shared keep-condition), not by a Python replica.  ``rules`` as in ``run_pipeline`` (None = the full
     Gopher catalog)."""
     from ..operators.doc_quality import gopher_quality_keep_condition
 
