@@ -381,6 +381,24 @@ def _py_repetition_metrics(
     return out
 
 
+def _keep_gram_sizes(
+    thresholds: dict[str, float],
+) -> tuple[tuple[int, ...], tuple[int, ...]]:
+    """:func:`threshold_gram_sizes`, rejecting gram sizes below 2 and
+    metric names outside the battery."""
+    top_ns, dup_ns = threshold_gram_sizes(thresholds)
+    for g in (*top_ns, *dup_ns):
+        if g < 2:
+            raise ValueError(f"n-gram sizes must be >= 2, got {g}")
+    names = metric_names(top_ns, dup_ns)
+    unknown = [k for k in thresholds if k not in names]
+    if unknown:
+        raise ValueError(
+            f"unknown repetition metrics: {unknown} (not in the stats "
+            f"frame; computed: {names})")
+    return top_ns, dup_ns
+
+
 def repetition_keep_col(text: Column,
                         thresholds: dict[str, float] | None = None,
                         ) -> Column:
@@ -391,21 +409,12 @@ def repetition_keep_col(text: Column,
     gram sizes the thresholds need) read as a struct -- no stats frame,
     no key join, so the input needs no unique key.  One UDF call per
     row: Spark extracts semantically equal Python UDF calls of one
-    operator once.  ``run_pipeline``'s repetition gate and the streaming
-    twin (:func:`make_repetition_keep_udf`) both build on it."""
+    operator once.  ``run_pipeline``'s repetition gate,
+    :func:`repetition_filter` and the streaming twin
+    (:func:`make_repetition_keep_udf`) all build on it."""
     if thresholds is None:
         thresholds = GOPHER_THRESHOLDS
-    top_ns, dup_ns = threshold_gram_sizes(thresholds)
-    for g in (*top_ns, *dup_ns):
-        if g < 2:
-            raise ValueError(f"n-gram sizes must be >= 2, got {g}")
-    names = metric_names(top_ns, dup_ns)
-    missing = [k for k in thresholds if k not in names]
-    if missing:
-        raise ValueError(
-            f"thresholds reference metrics not in the stats frame: "
-            f"{missing}; computed: {names}")
-    r = make_repetition_stats_udf(top_ns, dup_ns)(text)
+    r = make_repetition_stats_udf(*_keep_gram_sizes(thresholds))(text)
     cond = F.lit(True)
     for k, v in sorted(thresholds.items()):
         cond = cond & (r[k] <= F.lit(float(v)))
@@ -413,21 +422,12 @@ def repetition_keep_col(text: Column,
 
 
 def make_repetition_keep_udf(thresholds: dict[str, float] | None = None):
-    """``text Column -> keep Column`` for the streaming path.  Every
-    metric is row-local, so the stream gate is the batch gate itself
-    (:func:`repetition_keep_col` over the same Arrow kernel): stateless,
-    no state store, drop decisions identical by construction.  Rejects
-    metric names outside the battery up front."""
-    if thresholds is None:
-        thresholds = GOPHER_THRESHOLDS
-    thr = {k: float(v) for k, v in sorted(thresholds.items())}
-    known = ({"dup_line_frac", "dup_line_char_frac",
-              "dup_para_frac", "dup_para_char_frac"}
-             | {f"top{n}_char_frac" for n in range(2, 100)}
-             | {f"dup{n}_char_frac" for n in range(2, 100)})
-    unknown = [k for k in thr if k not in known]
-    if unknown:
-        raise ValueError(f"unknown repetition metrics: {unknown}")
+    """``text Column -> keep Column`` for the streaming path: the batch
+    gate itself (:func:`repetition_keep_col`), so the stream is stateless
+    and its drop decisions equal the batch's by construction.  Unknown
+    metric names raise here, before any Column is built."""
+    thr = dict(GOPHER_THRESHOLDS if thresholds is None else thresholds)
+    _keep_gram_sizes(thr)
     return lambda text: repetition_keep_col(text, thr)
 
 
@@ -455,14 +455,11 @@ def repetition_filter(
 ) -> DataFrame:
     """Drop documents breaching any repetition threshold (Gopher rule).
     Returns ``df``'s rows (original columns) whose metrics all pass;
-    computes only the metrics the thresholds need."""
-    if id_cols is None:
-        id_cols = ["doc_id"]
-    if thresholds is None:
-        thresholds = GOPHER_THRESHOLDS
-    top_ns, dup_ns = threshold_gram_sizes(thresholds)
-    stats = repetition_stats(df, text_col, id_cols,
-                             top_ns=top_ns, dup_ns=dup_ns)
-    keep = stats.filter(repetition_keep_condition(stats, thresholds)) \
-        .select(*id_cols)
-    return df.join(keep, id_cols, "left_semi")
+    computes only the metrics the thresholds need.  Row-local
+    (:func:`repetition_keep_col` over a fan-out-repaired scan, like
+    :func:`repetition_stats`), so the rows need no unique key;
+    ``id_cols`` is accepted for compatibility and ignored."""
+    from ..parallel import fan_out
+
+    return fan_out(df).filter(repetition_keep_col(F.col(text_col),
+                                                  thresholds))

@@ -787,10 +787,11 @@ def _scored(score, model, out_col):
 def _row_gates(spark, drop_toxic_above, gq_rules, rep_thresholds,
                quality_model_path, quality_min_score,
                perplexity_model_path, perplexity_max) -> list[RowGate]:
-    """The configured row gates, cheapest first: toxicity and Gopher
-    quality are JVM expressions, repetition one Arrow kernel pass,
-    the classifier and the LM an explode + broadcast join each.  A row
-    is charged to the first gate it fails."""
+    """The configured row gates in charging order: a row is charged to
+    the first gate it fails.  Every gate is evaluated on every row --
+    the repetition kernel is one Arrow pass over all rows, and the
+    classifier and LM ``prepare`` joins score all rows before the
+    range exchange -- so the order decides attribution, not cost."""
     text = F.col("text")
     gates = []
     if drop_toxic_above is not None:
@@ -1048,7 +1049,9 @@ def run_pipeline(
     scores are attached by a keyed token aggregate, so they require
     unique ``(conv_id, turn_idx)`` keys (run ``dedup=True`` first on
     dirty input).  All five gates run pre-scrub, on the range-ordered
-    frame: one projection computes each row's first failing gate, the
+    frame, and each is evaluated on every row (a model gate also scores
+    rows an earlier gate drops): one projection computes each row's
+    first failing gate, the
     write pass itself counts rows in and each gate's drops (one
     Observation, no extra job), and the survivors are scrubbed.  Each
     gate's sidecar row ``(stage, n_dropped, <params>)`` is appended
