@@ -408,7 +408,9 @@ _PAIR_BROADCAST_MAX = 5_000_000
 
 def _size_prefiltered_pairs(pairs: DataFrame, sizes: DataFrame,
                             threshold: float) -> DataFrame:
-    """Prune candidate pairs with the LOSSLESS set-size bound before any
+    """Runs one Spark job (``pairs.count()``) while building the plan.
+
+    Prunes candidate pairs with the LOSSLESS set-size bound before any
     shingle array moves: ``J(A,B) <= min(|A|,|B|)/max(|A|,|B|)``, so a
     pair whose shingle counts are more than ``threshold`` apart can never
     verify and dies on two narrow ints instead of an array intersection
@@ -416,7 +418,16 @@ def _size_prefiltered_pairs(pairs: DataFrame, sizes: DataFrame,
     construction).  ``pairs`` must be materialized (``localCheckpoint``)
     -- the row count is then a cheap cached-block action that decides
     whether the pair set rides the joins as a broadcast
-    (:data:`_PAIR_BROADCAST_MAX`).  ``sizes`` is ``(doc_id, _n)``."""
+    (:data:`_PAIR_BROADCAST_MAX`).  ``sizes`` is ``(doc_id, _n)``.
+
+    The count and the hint are not left to AQE.  On the executed plans
+    of the ``minhash_near_dup``, ``conv_near_dup`` and
+    ``incremental_near_dup`` contract queries (sf0.01) and the gated
+    slice's conversation near-dedup, run with and without them, every
+    join stays a broadcast join, but without the hint Spark builds on
+    the OTHER side: the per-doc sizes and the wide shingle frames.
+    Past Spark's broadcast threshold those frames would be shuffled
+    instead (not run)."""
     n_pairs = pairs.count()
     small = n_pairs <= _PAIR_BROADCAST_MAX
     if small:
@@ -431,6 +442,67 @@ def _size_prefiltered_pairs(pairs: DataFrame, sizes: DataFrame,
                    & (F.col("_na").cast("double") >= t * F.col("_nb")))
            .drop("_na", "_nb"))
     return F.broadcast(out) if small else out
+
+
+def _canonical_candidate_pairs(
+    a: DataFrame, b: DataFrame, id_col: str, join_cols,
+) -> DataFrame:
+    """Bucket-join two candidate row sets and emit canonically ordered
+    pairs: ``id_a < id_b`` with the ``is_new`` flags carried through the
+    same swap, self-pairs removed, multi-bucket duplicate collisions
+    collapsed.  Every incremental/probe operator (doc, grouped,
+    embedding) shares this exact canonicalization -- the keep-first /
+    corpus-wins drop policy in ``minhash_index.incremental_drop_keys``
+    reads the
+    orientation, so it must never diverge between them."""
+    a, b = a.alias("a"), b.alias("b")
+    a_lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    return (a.join(b, join_cols)
+            .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
+            .select(
+                F.when(a_lt, F.col(f"a.{id_col}"))
+                 .otherwise(F.col(f"b.{id_col}")).alias("id_a"),
+                F.when(a_lt, F.col(f"b.{id_col}"))
+                 .otherwise(F.col(f"a.{id_col}")).alias("id_b"),
+                F.when(a_lt, F.col("a.is_new")).otherwise(F.col("b.is_new"))
+                 .alias("new_a"),
+                F.when(a_lt, F.col("b.is_new")).otherwise(F.col("a.is_new"))
+                 .alias("new_b"))
+            .distinct())
+
+
+def _filter_predecessor_shadow(
+    verified: DataFrame, probe_old: DataFrame, old_col: str,
+    val_a: str, val_b: str, sim_fn, threshold: float, score_col: str,
+) -> DataFrame:
+    """Predecessor-shadow carve-out shared by the doc and embedding
+    probes: a MIXED verified pair is void when the corpus side's stored
+    value near-duplicates the probe key's OWN stored (old) value --
+    matching one's predecessor's shadow is never duplication.
+    Uncommitted probes (NULL old value, from the left join against
+    ``probe_old`` keyed ``_pid``) are never carved; probe-probe pairs
+    are never carved.  ``sim_fn(corpus_val, old_val)`` supplies the
+    similarity (array Jaccard / cosine); the surviving rows project the
+    standard ``(id_a, id_b, <score_col>, new_a, new_b)`` shape."""
+    mixed = F.col("new_a") != F.col("new_b")
+    v = (verified
+         .withColumn("_pid", F.when(F.col("new_a"), F.col("id_a"))
+                              .otherwise(F.col("id_b")))
+         .withColumn("_cval", F.when(F.col("new_a"), F.col(val_b))
+                               .otherwise(F.col(val_a)))
+         .join(probe_old, "_pid", "left"))
+    # coalesce: sim_fn can yield NULL (cosine of a zero-norm stored old
+    # vector is 0/0), and filter(~NULL) would silently drop the verified
+    # pair -- a NULL similarity must never void a real duplicate (r6
+    # ADVICE)
+    shadow = F.coalesce(
+        mixed & F.col(old_col).isNotNull()
+        & (sim_fn(F.col("_cval"), F.col(old_col)) >= threshold),
+        F.lit(False))
+    return (v.filter(~shadow)
+            .select("id_a", "id_b",
+                    F.round(score_col, 6).alias(score_col),
+                    "new_a", "new_b"))
 
 
 def resolve_bands(threshold: float, n_hashes: int,

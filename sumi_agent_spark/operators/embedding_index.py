@@ -4,7 +4,7 @@ The embedding analog of ``operators/minhash_index.py``: dedup today's
 ingest slice's embeddings against the already-ingested corpus without
 recomputing corpus buckets.
 
-Layout at ``index_path`` (same crash protocol as the MinHash index):
+Layout at ``index_path`` (commit protocol: ``index_store.py``):
 
 * ``vectors/`` -- ``(doc_id, v)`` rows, the exact-verify input; written
   FIRST;
@@ -42,38 +42,45 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import write_rows
+from . import index_store
 from .dedup import (
     EMB_MAX_BUCKET_SIZE,
+    _canonical_candidate_pairs,
+    _filter_predecessor_shadow,
     _observe_capping,
     bucket_cap_stats,
     cosine_cols,
     make_hyperplane_bucket_udf,
 )
-# epoch machinery shared with the MinHash index: same marker-commit
-# discipline (append-only meta_eN directories, base meta deleted first on
-# re-create, per-key latest-epoch resolution), one implementation
-from .minhash_index import (
-    _assert_marker_visible,
-    _delete_stale_epoch_markers,
-    _epoch_path,
-    _live_epoch,
-    _canonical_candidate_pairs,
-    _filter_predecessor_shadow,
-    _read_epoched,
-    _resolve_latest,
-    _resolve_latest_bucket_restricted,
+from .index_store import (
+    Store,
+    read_epoched,
+    read_latest,
+    resolve_latest_bucket_restricted,
 )
+
+_GEOMETRY = ("n_planes", "dim", "threshold", "model_rev")
+# explicit schema: model_rev is usually None and inference cannot type an
+# all-None field
+_META_DDL = "n_planes long, dim long, threshold double, model_rev string"
 
 
 def _read_meta(spark: SparkSession, index_path: str) -> dict:
-    row = spark.read.parquet(f"{index_path}/meta").first()
-    meta = {k: row[k] for k in ("n_planes", "dim", "threshold")}
-    # embedding-model revision pin (absent on pre-pin indexes = None)
-    meta["model_rev"] = row.asDict().get("model_rev")
-    meta["epoch"] = _live_epoch(
-        spark, index_path, int(row.asDict().get("epoch", 0) or 0))
-    return meta
+    """Geometry of the committed index at ``index_path`` plus its live
+    ``epoch``; ``model_rev`` is None on pre-pin indexes."""
+    row = index_store.read_meta(spark, index_path)
+    if row is None:
+        raise ValueError(f"no committed embedding index at {index_path}")
+    return {k: row.get(k) for k in (*_GEOMETRY, "epoch")}
+
+
+def _stores(meta: dict) -> list[Store]:
+    """Vectors first, hyperplane bucket rows (the certifying store)
+    last."""
+    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
+    return [Store("vectors"),
+            Store("buckets", lambda b: b.select("doc_id",
+                                                bucket("v").alias("bkt")))]
 
 
 def _check_model_rev(meta: dict, model_rev) -> None:
@@ -104,8 +111,7 @@ def _committed_ids(spark: SparkSession, index_path: str,
     each epoch, so bucket membership certifies commitment)."""
     if live is None:
         live = _read_meta(spark, index_path)["epoch"]
-    return (_read_epoched(spark, index_path, "buckets", live, ["doc_id"])
-            .select("doc_id").distinct())
+    return index_store.committed_keys(spark, index_path, "buckets", live)
 
 
 def _clean_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -172,11 +178,8 @@ def changed_preindexed_ids(
     meta = _read_meta(spark, index_path)
     pre = base.join(_committed_ids(spark, index_path, meta["epoch"]),
                     "doc_id", "left_semi")
-    stored = (_resolve_latest(
-                  _read_epoched(spark, index_path, "vectors",
-                                meta["epoch"], ["doc_id", "v"])
-                  .join(pre.select("doc_id"), "doc_id", "left_semi"),
-                  "doc_id", meta["epoch"])
+    stored = (read_latest(spark, index_path, "vectors", meta["epoch"],
+                          ["doc_id", "v"], pre.select("doc_id"))
               .withColumnRenamed("v", "v_old"))
     # the change probe is EXACT array equality, so the ELEMENT types must
     # match: an upstream float->double drift would make the implicit cast
@@ -217,8 +220,6 @@ def write_embedding_index(
     (e.g. ``"bge-m3@2026-03"``) pins the embedding model revision the
     vectors came from; appends stating a different revision are refused
     (:func:`_check_model_rev`)."""
-    spark = df.sparkSession
-    _delete_stale_epoch_markers(spark, index_path)
     # localCheckpoint: the dedup groupBy feeds the dim probe and both
     # store writes -- three actions that would each recompute it
     base = _unique_vec_rows(_clean_base(df, id_col, vec_col)) \
@@ -232,19 +233,10 @@ def write_embedding_index(
         raise ValueError(
             f"corpus has mixed embedding dims {lo}..{hi}; an index "
             f"requires one embedding space")
-    dim = int(lo)
-    bucket = make_hyperplane_bucket_udf(n_planes, dim)
-    base.write.mode("overwrite").parquet(f"{index_path}/vectors")
-    (base.select("doc_id", bucket("v").alias("bkt"))
-     .write.mode("overwrite").parquet(f"{index_path}/buckets"))
-    meta = {"n_planes": n_planes, "dim": dim, "threshold": float(threshold),
-            "model_rev": model_rev}
-    # explicit schema: model_rev is usually None and inference cannot
-    # type an all-None field
-    write_rows(spark, [meta], f"{index_path}/meta", "overwrite",
-               schema="n_planes long, dim long, threshold double, "
-                      "model_rev string")
-    return meta
+    meta = {"n_planes": n_planes, "dim": int(lo),
+            "threshold": float(threshold), "model_rev": model_rev}
+    return index_store.write(df.sparkSession, index_path, base,
+                             _stores(meta), meta, schema=_META_DDL)
 
 
 def append_to_embedding_index(
@@ -264,23 +256,10 @@ def append_to_embedding_index(
     revision (:func:`_check_model_rev`)."""
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path)
-    live = meta["epoch"]
     _check_model_rev(meta, model_rev)
     base = _unique_vec_rows(_clean_base(new_df, id_col, vec_col))
     _check_dim(base, meta)
-    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
-    # membership spans ALL live epochs (a key can exist only in a reindex
-    # epoch); new keys append into the BASE stores -- per-key max-epoch
-    # resolution at read time makes that correct regardless of live epoch
-    vec_existing = (_read_epoched(spark, index_path, "vectors", live,
-                                  ["doc_id"])
-                    .select("doc_id").distinct())
-    (base.join(vec_existing, "doc_id", "left_anti")
-     .write.mode("append").parquet(f"{index_path}/vectors"))
-    bkt_existing = _committed_ids(spark, index_path, live)
-    (base.join(bkt_existing, "doc_id", "left_anti")
-     .select("doc_id", bucket("v").alias("bkt"))
-     .write.mode("append").parquet(f"{index_path}/buckets"))
+    index_store.append(spark, index_path, base, _stores(meta), meta["epoch"])
 
 
 def embedding_near_duplicates_incremental(
@@ -352,11 +331,8 @@ def embedding_near_duplicates_incremental(
              .withColumn("is_new", F.lit(True)))
     # epoch resolution BEFORE the capping window: a reindexed key's stale
     # epoch-0 bucket row must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see minhash_index._resolve_latest)
-    old_b = (_resolve_latest(
-                 _read_epoched(spark, index_path, "buckets", live,
-                               ["doc_id", "bkt"]),
-                 "doc_id", live)
+    # candidates (free at epoch 0 -- see index_store.resolve_latest)
+    old_b = (read_latest(spark, index_path, "buckets", live, ["doc_id", "bkt"])
              .withColumn("is_new", F.lit(False)))
     # the capping window shuffles bucket rows on bkt -- the SAME
     # partitioning the candidate self-join needs, so the exchange is
@@ -394,11 +370,8 @@ def embedding_near_duplicates_incremental(
             .distinct())
     # candidate-restrict FIRST, then resolve epochs: the per-key window
     # runs over candidate rows only, never the O(corpus) vector store
-    old_v = (_resolve_latest(
-                 _read_epoched(spark, index_path, "vectors", live,
-                               ["doc_id", "v"])
-                 .join(cand, "doc_id", "left_semi"),
-                 "doc_id", live)
+    old_v = (read_latest(spark, index_path, "vectors", live, ["doc_id", "v"],
+                         cand)
              .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_v = old_v.unionByName(base.join(cand, "doc_id", "left_semi"))
     va = all_v.select(F.col("doc_id").alias("id_a"), F.col("v").alias("v_a"))
@@ -469,9 +442,9 @@ def probe_embedding_index_near_duplicates(
                    .distinct())
     else:
         touched = probe_b.select("bkt").distinct()
-    old_b = (_resolve_latest_bucket_restricted(
-                 _read_epoched(spark, index_path, "buckets", live,
-                               ["doc_id", "bkt"]),
+    old_b = (resolve_latest_bucket_restricted(
+                 read_epoched(spark, index_path, "buckets", live,
+                              ["doc_id", "bkt"]),
                  "doc_id", live, touched, ["bkt"])
              .join(base.select("doc_id"), "doc_id", "left_anti")
              .withColumn("is_new", F.lit(False)))
@@ -490,11 +463,8 @@ def probe_embedding_index_near_duplicates(
     cand = (pairs.select(F.col("id_a").alias("doc_id"))
             .union(pairs.select(F.col("id_b").alias("doc_id")))
             .distinct())
-    old_v = (_resolve_latest(
-                 _read_epoched(spark, index_path, "vectors", live,
-                               ["doc_id", "v"])
-                 .join(cand, "doc_id", "left_semi"),
-                 "doc_id", live)
+    old_v = (read_latest(spark, index_path, "vectors", live, ["doc_id", "v"],
+                         cand)
              .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_v = (old_v.unionByName(base.join(cand, "doc_id", "left_semi"))
              .localCheckpoint())
@@ -504,14 +474,11 @@ def probe_embedding_index_near_duplicates(
                 .withColumn("cos", cosine_cols(F.col("v_a"), F.col("v_b")))
                 .filter(F.col("cos") >= threshold))
     # predecessor-shadow carve-out, shared with the MinHash probes
-    # (minhash_index._filter_predecessor_shadow): a corpus vector
+    # (dedup._filter_predecessor_shadow): a corpus vector
     # matching only the probe key's own stored history never voids the
     # replacement; uncommitted probes (NULL old vector) are never carved
-    probe_old_v = (_resolve_latest(
-                       _read_epoched(spark, index_path, "vectors", live,
-                                     ["doc_id", "v"])
-                       .join(base.select("doc_id"), "doc_id", "left_semi"),
-                       "doc_id", live)
+    probe_old_v = (read_latest(spark, index_path, "vectors", live,
+                               ["doc_id", "v"], base.select("doc_id"))
                    .select(F.col("doc_id").alias("_pid"),
                            F.col("v").alias("v_old")))
     return _filter_predecessor_shadow(
@@ -534,10 +501,7 @@ def embedding_index_bucket_audit(
     base = base.join(_committed_ids(spark, index_path, live), "doc_id",
                      "left_anti")
     new_b = base.select("doc_id", bucket("v").alias("bkt"))
-    old_b = _resolve_latest(
-        _read_epoched(spark, index_path, "buckets", live,
-                      ["doc_id", "bkt"]),
-        "doc_id", live)
+    old_b = read_latest(spark, index_path, "buckets", live, ["doc_id", "bkt"])
     sizes = (old_b.unionByName(new_b)
              .groupBy("bkt").agg(F.count("*").alias("n")))
     return bucket_cap_stats(sizes, max_bucket_size)
@@ -556,11 +520,10 @@ def reindex_embeddings(
     stale vector keeps anchoring near-dedup while the new content
     escapes it (``changed_preindexed_ids`` / the pipeline's
     ``n_preindexed_changed`` counter surface the case).  ``changed_df``
-    carries the changed keys' CURRENT vectors; they are rewritten to
-    ``vectors_e{N+1}`` then ``buckets_e{N+1}`` (overwrite mode -- a
-    crashed attempt's orphan dirs are replaced) and the epoch commits
-    LAST via the append-only ``meta_e{N+1}`` marker, exactly the MinHash
-    discipline.  ``model_rev`` is checked against the pin: a MODEL
+    carries the changed keys' CURRENT vectors; they are committed as
+    epoch N+1 (:func:`index_store.write`: ``vectors_e{N+1}``, then
+    ``buckets_e{N+1}``, then the ``meta_e{N+1}`` marker).
+    ``model_rev`` is checked against the pin: a MODEL
     revision change invalidates every committed vector, not just the
     changed keys -- rebuild the index instead (the check raises).
     Readers resolve per-key latest epoch (free at epoch 0).
@@ -568,24 +531,11 @@ def reindex_embeddings(
     spark = changed_df.sparkSession
     meta = _read_meta(spark, index_path)
     _check_model_rev(meta, model_rev)
-    new_epoch = meta["epoch"] + 1
     base = _unique_vec_rows(_clean_base(changed_df, id_col, vec_col))
     _check_dim(base, meta)
-    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
-    base.write.mode("overwrite").parquet(
-        _epoch_path(index_path, "vectors", new_epoch))
-    (base.select("doc_id", bucket("v").alias("bkt"))
-     .write.mode("overwrite")
-     .parquet(_epoch_path(index_path, "buckets", new_epoch)))
-    meta_new = {"n_planes": int(meta["n_planes"]), "dim": int(meta["dim"]),
-                "threshold": float(meta["threshold"]),
-                "model_rev": meta.get("model_rev"), "epoch": new_epoch}
-    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
-               "overwrite",
-               schema="n_planes long, dim long, threshold double, "
-                      "model_rev string, epoch long")
-    _assert_marker_visible(spark, index_path, new_epoch)
-    return meta_new
+    geometry = {k: meta[k] for k in _GEOMETRY}
+    return index_store.write(spark, index_path, base, _stores(geometry),
+                             geometry, meta["epoch"] + 1, _META_DDL)
 
 
 def compact_embedding_index(spark: SparkSession, src_path: str,
@@ -594,23 +544,7 @@ def compact_embedding_index(spark: SparkSession, src_path: str,
     epoch) as a fresh epoch-0 index at ``dst_path`` -- the embedding
     analog of ``minhash_index.compact_doc_index`` (copy-shaped, vectors
     first / buckets last / meta last, must target a NEW path)."""
-    if dst_path.rstrip("/") == src_path.rstrip("/"):
-        raise ValueError(
-            "compaction writes a NEW index; dst_path must differ from "
-            "src_path (in-place parquet swap is not atomic)")
-    _delete_stale_epoch_markers(spark, dst_path)
     meta = _read_meta(spark, src_path)
-    live = meta["epoch"]
-    (_resolve_latest(_read_epoched(spark, src_path, "vectors", live,
-                                   ["doc_id", "v"]), "doc_id", live)
-     .write.mode("overwrite").parquet(f"{dst_path}/vectors"))
-    (_resolve_latest(_read_epoched(spark, src_path, "buckets", live,
-                                   ["doc_id", "bkt"]), "doc_id", live)
-     .write.mode("overwrite").parquet(f"{dst_path}/buckets"))
-    meta_new = {"n_planes": int(meta["n_planes"]), "dim": int(meta["dim"]),
-                "threshold": float(meta["threshold"]),
-                "model_rev": meta.get("model_rev")}
-    write_rows(spark, [meta_new], f"{dst_path}/meta", "overwrite",
-               schema="n_planes long, dim long, threshold double, "
-                      "model_rev string")
-    return meta_new
+    geometry = {k: meta[k] for k in _GEOMETRY}
+    return index_store.compact(spark, src_path, dst_path, _stores(geometry),
+                               meta["epoch"], geometry, _META_DDL)

@@ -25,7 +25,7 @@ trade CCNet ships (it dedups on the first 8 BYTES of SHA-1; md5's 128
 bits are 8 orders safer).  The dedup decision therefore matches the
 batch operator except with probability <1e-14.
 
-Protocol (same as the MinHash index): ``write_line_index`` bootstraps
+Protocol (``index_store.py``): ``write_line_index`` bootstraps
 from the initial corpus; per slice, run :func:`line_dedup_incremental`,
 PERSIST ITS OUTPUT, then :func:`append_line_index` with the same slice
 -- appending first would make the slice's own units look committed and
@@ -47,19 +47,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import write_rows
+from . import index_store
 from .doc_quality import dup_unit_winners, rebuild_units, unit_frame
-from .minhash_index import _marker_committed
+from .index_store import Store
 
-_GEOMETRY = ("unit", "normalize", "min_chars")
+_META_DDL = "unit string, normalize boolean, min_chars int"
 
 
 def _meta_row(spark: SparkSession, index_path: str) -> dict:
-    if not _marker_committed(spark, f"{index_path}/meta"):
+    meta = index_store.read_meta(spark, index_path)
+    if meta is None:
         raise ValueError(
             f"no committed line index at {index_path} (meta marker "
             "missing) -- bootstrap with write_line_index first")
-    return spark.read.parquet(f"{index_path}/meta").first().asDict()
+    return meta
 
 
 def _slice_keys(lines: DataFrame) -> DataFrame:
@@ -85,30 +86,22 @@ def write_line_index(
     pinned in meta; re-bootstrap over a committed index requires
     ``overwrite=True``.  Returns ``{"n_keys": ...}``."""
     spark = df.sparkSession
-    if _marker_committed(spark, f"{index_path}/meta"):
-        if not overwrite:
-            raise ValueError(
-                f"line index already committed at {index_path}; pass "
-                "overwrite=True to rebuild (appends use "
-                "append_line_index)")
-        # delete the OLD commit marker BEFORE touching keys/ (the
-        # sibling indexes' discipline): a crash anywhere inside this
-        # rebuild then leaves the index LOUDLY unreadable (_meta_row
-        # raises, rebuild re-runs) -- never old-geometry meta over
-        # new/partial keys, which would hash slice keys under the
-        # wrong geometry and silently re-emit committed duplicates
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta")
-        p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+    if index_store.committed(spark, f"{index_path}/meta") and not overwrite:
+        raise ValueError(
+            f"line index already committed at {index_path}; pass "
+            "overwrite=True to rebuild (appends use append_line_index)")
+    # the store's create clears the OLD meta before _slice_keys runs: a
+    # crash anywhere inside this rebuild then leaves the index LOUDLY
+    # unreadable (_meta_row raises, the rebuild re-runs) -- never
+    # old-geometry meta over new/partial keys, which would hash slice
+    # keys under the wrong geometry and silently re-emit committed
+    # duplicates
     lines, _ = unit_frame(df, text_col, id_cols, min_chars, unit,
                           normalize)
-    keys = _slice_keys(lines)
-    keys.write.mode("overwrite").parquet(f"{index_path}/keys")
-    n = spark.read.parquet(f"{index_path}/keys").count()
-    write_rows(spark, [(unit, bool(normalize), int(min_chars))],
-               f"{index_path}/meta", "overwrite",
-               schema="unit string, normalize boolean, min_chars int")
-    return {"n_keys": int(n)}
+    index_store.write(spark, index_path, lines, [Store("keys", _slice_keys)],
+                      {"unit": unit, "normalize": bool(normalize),
+                       "min_chars": int(min_chars)}, schema=_META_DDL)
+    return {"n_keys": int(spark.read.parquet(f"{index_path}/keys").count())}
 
 
 def line_dedup_incremental(
@@ -165,14 +158,12 @@ def append_line_index(
     meta = _meta_row(spark, index_path)
     lines, _ = unit_frame(df, text_col, id_cols, meta["min_chars"],
                           meta["unit"], meta["normalize"])
-    keys = _slice_keys(lines)
-    store = spark.read.parquet(f"{index_path}/keys")
-    # eager localCheckpoint, not persist: the append writes to the very
-    # path the anti-join reads, so the new-keys frame must be fully
-    # materialized with its lineage TRUNCATED before the write starts
-    # (a cache-evicted persist would rescan keys/ mid-append)
-    new = keys.join(store, "h", "left_anti").localCheckpoint(eager=True)
-    n = new.count()
+    # lazy localCheckpoint: the count and the append share one pass over
+    # the slice (appends never materialize the store side -- see
+    # index_store)
+    keys = _slice_keys(lines).localCheckpoint(eager=False)
+    n = keys.join(index_store.committed_keys(spark, index_path, "keys", 0,
+                                             "h"), "h", "left_anti").count()
     if n:
-        new.write.mode("append").parquet(f"{index_path}/keys")
+        index_store.append(spark, index_path, keys, [Store("keys")], 0, "h")
     return {"n_new_keys": int(n)}

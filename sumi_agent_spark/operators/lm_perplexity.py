@@ -50,12 +50,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .index_store import commit_model
 from .quality_classifier import token_col
 
 DEFAULT_ALPHA = 1.0
 DEFAULT_MIN_COUNT = 2
 
-_META_COLS = ["alpha", "min_count", "n_tokens", "vocab_size", "unk_lp"]
+_META_DDL = ("alpha double, min_count long, n_tokens long, vocab_size long, "
+             "unk_lp double")
 
 
 def fit_unigram_lm(
@@ -138,20 +140,14 @@ def score_perplexity(
 def write_unigram_lm(spark: SparkSession, model: dict,
                      path: str) -> None:
     """Persist the model: ``weights/`` parquet + one-row ``meta/``,
-    weights first, meta LAST as the commit marker -- ONE shared
-    implementation with the classifier
-    (:func:`quality_classifier._write_committed_model`: marker-based
-    existence, torn-marker recovery, transient errors propagate)."""
-    from .quality_classifier import _write_committed_model
-    meta = model["meta"]
-    _write_committed_model(spark, model["weights"],
-                           tuple(meta[c] for c in _META_COLS),
-                           _META_COLS, path, "language model")
+    weights first, meta LAST as the commit marker -- the same commit as
+    the classifier (:func:`index_store.commit_model`)."""
+    commit_model(spark, path, model["weights"], model["meta"], _META_DDL,
+                 "language model")
 
 
 def read_unigram_lm(spark: SparkSession, path: str) -> dict:
-    row = spark.read.parquet(f"{path}/meta").first()
-    meta = {c: row[c] for c in _META_COLS}
+    meta = spark.read.parquet(f"{path}/meta").first().asDict()
     meta["min_count"] = int(meta["min_count"])
     meta["n_tokens"] = int(meta["n_tokens"])
     meta["vocab_size"] = int(meta["vocab_size"])

@@ -44,9 +44,12 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import write_rows
+from . import index_store
 from .dedup import (
     _banded,
+    _canonical_candidate_pairs,
+    _filter_predecessor_shadow,
+    _group_signatures,
     _observe_capping,
     bucket_cap_stats,
     make_minhash_udf,
@@ -54,126 +57,46 @@ from .dedup import (
     make_sig_shingle_udf,
     resolve_bands,
 )
+from .index_store import Store, read_latest
+from .index_store import read_epoched as _read_epoched
+from .index_store import (
+    resolve_latest_bucket_restricted as _resolve_latest_bucket_restricted)
+# store helpers callers import from this module under their old names
+from .index_store import clear as _delete_stale_epoch_markers  # noqa: F401
+from .index_store import resolve_latest as _resolve_latest  # noqa: F401
 
-
-def _marker_committed(spark: SparkSession, path: str) -> bool:
-    """True iff the parquet directory at ``path`` was fully committed
-    (its ``_SUCCESS`` marker exists).  Uses the Hadoop FileSystem API so
-    the check works on whatever store ``index_path`` lives on.
-
-    DEPLOYMENT REQUIREMENT: epoch commits are defined by ``_SUCCESS``,
-    so index paths must keep
-    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=true`` (the
-    default).  A deployment that disables success markers (some
-    object-store committer setups) would make every committed reindex
-    epoch resolve as absent -- readers would silently serve stale
-    epoch-0 signatures, the exact failure the epoch machinery exists to
-    prevent.  :func:`_assert_marker_visible` turns that misconfiguration
-    into a loud error at reindex time; falling back to
-    directory-existence here is NOT an option (a half-written marker
-    directory would then count as committed, reopening the crash
-    window)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _assert_marker_visible(spark: SparkSession, index_path: str,
-                           epoch: int) -> None:
-    """Post-commit guard run by every reindex: the marker it just wrote
-    must be visible through :func:`_marker_committed`, or the deployment
-    has success markers disabled and every epoch would silently resolve
-    as absent (readers serving stale signatures forever).  One FS check,
-    turning a configuration hazard into an immediate loud error."""
-    if not _marker_committed(spark, f"{index_path}/meta_e{epoch}"):
-        raise RuntimeError(
-            f"epoch marker {index_path}/meta_e{epoch} was written but its "
-            f"_SUCCESS file is not visible -- this store/committer has "
-            f"success markers disabled "
-            f"(mapreduce.fileoutputcommitter.marksuccessfuljobs=false?), "
-            f"which would make every reindex epoch invisible to readers; "
-            f"re-enable success markers for index paths")
-
-
-def _live_epoch(spark: SparkSession, index_path: str, start: int = 0) -> int:
-    """Resolve an index's live reindex epoch: the highest CONTIGUOUS
-    committed ``meta_e{N}`` marker at or above ``start``.  Markers are
-    contiguous by construction (epoch N+1 is only ever written by a
-    reindex that read live epoch N), so the probe terminates at the
-    first gap.  ``start`` covers pre-marker indexes that flipped an
-    ``epoch`` field in base meta.  The ONE implementation of the
-    commitment-resolution rule, shared by every index's ``_read_meta``."""
-    live = start
-    while _marker_committed(spark, f"{index_path}/meta_e{live + 1}"):
-        live += 1
-    return live
-
-
-def _delete_stale_epoch_markers(spark: SparkSession, index_path: str) -> None:
-    """Remove a PREVIOUS index's commit state at this path -- the base
-    ``meta/`` create marker FIRST, then the leftover ``meta_e*`` epoch
-    markers.  Runs first in every create: the epoch markers are
-    append-only (see :func:`_read_meta`), so a fresh index written over
-    an old reindexed one would otherwise inherit the old markers and
-    resolve a live epoch whose ``bands_eN`` dirs belong to the dead
-    index -- silent corruption.  Deletion ORDER is load-bearing: base
-    meta goes first so that a crash anywhere inside the create leaves
-    the old index either fully intact (crash before any delete) or
-    LOUDLY unreadable (meta gone -> ``_read_meta`` raises and the create
-    re-runs) -- never readable-but-silently-reverted to its stale
-    epoch-0 signatures, which is what deleting only the markers first
-    would produce."""
-    jvm = spark._jvm
-    fs = (jvm.org.apache.hadoop.fs.Path(index_path)
-          .getFileSystem(spark._jsc.hadoopConfiguration()))
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta"), True)
-    glob = jvm.org.apache.hadoop.fs.Path(f"{index_path}/meta_e*")
-    for status in fs.globStatus(glob) or []:
-        fs.delete(status.getPath(), True)
+_GEOMETRY = ("n_hashes", "bands", "shingle_k", "threshold", "granularity")
 
 
 def _read_meta(spark: SparkSession, index_path: str,
                expect_granularity: Optional[str] = "doc") -> dict:
-    row = spark.read.parquet(f"{index_path}/meta").first()
-    meta = {k: row[k] for k in
-            ("n_hashes", "bands", "shingle_k", "threshold")}
-    granularity = row.asDict().get("granularity", "doc")
-    meta["granularity"] = granularity
+    """Geometry of the committed index at ``index_path`` plus its live
+    ``epoch`` (:func:`index_store.read_meta`); raises when none is
+    committed or its granularity is not ``expect_granularity``."""
+    row = index_store.read_meta(spark, index_path)
+    if row is None:
+        raise ValueError(f"no committed minhash index at {index_path}")
+    meta = {k: row[k] for k in _GEOMETRY[:4]}
+    granularity = meta["granularity"] = row.get("granularity", "doc")
     if expect_granularity is not None and granularity != expect_granularity:
         raise ValueError(
             f"minhash index at {index_path} has granularity "
             f"{granularity!r}; this operator requires "
             f"{expect_granularity!r} (doc-level and group-level indexes "
             f"store different shingle layouts and cannot be mixed)")
-    # Live reindex epoch.  The base ``meta/`` directory is written once at
-    # create and NEVER rewritten (a parquet overwrite is delete-then-write,
-    # so a crash mid-flip would destroy the index's create marker); each
-    # reindex instead commits an APPEND-ONLY marker directory
-    # ``meta_e{N}`` and the live epoch resolves to the highest contiguous
-    # committed marker.  Markers are contiguous by construction (epoch
-    # N+1 is only ever written by a reindex that read live epoch N), so
-    # the probe loop terminates at the first gap.  Pre-marker indexes
-    # that flipped an ``epoch`` field in base meta still resolve
-    # correctly: probing starts from that value.
-    meta["epoch"] = _live_epoch(
-        spark, index_path, int(row.asDict().get("epoch", 0) or 0))
+    meta["epoch"] = row["epoch"]
     return meta
 
 
 def _committed_doc_ids(spark: SparkSession, index_path: str,
                        live: Optional[int] = None) -> DataFrame:
     """One-column (``doc_id``) DataFrame of docs COMMITTED to the index
-    at ANY live epoch.
-
-    Reads the ``bands`` stores, which every write path writes LAST -- so a
-    doc listed here is guaranteed to have its shingle rows present too,
-    and a doc whose append crashed half-way (shingles written, bands not)
-    correctly reads as absent.  Column-pruned scan of one key column."""
+    at ANY live epoch -- read from the ``bands`` stores, which every
+    write fills LAST, so a doc whose append crashed half-way (shingles
+    written, bands not) reads as absent."""
     if live is None:
         live = _read_meta(spark, index_path)["epoch"]
-    return (_read_epoched(spark, index_path, "bands", live, ["doc_id"])
-            .select("doc_id").distinct())
+    return index_store.committed_keys(spark, index_path, "bands", live)
 
 
 def _unique_doc_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -204,73 +127,70 @@ def write_minhash_index(
     """Create a MinHash index at ``index_path`` from a (deduped) corpus.
 
     Computes signatures once and writes the per-doc shingle arrays, then
-    the banded LSH rows (partitioned by band), then the geometry meta --
-    in that order, so readers can treat ``meta`` as the create-commit
-    marker and ``bands`` as the per-doc commit marker (see
+    the banded LSH rows (partitioned by band), then the geometry meta
+    (:func:`index_store.write`), so ``meta`` is the create-commit marker
+    and ``bands`` the per-doc commit marker (see
     :func:`_committed_doc_ids`).  Returns the pinned geometry.  Overwrites
     any existing index at the path.  Duplicate keys in ``df`` collapse to
     one row (min text per key -- see :func:`_unique_doc_rows`)."""
-    bands = resolve_bands(threshold, n_hashes, bands)
-    spark = df.sparkSession
-    _delete_stale_epoch_markers(spark, index_path)
-    # ONE Arrow pass computes signatures and shingle arrays together
-    # (make_sig_shingle_udf), materialized once -- the two store writes
-    # then read cached narrow rows instead of each re-running Python over
-    # the full corpus text (r7 optimization; values are bit-identical)
-    sig_sh = make_sig_shingle_udf(n_hashes, shingle_k)
-    base = _unique_doc_rows(df, id_col, text_col)
-    ss = (base.select("doc_id", sig_sh("text").alias("_ss"))
-          .select("doc_id", F.col("_ss.sig").alias("sig"),
-                  F.col("_ss.sh").alias("sh"))
-          .localCheckpoint(eager=False))
-    (ss.select("doc_id", "sh")
-     .write.mode("overwrite").parquet(f"{index_path}/shingles"))
-    (_banded(ss.select("doc_id", "sig"), "doc_id", bands, key="md5")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{index_path}/bands"))
-    meta = {"n_hashes": n_hashes, "bands": bands, "shingle_k": shingle_k,
-            "threshold": float(threshold), "granularity": "doc"}
-    write_rows(spark, [meta], f"{index_path}/meta", "overwrite")
-    return meta
+    meta = {"n_hashes": n_hashes,
+            "bands": resolve_bands(threshold, n_hashes, bands),
+            "shingle_k": shingle_k, "threshold": float(threshold),
+            "granularity": "doc"}
+    return _write_docs(df, id_col, text_col, index_path, meta, 0)
+
+
+def _sig_shingles(rows: DataFrame, meta: dict) -> DataFrame:
+    """(doc_id, sig, sh) of (doc_id, text) rows.  ONE Arrow pass computes
+    signatures and shingle arrays together (make_sig_shingle_udf),
+    materialized once -- the two store writes then read cached narrow
+    rows instead of each re-running Python over the text (r7
+    optimization; values are bit-identical)."""
+    sig_sh = make_sig_shingle_udf(meta["n_hashes"], meta["shingle_k"])
+    return (rows.select("doc_id", sig_sh("text").alias("_ss"))
+            .select("doc_id", F.col("_ss.sig").alias("sig"),
+                    F.col("_ss.sh").alias("sh"))
+            .localCheckpoint(eager=False))
+
+
+def _doc_stores(meta: dict) -> list[Store]:
+    """Doc index stores, from :func:`_sig_shingles` rows: shingle
+    arrays first, band rows (partitioned by band) last."""
+    return [Store("shingles", lambda ss: ss.select("doc_id", "sh")),
+            Store("bands", lambda ss: _banded(
+                ss.select("doc_id", "sig"), "doc_id", meta["bands"],
+                key="md5"), "band")]
+
+
+def _write_docs(df: DataFrame, id_col: str, text_col: str,
+                index_path: str, meta: dict, epoch: int) -> dict:
+    """Write ``df``'s docs as epoch ``epoch`` of a doc index: 0 creates
+    the index, N >= 1 commits reindex epoch N (:func:`index_store.write`)."""
+    ss = _sig_shingles(_unique_doc_rows(df, id_col, text_col), meta)
+    return index_store.write(df.sparkSession, index_path, ss,
+                             _doc_stores(meta), meta, epoch)
 
 
 def append_to_minhash_index(
     new_df: DataFrame, id_col: str, text_col: str, index_path: str,
 ) -> None:
-    """Append a slice's shingle arrays + band rows to an existing index,
-    idempotently: each store independently anti-joins the keys it already
-    holds, so re-running a completed append adds nothing, and re-running
-    an append that crashed BETWEEN the two writes (shingles present, bands
-    absent) completes it to an exactly-once state instead of duplicating
-    -- shingles are written first, bands last, so ``bands`` membership
-    certifies a doc's append fully committed.
+    """Append a slice's shingle arrays + band rows to an existing index
+    (:func:`index_store.append`: idempotent per-store anti-joins,
+    shingles first, bands last, new docs into the base stores whatever
+    the live epoch).  The uncommitted docs' signatures and shingles come
+    from one shared pass (:func:`_sig_shingles`).
 
     Call AFTER consuming the incremental pair result for the slice (the
     pair computation must see the index in its pre-slice state; Spark's
     lazy evaluation would otherwise race the append against the read).
     Geometry comes from the index meta, so appends can never drift.
-    Duplicate slice keys collapse to one row (:func:`_unique_doc_rows`).
-    Membership spans ALL live epochs (a doc can exist only in a reindex
-    epoch); new docs append into the BASE stores -- per-doc max-epoch
-    resolution at read time makes that correct regardless of live epoch."""
+    Duplicate slice keys collapse to one row (:func:`_unique_doc_rows`)."""
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path)
-    live = meta["epoch"]
-    minhash = make_minhash_udf(meta["n_hashes"], meta["shingle_k"])
-    shingles = make_shingle_udf(meta["shingle_k"])
-    base = _unique_doc_rows(new_df, id_col, text_col)
-    sh_existing = (_read_epoched(spark, index_path, "shingles", live,
-                                 ["doc_id"])
-                   .select("doc_id").distinct())
-    (base.join(sh_existing, "doc_id", "left_anti")
-     .select("doc_id", shingles("text").alias("sh"))
-     .write.mode("append").parquet(f"{index_path}/shingles"))
-    bd_existing = _committed_doc_ids(spark, index_path, live)
-    sig = (base.join(bd_existing, "doc_id", "left_anti")
-           .select("doc_id", minhash("text").alias("sig")))
-    (_banded(sig, "doc_id", meta["bands"], key="md5")
-     .write.mode("append").partitionBy("band")
-     .parquet(f"{index_path}/bands"))
+    index_store.append(spark, index_path,
+                       _unique_doc_rows(new_df, id_col, text_col),
+                       _doc_stores(meta), meta["epoch"],
+                       prepare=lambda rows: _sig_shingles(rows, meta))
 
 
 def minhash_near_duplicates_incremental(
@@ -333,11 +253,9 @@ def minhash_near_duplicates_incremental(
         .withColumn("is_new", F.lit(True))
     # epoch resolution BEFORE the capping window: a reindexed doc's stale
     # epoch-0 band rows must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see _resolve_latest)
-    old_banded = (_resolve_latest(
-                      _read_epoched(spark, index_path, "bands", live,
-                                    ["doc_id", "band", "band_key"]),
-                      "doc_id", live)
+    # candidates (free at epoch 0 -- see index_store.resolve_latest)
+    old_banded = (read_latest(spark, index_path, "bands", live,
+                              ["doc_id", "band", "band_key"])
                   .withColumn("is_new", F.lit(False)))
     # the capping window shuffles index band rows on (band, band_key) --
     # the SAME partitioning the candidate self-join needs, so the exchange
@@ -383,11 +301,8 @@ def minhash_near_duplicates_incremental(
     # the fresh one), but each affected pair would emit twice.
     # candidate-restrict FIRST, then resolve epochs: the per-doc window
     # runs over candidate rows only, never the O(corpus) store
-    old_sh = (_resolve_latest(
-                  _read_epoched(spark, index_path, "shingles", live,
-                                ["doc_id", "sh"])
-                  .join(cand, "doc_id", "left_semi"),
-                  "doc_id", live)
+    old_sh = (read_latest(spark, index_path, "shingles", live,
+                          ["doc_id", "sh"], cand)
               .join(base.select("doc_id"), "doc_id", "left_anti"))
     # candidate-restricted, so bounded: materialize once for the size
     # prune + both verify sides
@@ -430,10 +345,8 @@ def minhash_index_bucket_audit(
                  "left_anti")
            .select("doc_id", minhash("text").alias("sig")))
     new_banded = _banded(sig, "doc_id", meta["bands"], key="md5")
-    old_banded = _resolve_latest(
-        _read_epoched(spark, index_path, "bands", live,
-                      ["doc_id", "band", "band_key"]),
-        "doc_id", live)
+    old_banded = read_latest(spark, index_path, "bands", live,
+                             ["doc_id", "band", "band_key"])
     sizes = (old_banded.unionByName(new_banded)
              .groupBy("band", "band_key").agg(F.count("*").alias("n")))
     return bucket_cap_stats(sizes, max_bucket_size)
@@ -461,30 +374,9 @@ def reindex_docs(
     Note this updates the INDEX only: replacing the doc's already-written
     pipeline OUTPUT rows is the caller's upsert (Iceberg MERGE in the
     nominal deployment).  O(changed docs), never O(corpus)."""
-    spark = changed_df.sparkSession
-    meta = _read_meta(spark, index_path)
-    new_epoch = meta["epoch"] + 1
-    # one shared signature+shingle pass, as in write_minhash_index
-    sig_sh = make_sig_shingle_udf(meta["n_hashes"], meta["shingle_k"])
-    base = _unique_doc_rows(changed_df, id_col, text_col)
-    ss = (base.select("doc_id", sig_sh("text").alias("_ss"))
-          .select("doc_id", F.col("_ss.sig").alias("sig"),
-                  F.col("_ss.sh").alias("sh"))
-          .localCheckpoint(eager=False))
-    (ss.select("doc_id", "sh")
-     .write.mode("overwrite")
-     .parquet(_epoch_path(index_path, "shingles", new_epoch)))
-    (_banded(ss.select("doc_id", "sig"), "doc_id", meta["bands"], key="md5")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(_epoch_path(index_path, "bands", new_epoch)))
-    meta_new = {"n_hashes": meta["n_hashes"], "bands": meta["bands"],
-                "shingle_k": meta["shingle_k"],
-                "threshold": float(meta["threshold"]),
-                "granularity": "doc", "epoch": new_epoch}
-    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
-               "overwrite")
-    _assert_marker_visible(spark, index_path, new_epoch)
-    return meta_new
+    meta = _read_meta(changed_df.sparkSession, index_path)
+    return _write_docs(changed_df, id_col, text_col, index_path,
+                       {k: meta[k] for k in _GEOMETRY}, meta["epoch"] + 1)
 
 
 def changed_preindexed_ids(
@@ -519,10 +411,8 @@ def changed_preindexed_ids(
     pre = base.join(_committed_doc_ids(spark, index_path, live),
                     "doc_id", "left_semi")
     fresh = pre.select("doc_id", shingles("text").alias("sh_new"))
-    stored = _resolve_latest(
-        _read_epoched(spark, index_path, "shingles", live, ["doc_id", "sh"])
-        .join(pre.select("doc_id"), "doc_id", "left_semi"),
-        "doc_id", live)
+    stored = read_latest(spark, index_path, "shingles", live, ["doc_id", "sh"],
+                         pre.select("doc_id"))
     return (fresh.join(stored, "doc_id")
             .filter(F.col("sh_new") != F.col("sh"))
             .select("doc_id"))
@@ -624,11 +514,8 @@ def probe_index_near_duplicates(
     # probe keys resolve to their NEW shingles (the store rows are the
     # content being replaced), exactly as the incremental op's slice-wins
     # rule; candidate-restrict before epoch resolution, as everywhere
-    old_sh = (_resolve_latest(
-                  _read_epoched(spark, index_path, "shingles", live,
-                                ["doc_id", "sh"])
-                  .join(cand, "doc_id", "left_semi"),
-                  "doc_id", live)
+    old_sh = (read_latest(spark, index_path, "shingles", live,
+                          ["doc_id", "sh"], cand)
               .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_sh = old_sh.unionByName(new_sh).localCheckpoint()
     sa = all_sh.select(F.col("doc_id").alias("id_a"),
@@ -644,11 +531,8 @@ def probe_index_near_duplicates(
     # typically an earlier replacement deleted for duplicating this key,
     # then reindexed for convergence (the pipeline reindexes
     # delete-action replacements too) -- must not void the replacement.
-    probe_old_sh = (_resolve_latest(
-                        _read_epoched(spark, index_path, "shingles", live,
-                                      ["doc_id", "sh"])
-                        .join(base.select("doc_id"), "doc_id", "left_semi"),
-                        "doc_id", live)
+    probe_old_sh = (read_latest(spark, index_path, "shingles", live,
+                                ["doc_id", "sh"], base.select("doc_id"))
                     .select(F.col("doc_id").alias("_pid"),
                             F.col("sh").alias("sh_old")))
     return _filter_predecessor_shadow(
@@ -658,9 +542,8 @@ def probe_index_near_duplicates(
 
 # ─── Group-granularity (conversation) index ───
 #
-# Same layout contract as the doc index (shingles first, bands last = the
-# commit marker, meta = create marker), with two differences pinned in
-# meta as granularity="group":
+# Same stores and commit protocol as the doc index (index_store.py), with
+# two differences pinned in meta as granularity="group":
 #
 # * ``bands/`` keys are GROUP ids and band keys come from the group's
 #   union-set signature (elementwise unsigned min over member rows --
@@ -675,28 +558,8 @@ def probe_index_near_duplicates(
 # to the index is corpus and a later slice's rows for it are ignored
 # (filtered, like re-ingested docs) -- the right model for transcript
 # dumps where a conversation is complete when exported.  A conversation
-# that DOES grow (a later dump re-exports it with new turns) is handled
-# by EPOCH-VERSIONED REINDEXING (:func:`reindex_groups`): growing a
-# committed conversation changes its signature, which append-only stores
-# cannot express in place, so the rebuilt groups are written to fresh
-# ``shingles_e{N}/`` + ``bands_e{N}/`` directories and the epoch is
-# committed LAST by an APPEND-ONLY marker directory ``meta_e{N}`` (the
-# same commit-marker discipline as everything else here, without ever
-# rewriting the base ``meta/`` create marker -- a parquet overwrite is
-# delete-then-write and a crash mid-rewrite would leave the index
-# unreadable).  Readers resolve live = highest contiguous committed
-# marker, union epochs 0..live and keep each group's rows from the
-# HIGHEST epoch that contains it, so a rebuilt group's stale epoch-0
-# band rows can never generate candidates.  A crash between the epoch
-# writes and the marker commit leaves the old epoch live, and a re-run
-# overwrites the orphaned directories idempotently.
-# Cost, stated honestly: an index that has never been reindexed
-# (epoch 0) reads exactly as before -- zero extra shuffles; once epochs
-# exist, readers pay one additional narrow-row shuffle (a per-gid
-# max-epoch window over the band store, and over the candidate-restricted
-# shingle rows) per run, and stale epochs accrete until a compaction
-# rewrite (= a fresh write_grouped_minhash_index from the resolved
-# state).
+# that DOES grow (a later dump re-exports it with new turns) is rebuilt
+# into a fresh index epoch by :func:`reindex_groups`.
 
 
 def _group_shingle_rows(df: DataFrame, group_col: str, text_col: str,
@@ -709,156 +572,39 @@ def _group_shingle_rows(df: DataFrame, group_col: str, text_col: str,
             .distinct())
 
 
-def _epoch_path(index_path: str, sub: str, epoch: int) -> str:
-    """Directory of one epoch of a grouped store: epoch 0 is the base
-    ``bands/``/``shingles/`` directory (pre-epoch indexes read
-    unchanged), epoch N >= 1 is ``bands_eN/``/``shingles_eN/``."""
-    return (f"{index_path}/{sub}" if epoch == 0
-            else f"{index_path}/{sub}_e{epoch}")
-
-
-def _read_epoched(spark: SparkSession, index_path: str, sub: str,
-                  live: int, cols: list[str]) -> DataFrame:
-    """Union of a grouped store's epochs 0..live with an ``_epoch``
-    column.  Directories beyond ``live`` (a crashed reindex that never
-    flipped meta) are never read -- invisibility by construction."""
-    out = None
-    for e in range(live + 1):
-        part = (spark.read.parquet(_epoch_path(index_path, sub, e))
-                .select(*cols).withColumn("_epoch", F.lit(e)))
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _resolve_latest(rows: DataFrame, key_col: str, live: int) -> DataFrame:
-    """Keep each key's rows from the highest epoch that contains it; a
-    never-reindexed index (live == 0) short-circuits to a free column
-    drop.  One narrow-row shuffle on the key when epochs exist."""
-    if live == 0:
-        return rows.drop("_epoch")
-    from pyspark.sql.window import Window
-    w = Window.partitionBy(key_col)
-    return (rows.withColumn("_emax", F.max("_epoch").over(w))
-            .filter(F.col("_epoch") == F.col("_emax"))
-            .drop("_emax", "_epoch"))
-
-
-def _filter_predecessor_shadow(
-    verified: DataFrame, probe_old: DataFrame, old_col: str,
-    val_a: str, val_b: str, sim_fn, threshold: float, score_col: str,
-) -> DataFrame:
-    """Predecessor-shadow carve-out shared by the doc and embedding
-    probes: a MIXED verified pair is void when the corpus side's stored
-    value near-duplicates the probe key's OWN stored (old) value --
-    matching one's predecessor's shadow is never duplication.
-    Uncommitted probes (NULL old value, from the left join against
-    ``probe_old`` keyed ``_pid``) are never carved; probe-probe pairs
-    are never carved.  ``sim_fn(corpus_val, old_val)`` supplies the
-    similarity (array Jaccard / cosine); the surviving rows project the
-    standard ``(id_a, id_b, <score_col>, new_a, new_b)`` shape."""
-    mixed = F.col("new_a") != F.col("new_b")
-    v = (verified
-         .withColumn("_pid", F.when(F.col("new_a"), F.col("id_a"))
-                              .otherwise(F.col("id_b")))
-         .withColumn("_cval", F.when(F.col("new_a"), F.col(val_b))
-                               .otherwise(F.col(val_a)))
-         .join(probe_old, "_pid", "left"))
-    # coalesce: sim_fn can yield NULL (cosine of a zero-norm stored old
-    # vector is 0/0), and filter(~NULL) would silently drop the verified
-    # pair -- a NULL similarity must never void a real duplicate (r6
-    # ADVICE)
-    shadow = F.coalesce(
-        mixed & F.col(old_col).isNotNull()
-        & (sim_fn(F.col("_cval"), F.col(old_col)) >= threshold),
-        F.lit(False))
-    return (v.filter(~shadow)
-            .select("id_a", "id_b",
-                    F.round(score_col, 6).alias(score_col),
-                    "new_a", "new_b"))
-
-
 def _array_jaccard(x, y):
     """Exact Jaccard of two array columns as a double expression."""
     inter = F.size(F.array_intersect(x, y)).cast("double")
     return inter / ((F.size(x) + F.size(y)).cast("double") - inter)
 
 
-def _canonical_candidate_pairs(
-    a: DataFrame, b: DataFrame, id_col: str, join_cols,
-) -> DataFrame:
-    """Bucket-join two candidate row sets and emit canonically ordered
-    pairs: ``id_a < id_b`` with the ``is_new`` flags carried through the
-    same swap, self-pairs removed, multi-bucket duplicate collisions
-    collapsed.  Every incremental/probe operator (doc, grouped,
-    embedding) shares this exact canonicalization -- the keep-first /
-    corpus-wins drop policy in :func:`incremental_drop_keys` reads the
-    orientation, so it must never diverge between them."""
-    a, b = a.alias("a"), b.alias("b")
-    a_lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    return (a.join(b, join_cols)
-            .filter(F.col(f"a.{id_col}") != F.col(f"b.{id_col}"))
-            .select(
-                F.when(a_lt, F.col(f"a.{id_col}"))
-                 .otherwise(F.col(f"b.{id_col}")).alias("id_a"),
-                F.when(a_lt, F.col(f"b.{id_col}"))
-                 .otherwise(F.col(f"a.{id_col}")).alias("id_b"),
-                F.when(a_lt, F.col("a.is_new")).otherwise(F.col("b.is_new"))
-                 .alias("new_a"),
-                F.when(a_lt, F.col("b.is_new")).otherwise(F.col("a.is_new"))
-                 .alias("new_b"))
-            .distinct())
-
-
-def _resolve_latest_bucket_restricted(
-    rows: DataFrame, key_col: str, live: int,
-    bucket_probe: DataFrame, bucket_cols: list[str],
-) -> DataFrame:
-    """Epoch resolution for probe-sized bucket lookups without an
-    O(store) shuffle.
-
-    A bucket restriction is NOT sound before :func:`_resolve_latest`
-    (a key's latest-epoch row may live in a different bucket, and
-    dropping it would resurrect an older epoch's row), but windowing
-    the whole store to serve a handful of probe buckets is an
-    O(corpus) shuffle per probe.  Two phases keep both properties:
-    restrict to keys with ANY row in a probe-touched bucket (broadcast
-    map-side semi-join, no shuffle), resolve only those keys' rows,
-    then re-apply the bucket restriction to the resolved rows.  At
-    ``live == 0`` this reduces to the single broadcast semi-join.
-
-    The key semi-join carries NO broadcast hint on purpose: the key set
-    is normally probe-sized (AQE broadcasts it at runtime), but one
-    degenerate hot bucket -- the boilerplate-collision shape the
-    callers' ``max_bucket_size`` capping exists to discard downstream
-    -- can make it corpus-scale, and a FORCED broadcast would then OOM
-    the driver.  Without the hint AQE degrades exactly that case to a
-    scalable shuffled semi-join, while the downstream capping window
-    still discards the hot bucket with its true membership intact.
-    (Pre-capping the bucket membership here instead would count
-    UNRESOLVED multi-epoch rows and could drop buckets the resolved
-    view keeps -- not pair-exact.)"""
-    restricted = rows.join(F.broadcast(bucket_probe), bucket_cols,
-                           "left_semi")
-    if live == 0:
-        return restricted.drop("_epoch")
-    keys = restricted.select(key_col).distinct()
-    return (_resolve_latest(
-                rows.join(keys, key_col, "left_semi"),
-                key_col, live)
-            .join(F.broadcast(bucket_probe), bucket_cols, "left_semi"))
-
-
 def committed_group_ids(spark: SparkSession, index_path: str,
                         live: Optional[int] = None) -> DataFrame:
     """One-column (``gid``) set of groups committed to a grouped index at
-    ANY live epoch.  Epoch commit marker is that epoch's bands store
-    (written last within the epoch); the base-epoch marker doubles as the
-    create marker exactly as before."""
+    ANY live epoch (the ``bands`` stores certify commitment, as for
+    docs)."""
     if live is None:
         live = _read_meta(spark, index_path,
                           expect_granularity="group")["epoch"]
-    return (_read_epoched(spark, index_path, "bands", live, ["doc_id"])
-            .select(F.col("doc_id").alias("gid")).distinct())
+    return (index_store.committed_keys(spark, index_path, "bands", live)
+            .withColumnRenamed("doc_id", "gid"))
+
+
+def _group_rows(df: DataFrame, group_col: str, text_col: str) -> DataFrame:
+    """(doc_id, text) member rows keyed by their group id."""
+    return df.select(F.col(group_col).alias("doc_id"),
+                     F.col(text_col).alias("text"))
+
+
+def _group_stores(meta: dict) -> list[Store]:
+    """Grouped index stores, from :func:`_group_rows`: exploded shingle
+    rows first, band rows of the union signature last."""
+    return [Store("shingles", lambda rows: _group_shingle_rows(
+                rows, "doc_id", "text", meta["shingle_k"])),
+            Store("bands", lambda rows: _banded(
+                _group_signatures(rows, "doc_id", "text", meta["n_hashes"],
+                                  meta["shingle_k"]),
+                "gid", meta["bands"], key="md5"), "band")]
 
 
 def reindex_groups(
@@ -868,43 +614,20 @@ def reindex_groups(
 
     ``grown_df`` must carry each touched conversation's FULL current
     member rows (old + new turns): signatures and shingle sets are
-    recomputed from scratch for exactly the group ids present, written
-    to ``shingles_e{N+1}`` then ``bands_e{N+1}`` (overwrite mode, so a
-    crashed attempt's orphan directories are replaced, never appended
-    to), and the epoch is committed LAST by writing the APPEND-ONLY
-    marker directory ``meta_e{N+1}`` -- the base ``meta/`` (the index's
-    create marker and geometry pin) is never rewritten, so there is no
-    crash window in which the index is unreadable: a crash anywhere
-    before the marker's ``_SUCCESS`` lands leaves the old epoch live and
-    the whole operation re-runnable.  Groups NOT present in ``grown_df``
-    are untouched (their latest epoch still wins at read time).  Returns
-    the new meta.  O(touched groups), never O(corpus)."""
-    from .dedup import _group_signatures
-
-    spark = grown_df.sparkSession
-    meta = _read_meta(spark, index_path, expect_granularity="group")
-    new_epoch = meta["epoch"] + 1
-    base = grown_df.select(F.col(group_col).alias("gid"),
-                           F.col(text_col).alias("text"))
-    (_group_shingle_rows(base, "gid", "text", meta["shingle_k"])
-     .write.mode("overwrite")
-     .parquet(_epoch_path(index_path, "shingles", new_epoch)))
-    gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
-                             meta["shingle_k"])
-    (_banded(gsig, "gid", meta["bands"], key="md5")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(_epoch_path(index_path, "bands", new_epoch)))
-    meta_new = {"n_hashes": meta["n_hashes"], "bands": meta["bands"],
-                "shingle_k": meta["shingle_k"],
-                "threshold": float(meta["threshold"]),
-                "granularity": "group", "epoch": new_epoch}
-    # epoch commit marker: a fresh directory, never an overwrite of live
-    # state (overwrite mode only matters for a PREVIOUS crashed attempt's
-    # partial marker, which by definition has no _SUCCESS and is not live)
-    write_rows(spark, [meta_new], f"{index_path}/meta_e{new_epoch}",
-               "overwrite")
-    _assert_marker_visible(spark, index_path, new_epoch)
-    return meta_new
+    recomputed from scratch for exactly the group ids present and
+    committed as epoch N+1 (:func:`index_store.write`:
+    ``shingles_e{N+1}``, then ``bands_e{N+1}``, then the append-only
+    ``meta_e{N+1}`` marker; a crash before the marker leaves the old
+    epoch live and the operation re-runnable).  Groups NOT present in
+    ``grown_df`` are untouched (their latest epoch still wins at read
+    time).  Returns the new meta.  O(touched groups), never O(corpus)."""
+    meta = _read_meta(grown_df.sparkSession, index_path,
+                      expect_granularity="group")
+    return index_store.write(grown_df.sparkSession, index_path,
+                             _group_rows(grown_df, group_col, text_col),
+                             _group_stores(meta),
+                             {k: meta[k] for k in _GEOMETRY},
+                             meta["epoch"] + 1)
 
 
 def changed_preindexed_gids(
@@ -933,12 +656,9 @@ def changed_preindexed_gids(
     fresh = (_group_shingle_rows(base.join(pre_gids, "gid", "left_semi"),
                                  "gid", "text", meta["shingle_k"])
              .withColumnRenamed("doc_id", "gid"))
-    stored = (_resolve_latest(
-                  _read_epoched(spark, index_path, "shingles", live,
-                                ["doc_id", "sh"])
-                  .join(pre_gids.withColumnRenamed("gid", "doc_id"),
-                        "doc_id", "left_semi"),
-                  "doc_id", live)
+    stored = (read_latest(spark, index_path, "shingles", live,
+                          ["doc_id", "sh"],
+                          pre_gids.withColumnRenamed("gid", "doc_id"))
               .withColumnRenamed("doc_id", "gid"))
     f = fresh.withColumn("_f", F.lit(1))
     s = stored.withColumn("_s", F.lit(1))
@@ -960,23 +680,13 @@ def write_grouped_minhash_index(
     """Create a GROUP-granularity MinHash index (e.g. conversations) at
     ``index_path`` from a (deduped) corpus of member rows.  Overwrites any
     existing index at the path."""
-    from .dedup import _group_signatures
-
-    bands = resolve_bands(threshold, n_hashes, bands)
-    spark = df.sparkSession
-    _delete_stale_epoch_markers(spark, index_path)
-    base = df.select(F.col(group_col).alias("gid"),
-                     F.col(text_col).alias("text"))
-    (_group_shingle_rows(base, "gid", "text", shingle_k)
-     .write.mode("overwrite").parquet(f"{index_path}/shingles"))
-    gsig = _group_signatures(base, "gid", "text", n_hashes, shingle_k)
-    (_banded(gsig, "gid", bands, key="md5")
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{index_path}/bands"))
-    meta = {"n_hashes": n_hashes, "bands": bands, "shingle_k": shingle_k,
-            "threshold": float(threshold), "granularity": "group"}
-    write_rows(spark, [meta], f"{index_path}/meta", "overwrite")
-    return meta
+    meta = {"n_hashes": n_hashes,
+            "bands": resolve_bands(threshold, n_hashes, bands),
+            "shingle_k": shingle_k, "threshold": float(threshold),
+            "granularity": "group"}
+    return index_store.write(df.sparkSession, index_path,
+                             _group_rows(df, group_col, text_col),
+                             _group_stores(meta), meta)
 
 
 def append_grouped_to_minhash_index(
@@ -985,29 +695,11 @@ def append_grouped_to_minhash_index(
     """Append a slice's groups to a group-granularity index, idempotently
     (same per-store anti-join + shingles-first/bands-last protocol as
     :func:`append_to_minhash_index`)."""
-    from .dedup import _group_signatures
-
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
-    live = meta["epoch"]
-    base = new_df.select(F.col(group_col).alias("gid"),
-                         F.col(text_col).alias("text"))
-    # membership spans ALL live epochs (a gid can exist only in a reindex
-    # epoch); new groups append into the BASE stores -- per-gid
-    # max-epoch resolution makes that correct regardless of live epoch
-    sh_existing = (_read_epoched(spark, index_path, "shingles", live,
-                                 ["doc_id"])
-                   .select(F.col("doc_id").alias("gid")).distinct())
-    (_group_shingle_rows(base.join(sh_existing, "gid", "left_anti"),
-                         "gid", "text", meta["shingle_k"])
-     .write.mode("append").parquet(f"{index_path}/shingles"))
-    bd_existing = committed_group_ids(spark, index_path, live)
-    gsig = _group_signatures(base.join(bd_existing, "gid", "left_anti"),
-                             "gid", "text", meta["n_hashes"],
-                             meta["shingle_k"])
-    (_banded(gsig, "gid", meta["bands"], key="md5")
-     .write.mode("append").partitionBy("band")
-     .parquet(f"{index_path}/bands"))
+    index_store.append(spark, index_path,
+                       _group_rows(new_df, group_col, text_col),
+                       _group_stores(meta), meta["epoch"])
 
 
 def minhash_near_duplicates_grouped_incremental(
@@ -1032,8 +724,6 @@ def minhash_near_duplicates_grouped_incremental(
     semi-join-restricted to candidate groups."""
     from pyspark.sql.window import Window
 
-    from .dedup import _group_signatures
-
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
     threshold = meta["threshold"]
@@ -1050,11 +740,9 @@ def minhash_near_duplicates_grouped_incremental(
                   .withColumn("is_new", F.lit(True)))
     # epoch resolution BEFORE the capping window: a rebuilt group's stale
     # epoch-0 band rows must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see _resolve_latest)
-    old_banded = (_resolve_latest(
-                      _read_epoched(spark, index_path, "bands", live,
-                                    ["doc_id", "band", "band_key"]),
-                      "doc_id", live)
+    # candidates (free at epoch 0 -- see index_store.resolve_latest)
+    old_banded = (read_latest(spark, index_path, "bands", live,
+                              ["doc_id", "band", "band_key"])
                   .select(F.col("doc_id").alias("gid"), "band", "band_key")
                   .withColumn("is_new", F.lit(False)))
     all_banded = old_banded.unionByName(new_banded)
@@ -1082,12 +770,9 @@ def minhash_near_duplicates_grouped_incremental(
     slice_gids = base.select("gid").distinct()
     # candidate-restrict FIRST, then resolve epochs: the per-gid window
     # runs over candidate rows only, never the O(corpus) store
-    old_sh = (_resolve_latest(
-                  _read_epoched(spark, index_path, "shingles", live,
-                                ["doc_id", "sh"])
-                  .join(cand.withColumnRenamed("gid", "doc_id"),
-                        "doc_id", "left_semi"),
-                  "doc_id", live)
+    old_sh = (read_latest(spark, index_path, "shingles", live,
+                          ["doc_id", "sh"],
+                          cand.withColumnRenamed("gid", "doc_id"))
               .select(F.col("doc_id").alias("gid"), "sh")
               .join(slice_gids, "gid", "left_anti"))
     sh_rows = old_sh.unionByName(new_sh)
@@ -1159,8 +844,6 @@ def probe_grouped_index_near_duplicates(
     enclosing pipeline run is idempotent and resumable."""
     from pyspark.sql.window import Window
 
-    from .dedup import _group_signatures
-
     spark = probe_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
     threshold = meta["threshold"]
@@ -1203,12 +886,9 @@ def probe_grouped_index_near_duplicates(
     # corpus candidates resolve to their stored rows; probe gids' stored
     # rows are the dying old content and are excluded from the verify
     # (probe gids resolve to their NEW rows above)
-    old_sh = (_resolve_latest(
-                  _read_epoched(spark, index_path, "shingles", live,
-                                ["doc_id", "sh"])
-                  .join(cand.withColumnRenamed("gid", "doc_id"),
-                        "doc_id", "left_semi"),
-                  "doc_id", live)
+    old_sh = (read_latest(spark, index_path, "shingles", live,
+                          ["doc_id", "sh"],
+                          cand.withColumnRenamed("gid", "doc_id"))
               .select(F.col("doc_id").alias("gid"), "sh")
               .join(probe_gids, "gid", "left_anti")
               .localCheckpoint())
@@ -1236,12 +916,8 @@ def probe_grouped_index_near_duplicates(
                        .otherwise(F.col("id_b")).alias("_pgid"),
                       F.when(F.col("new_a"), F.col("id_b"))
                        .otherwise(F.col("id_a")).alias("_cgid")))
-    pold = (_resolve_latest(
-                _read_epoched(spark, index_path, "shingles", live,
-                              ["doc_id", "sh"])
-                .join(probe_gids.withColumnRenamed("gid", "doc_id"),
-                      "doc_id", "left_semi"),
-                "doc_id", live)
+    pold = (read_latest(spark, index_path, "shingles", live, ["doc_id", "sh"],
+                        probe_gids.withColumnRenamed("gid", "doc_id"))
             .select(F.col("doc_id").alias("_pgid"), "sh"))
     np_ = pold.groupBy("_pgid").agg(F.count("*").alias("n_p"))
     i2 = (mixedp.join(pold, "_pgid")
@@ -1285,8 +961,6 @@ def minhash_grouped_index_bucket_audit(
     group signatures) -- the group-granularity analog of
     :func:`minhash_index_bucket_audit`, for the empty-output corner where
     the observe-based counter is pruned."""
-    from .dedup import _group_signatures
-
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
     live = meta["epoch"]
@@ -1297,10 +971,8 @@ def minhash_grouped_index_bucket_audit(
     gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
                              meta["shingle_k"])
     new_banded = _banded(gsig, "gid", meta["bands"], key="md5")  # aliases to doc_id
-    old_banded = _resolve_latest(
-        _read_epoched(spark, index_path, "bands", live,
-                      ["doc_id", "band", "band_key"]),
-        "doc_id", live)
+    old_banded = read_latest(spark, index_path, "bands", live,
+                             ["doc_id", "band", "band_key"])
     sizes = (old_banded.unionByName(new_banded)
              .groupBy("band", "band_key").agg(F.count("*").alias("n")))
     return bucket_cap_stats(sizes, max_bucket_size)
@@ -1308,32 +980,11 @@ def minhash_grouped_index_bucket_audit(
 
 def _compact_index(spark: SparkSession, src_path: str, dst_path: str,
                    granularity: str) -> dict:
-    """Shared compaction body: rewrite an index's RESOLVED state
-    (per-key latest epoch) as a fresh epoch-0 index at ``dst_path``.
-    The doc and group layouts resolve identically -- the shingle store
-    is ``(doc_id, sh)`` rows either way (``sh`` an array for docs, a
-    scalar for groups), and resolution is a per-key max-epoch filter."""
-    if dst_path.rstrip("/") == src_path.rstrip("/"):
-        raise ValueError(
-            "compaction writes a NEW index; dst_path must differ from "
-            "src_path (in-place parquet swap is not atomic)")
-    _delete_stale_epoch_markers(spark, dst_path)
+    """Compaction of either granularity: both resolve the same
+    ``(doc_id, ...)`` stores per key (:func:`index_store.compact`)."""
     meta = _read_meta(spark, src_path, expect_granularity=granularity)
-    live = meta["epoch"]
-    (_resolve_latest(_read_epoched(spark, src_path, "shingles", live,
-                                   ["doc_id", "sh"]), "doc_id", live)
-     .write.mode("overwrite").parquet(f"{dst_path}/shingles"))
-    (_resolve_latest(_read_epoched(spark, src_path, "bands", live,
-                                   ["doc_id", "band", "band_key"]),
-                     "doc_id", live)
-     .write.mode("overwrite").partitionBy("band")
-     .parquet(f"{dst_path}/bands"))
-    meta_new = {"n_hashes": meta["n_hashes"], "bands": meta["bands"],
-                "shingle_k": meta["shingle_k"],
-                "threshold": float(meta["threshold"]),
-                "granularity": granularity, "epoch": 0}
-    write_rows(spark, [meta_new], f"{dst_path}/meta", "overwrite")
-    return meta_new
+    return index_store.compact(spark, src_path, dst_path, _doc_stores(meta),
+                               meta["epoch"], {**meta, "epoch": 0})
 
 
 def compact_grouped_index(spark: SparkSession, src_path: str,

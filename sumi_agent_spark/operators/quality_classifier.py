@@ -52,6 +52,8 @@ import string
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .index_store import commit_model
+
 # Explicit ASCII whitespace class -- see module docstring for why not
 # \v and not \s.  Kept as a raw string so the backslashes reach the
 # regex engine (Java or RE2) unprocessed.
@@ -266,67 +268,23 @@ def quality_score_expr(model: dict, text: Column) -> Column:
     return F.lit(float(meta["prior"])) + contrib
 
 
-_META_COLS = ["dim", "alpha", "ngram", "normalize", "prior", "w0",
-              "pos_tokens", "neg_tokens", "n_pos_docs", "n_neg_docs"]
+_META_DDL = ("dim long, alpha double, ngram long, normalize boolean, "
+             "prior double, w0 double, pos_tokens long, neg_tokens long, "
+             "n_pos_docs long, n_neg_docs long")
 
 
 def write_quality_model(spark: SparkSession, model: dict,
                         path: str) -> None:
-    """Persist the model: ``weights/`` parquet + a one-row ``meta/``.
-
-    Weights are written FIRST, meta LAST -- meta is the commit marker
-    (:func:`_write_committed_model` has the full discipline).
-    """
-    meta = model["meta"]
-    _write_committed_model(spark, model["weights"],
-                           tuple(meta[c] for c in _META_COLS),
-                           _META_COLS, path, "quality model")
-
-
-def _write_committed_model(spark: SparkSession, weights: DataFrame,
-                           meta_vals: tuple, meta_cols: list[str],
-                           path: str, kind: str) -> None:
-    """Weights-first / meta-last model commit, shared by the classifier
-    and the unigram LM so the discipline can never diverge.
-
-    Existence is judged by the meta COMMIT MARKER (``_SUCCESS``, the
-    same FS check the index epochs use -- ``minhash_index.
-    _marker_committed``), never by a parquet read: a committed model
-    refuses loudly; a TORN meta directory (crash DURING the meta write
-    left ``_temporary/`` but no marker) is deleted and the whole write
-    retried; any transient FS error PROPAGATES -- a blanket
-    except-and-proceed here could mistake a committed model for absent
-    and destroy its weights with the overwrite.  After the commit the
-    marker must be visible, or the deployment has success markers
-    disabled and every existence check would misread committed models
-    as stale (same guard as ``minhash_index._assert_marker_visible``)."""
-    from .minhash_index import _marker_committed
-    meta_path = f"{path}/meta"
-    if _marker_committed(spark, meta_path):
-        raise ValueError(
-            f"{kind} already committed at {path}; "
-            f"write to a fresh path or delete it first")
-    jvm = spark._jvm
-    hp = jvm.org.apache.hadoop.fs.Path
-    fs = hp(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hp(meta_path)):
-        fs.delete(hp(meta_path), True)  # torn marker from a mid-write crash
-    weights.write.mode("overwrite").parquet(f"{path}/weights")
-    spark.createDataFrame([tuple(meta_vals)], schema=list(meta_cols)) \
-        .write.mode("errorifexists").parquet(meta_path)
-    if not _marker_committed(spark, meta_path):
-        raise RuntimeError(
-            f"{kind} meta at {meta_path} was written but its _SUCCESS "
-            f"marker is not visible -- this store/committer has success "
-            f"markers disabled "
-            f"(mapreduce.fileoutputcommitter.marksuccessfuljobs=false?), "
-            f"which would make every committed model unreadable to the "
-            f"existence check; re-enable success markers for model paths")
+    """Persist the model: ``weights/`` parquet + a one-row ``meta/``,
+    weights FIRST, meta LAST as the commit marker
+    (:func:`index_store.commit_model`: marker-based existence, torn-meta
+    recovery, transient FS errors propagate)."""
+    commit_model(spark, path, model["weights"], model["meta"], _META_DDL,
+                 "quality model")
 
 
 def read_quality_model(spark: SparkSession, path: str) -> dict:
-    row = spark.read.parquet(f"{path}/meta").first()
-    meta = {c: row[c] for c in _META_COLS}
+    meta = spark.read.parquet(f"{path}/meta").first().asDict()
     meta["dim"] = int(meta["dim"])
     meta["ngram"] = int(meta["ngram"])
     meta["normalize"] = bool(meta["normalize"])

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.quality import DEFAULT_QUALITY_CONFIG, QualityConfig
 from ..functions.udfs import LANG_CODES, REASON_CODES, make_quality_udf, make_scrub_udf
+from ..operators import index_store
 from .checkpoint import resume_filter, write_rows, write_with_lineage
 
 OUTPUT_COLUMNS = [
@@ -489,7 +490,7 @@ def _near_dedup_slice_stage(spark, df, threshold, index_path,
         minhash_near_duplicates_incremental)
 
     conv_scope = scope == "conversation"
-    meta = _try_read_first(spark, f"{index_path}/meta")
+    meta = index_store.read_meta(spark, index_path)
     if meta is None:  # bootstrap slice: plain in-slice near-dedup
         deduped, nd_row, nd_drops = _in_slice_near_dedup(
             df, threshold, conv_scope, "near_dedup_bootstrap")
@@ -501,7 +502,7 @@ def _near_dedup_slice_stage(spark, df, threshold, index_path,
             f"{meta['threshold']}; this run requested {threshold} -- "
             f"rebuild the index or match the threshold")
     expect_gran = "conversation" if conv_scope else "turn"
-    index_gran = meta.asDict().get("granularity", "doc")
+    index_gran = meta.get("granularity", "doc")
     if (index_gran == "group") != conv_scope:
         raise ValueError(
             f"minhash index at {index_path} has granularity "
@@ -634,7 +635,7 @@ def _embedding_dedup_stage(spark, df, threshold, index_path, vec_col,
             f"(pass embedding_col= to name it); input has {df.columns}")
     keyed = df.withColumn("_ek", F.struct("conv_id", "turn_idx"))
     nonnull = keyed.filter(F.col(vec_col).isNotNull())
-    meta = (_try_read_first(spark, f"{index_path}/meta")
+    meta = (index_store.read_meta(spark, index_path)
             if index_path is not None else None)
 
     if meta is None:  # full in-slice dedup (bootstrap or index-less mode)
@@ -1716,12 +1717,12 @@ def run_pipeline(
             # produce deletes that match nothing; harmless.)
             ck_src = None
             if (nd_gate_on and near_dedup_scope == "turn"
-                    and _try_read_first(
-                        spark, f"{near_dedup_index_path}/meta") is not None):
+                    and index_store.committed(
+                        spark, f"{near_dedup_index_path}/meta")):
                 from ..operators.minhash_index import _committed_doc_ids
                 ck_src = _committed_doc_ids(spark, near_dedup_index_path)
-            elif eb_gate_on and _try_read_first(
-                    spark, f"{embedding_index_path}/meta") is not None:
+            elif eb_gate_on and index_store.committed(
+                    spark, f"{embedding_index_path}/meta"):
                 from ..operators.embedding_index import _committed_ids
                 ck_src = _committed_ids(spark, embedding_index_path)
             if ck_src is not None:
@@ -1829,9 +1830,8 @@ def run_pipeline(
                 # keys, so without these probes a re-export rewritten
                 # into a near-copy of a DIFFERENT committed doc (or
                 # conversation) would sail in as its replacement
-                if (nd_gate_on and _try_read_first(
-                        spark, f"{near_dedup_index_path}/meta")
-                        is not None):
+                if nd_gate_on and index_store.committed(
+                        spark, f"{near_dedup_index_path}/meta"):
                     if near_dedup_scope == "turn":
                         from ..operators.minhash_index import (
                             probe_index_near_duplicates)
@@ -1885,8 +1885,8 @@ def run_pipeline(
                                     up_keyed["conv_id"].eqNullSafe(
                                         F.col("_gdrop")),
                                     "left_semi").select("_ck"))
-                if eb_gate_on and _try_read_first(
-                        spark, f"{embedding_index_path}/meta") is not None:
+                if eb_gate_on and index_store.committed(
+                        spark, f"{embedding_index_path}/meta"):
                     from ..operators.embedding_index import (
                         probe_embedding_index_near_duplicates)
                     del_srcs.append(
