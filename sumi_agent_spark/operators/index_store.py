@@ -214,8 +214,8 @@ def resolve_latest_bucket_restricted(
     is normally probe-sized (AQE broadcasts it at runtime), but one
     degenerate hot bucket -- the boilerplate-collision shape the
     callers' ``max_bucket_size`` capping exists to discard downstream
-    -- can make it corpus-scale, and a FORCED broadcast would then OOM
-    the driver.  Without the hint AQE degrades exactly that case to a
+    -- can make it corpus-scale, and a FORCED broadcast would then run
+    out of memory.  Without the hint AQE degrades exactly that case to a
     scalable shuffled semi-join, while the downstream capping window
     still discards the hot bucket with its true membership intact.
     (Pre-capping the bucket membership here instead would count
