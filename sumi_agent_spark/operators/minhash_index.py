@@ -614,7 +614,7 @@ def reindex_groups(
 
     ``grown_df`` must carry each touched conversation's FULL current
     member rows (old + new turns): signatures and shingle sets are
-    recomputed from scratch for exactly the group ids present and
+    recomputed in full for exactly the group ids present and
     committed as epoch N+1 (:func:`index_store.write`:
     ``shingles_e{N+1}``, then ``bands_e{N+1}``, then the append-only
     ``meta_e{N+1}`` marker; a crash before the marker leaves the old

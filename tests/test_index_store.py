@@ -28,7 +28,7 @@ def test_committed_absent_and_torn(spark, tmp_path):
     assert not index_store.committed(spark, f"{absent}/meta")
     assert index_store.read_meta(spark, absent) is None
 
-    # a crash during the meta write: the committer's scratch dir, no marker
+    # a crash during the meta write: the committer's _temporary, no marker
     os.makedirs(f"{torn}/meta/_temporary")
     assert not index_store.committed(spark, f"{torn}/meta")
     assert index_store.read_meta(spark, torn) is None
