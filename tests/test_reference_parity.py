@@ -6,7 +6,9 @@ detection.ts/redaction.ts (type-stripped) over the 18 mock-resume fixtures
 (/root/reference/test-data/mock-resumes/*.txt) plus 21 synthetic probes.
 Here the pure-Python oracle must reproduce every detection (id, type,
 category, value, source, confidence, order) and both masked outputs
-byte-for-byte.
+byte-for-byte.  Each fixture case's ``text`` is the repo's verbatim copy of
+the reference fixture; tests read fixtures from it, never from the reference
+checkout.
 """
 
 import json

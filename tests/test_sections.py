@@ -1,5 +1,8 @@
 """parseSections analog tests (RedactPro.tsx:2991-3033)."""
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from sumi_agent_spark.functions.sections import parse_sections, parse_sections_udf
@@ -33,8 +36,14 @@ def test_parse_sections_label_lines_and_dividers():
 
 
 def test_parse_sections_real_resume():
-    t = open("/root/reference/test-data/mock-resumes/01_職務経歴書_ITエンジニア.txt",
-             encoding="utf-8").read()
+    # the committed golden file holds each mock-resume fixture's text verbatim
+    name = "01_職務経歴書_ITエンジニア.txt"
+    golden = json.loads(
+        (Path(__file__).parent / "golden" / "reference_golden.json").read_text(
+            encoding="utf-8"))
+    case = next((c for c in golden["cases"] if c["name"] == name), None)
+    assert case is not None, f"golden case {name!r} missing from reference_golden.json"
+    t = case["text"]
     secs = parse_sections(t)
     assert len(secs) >= 4
     assert any(s.type == "summary" for s in secs)

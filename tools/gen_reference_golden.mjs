@@ -2,7 +2,9 @@
 // code (type-stripped from /root/reference/src/lib/{detection,redaction}.ts)
 // over the 18 mock-resume fixtures and a set of synthetic probe texts, and
 // writes golden JSON (tests/golden/reference_golden.json) that pytest compares
-// byte-for-byte against the Python oracle.  Run manually:
+// byte-for-byte against the Python oracle.  Each fixture's `text` is the repo's
+// verbatim copy of the reference fixture; tests read fixtures from it, never
+// from the reference checkout.  Run manually:
 //   node tools/gen_reference_golden.mjs
 // The golden file is committed, so CI/pytest never needs node.
 
