@@ -6,6 +6,8 @@ import datetime
 
 import pytest
 
+from sidecar_schemas import EMBDEDUP, schema
+
 TS = datetime.datetime(2025, 1, 1)
 SCHEMA = ("conv_id string, turn_idx int, role string, text string, "
           "tool string, ts timestamp, embedding array<float>")
@@ -45,6 +47,7 @@ def test_embedding_dedup_in_slice(spark, tmp_path):
     assert stats["n_embedding_dup_dropped"] == 1
     side = spark.read.parquet(out + "/_lineage_embdedup").toPandas()
     assert side.iloc[0]["stage"] == "embedding_dedup"
+    assert schema(out + "/_lineage_embdedup") == EMBDEDUP
     assert int(side.iloc[0]["n_dropped"]) == 1
 
 
@@ -84,6 +87,7 @@ def test_run_pipeline_embedding_index_slices(spark, tmp_path):
     side1 = spark.read.parquet(
         str(tmp_path / "out1") + "/_lineage_embdedup").toPandas()
     assert side1.iloc[0]["stage"] == "embedding_dedup_bootstrap"
+    assert schema(str(tmp_path / "out1") + "/_lineage_embdedup") == EMBDEDUP
     meta = spark.read.parquet(f"{idx}/meta").first()
     assert meta["threshold"] == 0.95
     # index holds exactly the kept rows (a0, c0)
@@ -103,6 +107,7 @@ def test_run_pipeline_embedding_index_slices(spark, tmp_path):
     side2 = spark.read.parquet(
         str(tmp_path / "out2") + "/_lineage_embdedup").toPandas()
     assert side2.iloc[0]["stage"] == "embedding_dedup_incremental"
+    assert schema(str(tmp_path / "out2") + "/_lineage_embdedup") == EMBDEDUP
     got2 = set(spark.read.parquet(str(tmp_path / "out2"))
                .toPandas()["conv_id"])
     assert got2 == {"e"}

@@ -9,6 +9,7 @@ import os
 
 import pytest
 
+from sidecar_schemas import REINDEX, UPSERT, changed_upsert, schema
 from sumi_agent_spark.plans.pipeline import run_pipeline
 
 TS = datetime.datetime(2025, 1, 1)
@@ -63,6 +64,7 @@ def test_doc_reindex_changed_end_to_end(spark, tmp_path):
     assert ri.iloc[0]["stage"] == "near_dedup_reindex"
     assert int(ri.iloc[0]["n_keys"]) == 1
     assert int(ri.iloc[0]["epoch"]) == 1
+    assert schema(f"{tmp_path}/out2/_lineage_reindex") == REINDEX
 
     # completed-slice re-run: content already reindexed -> no epoch 2
     s2b = run_pipeline(spark, str(tmp_path / "s2.parquet"),
@@ -190,6 +192,9 @@ def test_changed_upsert_sidecar(spark, tmp_path):
     lu = spark.read.parquet(f"{tmp_path}/out2/_lineage_upsert").toPandas()
     assert int(lu.iloc[0]["n_upsert"]) == 1
     assert int(lu.iloc[0]["n_delete"]) == 1
+    assert schema(f"{tmp_path}/out2/_lineage_upsert") == UPSERT
+    assert schema(f"{tmp_path}/out2/_changed_upsert") == changed_upsert(
+        f"{tmp_path}/s2.parquet")
 
     # converged re-run: no changed keys -> no upsert sidecar at all
     run_pipeline(spark, str(tmp_path / "s2.parquet"),

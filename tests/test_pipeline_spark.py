@@ -10,6 +10,7 @@ Here both sides derive from the same oracle code, so equality must be exact
 import pandas as pd
 import pytest
 
+from sidecar_schemas import NEARDUP, schema
 from sumi_agent_spark.functions.oracle import scrub_text
 from sumi_agent_spark.functions.quality import quality_frame
 from sumi_agent_spark.plans.pipeline import (
@@ -619,6 +620,7 @@ def test_run_pipeline_conversation_incremental_index(spark, tmp_path):
     assert s1["n_near_dup_dropped"] == 0
     meta = spark.read.parquet(f"{idx}/meta").first()
     assert meta["granularity"] == "group"
+    assert schema(f"{tmp_path}/out1/_lineage_neardup") == NEARDUP
 
     # slice 2: conv b ~ corpus conv a (plus a unique closing turn that
     # per-turn scope would keep); conv c is novel
@@ -636,6 +638,7 @@ def test_run_pipeline_conversation_incremental_index(spark, tmp_path):
     assert set(got["conv_id"]) == {"c"}
     nd = spark.read.parquet(f"{tmp_path}/out2/_lineage_neardup").toPandas()
     assert nd.iloc[0]["stage"] == "near_dedup_incremental"
+    assert schema(f"{tmp_path}/out2/_lineage_neardup") == NEARDUP
 
     # slice 3: conv d ~ slice 2's KEPT conv c -> proves the grouped append
     _write_turns([_turn("d", 0, "entirely unrelated material about "
@@ -674,6 +677,7 @@ def test_run_pipeline_incremental_index_slices(spark, tmp_path):
     assert s1["n_near_dup_dropped"] == 1
     nd1 = spark.read.parquet(f"{tmp_path}/out1/_lineage_neardup").toPandas()
     assert nd1.iloc[0]["stage"] == "near_dedup_bootstrap"
+    assert schema(f"{tmp_path}/out1/_lineage_neardup") == NEARDUP
     assert spark.read.parquet(f"{idx}/meta").first()["threshold"] == 0.6
 
     # slice 2: near-dup of corpus a0, an internal pair (d keeps, e drops),
@@ -690,6 +694,7 @@ def test_run_pipeline_incremental_index_slices(spark, tmp_path):
                       near_dedup_index_path=idx)
     nd2 = spark.read.parquet(f"{tmp_path}/out2/_lineage_neardup").toPandas()
     assert nd2.iloc[0]["stage"] == "near_dedup_incremental"
+    assert schema(f"{tmp_path}/out2/_lineage_neardup") == NEARDUP
     got2 = set(spark.read.parquet(f"{tmp_path}/out2").toPandas()["conv_id"])
     # d near-dups corpus c0 -> dropped (corpus wins); e drops (in-slice or
     # corpus); g drops vs corpus a0; f survives

@@ -10,6 +10,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from sidecar_schemas import REINDEX, UPSERT, changed_upsert, schema
 from sumi_agent_spark.plans.pipeline import run_pipeline
 
 TS = datetime.datetime(2025, 1, 1)
@@ -64,6 +65,9 @@ def test_replacement_near_dup_of_other_committed_doc_deletes(
     lu = spark.read.parquet(f"{tmp_path}/out2/_lineage_upsert").toPandas()
     assert int(lu.iloc[0]["n_delete"]) == 1
     assert int(lu.iloc[0]["n_upsert"]) == 0
+    assert schema(f"{tmp_path}/out2/_lineage_upsert") == UPSERT
+    assert schema(f"{tmp_path}/out2/_changed_upsert") == changed_upsert(
+        f"{tmp_path}/s2.parquet")
 
     # a replacement resembling its OWN old content is NOT a duplicate
     _write_turns([_turn("a", 0, BASE.replace("lazy", "idle"))],
@@ -192,6 +196,9 @@ def test_conv_scope_decontam_drops_siblings_and_retro_deletes(
     # committed clean sibling (key-only row)
     assert acts[0] == "delete" and acts[1] == "delete"
     assert up[up["turn_idx"] == 1]["masked_text"].isna().all()
+    # key-only retro deletes leave the column set and types unchanged
+    assert schema(f"{tmp_path}/out2/_changed_upsert") == changed_upsert(
+        f"{tmp_path}/s2.parquet")
 
 
 def test_toxicity_delete_flag_evaluated_pre_scrub(spark, tmp_path):
@@ -290,6 +297,7 @@ def test_both_gates_changed_text_and_embedding_reindexes_both(
     assert emb_meta(spark, emb_idx)["epoch"] == 1
     ri = spark.read.parquet(f"{tmp_path}/out2/_lineage_reindex").toPandas()
     assert set(ri["stage"]) == {"near_dedup_reindex", "embedding_reindex"}
+    assert schema(f"{tmp_path}/out2/_lineage_reindex") == REINDEX
     # one sidecar row for the key, not one per source
     up = spark.read.parquet(f"{tmp_path}/out2/_changed_upsert").toPandas()
     assert len(up) == 1 and up.iloc[0]["_action"] == "upsert"
