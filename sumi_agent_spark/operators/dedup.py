@@ -813,23 +813,6 @@ def minhash_grouped_bucket_audit(
     return bucket_cap_stats(sizes, max_bucket_size)
 
 
-def brute_force_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str,
-    threshold: float = 0.8, shingle_k: int = 5,
-) -> DataFrame:
-    """Exact all-pairs Jaccard (the small-data oracle for LSH recall tests).
-
-    O(n^2) cross join -- only for validation scales."""
-    jac = make_jaccard_udf(shingle_k)
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    a = base.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
-    b = base.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
-    return (a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("jaccard", jac("text_a", "text_b"))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-
-
 # ─── SimHash ───
 
 _FNV_VEC_MAXLEN = 256  # pad-matrix cutoff: beyond this, scalar FNV wins
@@ -1034,6 +1017,23 @@ def cosine_cols(va, vb) -> F.Column:
             F.lit(0.0), lambda acc, x: acc + x))
 
     return dot / (nrm(va) * nrm(vb))
+
+
+def embedding_bucket_audit(
+    df: DataFrame, id_col: str, vec_col: str, n_planes: int = 16,
+    max_bucket_size: int = EMB_MAX_BUCKET_SIZE,
+) -> dict:
+    """:func:`minhash_bucket_audit` for :func:`embedding_near_duplicates`:
+    the exact capping report for the SAME hyperplane bucketing, for when
+    the observe-based counter was pruned by a zero-pair run.  ``df``
+    holds non-NULL vectors only (at least one: the first pins the dim);
+    ``id_col`` is unused (bucket sizes need no key) and keeps the audit
+    signature of the MinHash family."""
+    dim = df.select(F.size(vec_col).alias("d")).first()["d"]
+    bucket = make_hyperplane_bucket_udf(n_planes, dim)
+    sizes = (df.select(bucket(F.col(vec_col)).alias("bkt"))
+             .groupBy("bkt").agg(F.count("*").alias("n")))
+    return bucket_cap_stats(sizes, max_bucket_size)
 
 
 def embedding_near_duplicates(

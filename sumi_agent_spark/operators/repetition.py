@@ -324,63 +324,6 @@ def repetition_keep_condition(
     return cond
 
 
-def _py_repetition_metrics(
-    text: str | None,
-    top_ns: tuple[int, ...],
-    dup_ns: tuple[int, ...],
-) -> dict[str, float]:
-    """Pure-Python replica of :func:`repetition_stats` for ONE document
-    -- the parity reference the tests pin against the batch kernel (no
-    pipeline path runs it).  Exactness notes: counters are
-    exact ints and each metric is one float division, identical to the
-    JVM's double division; rounding replicates Spark's
-    ``F.round(x, 6)`` exactly via the shared :func:`_r6`
-    (``BigDecimal.valueOf`` = HALF_UP over the shortest decimal repr;
-    see its docstring for why neither ``Decimal(x)`` nor the banker's
-    ``round`` builtin is equivalent); string ties compare by code
-    point, which equals the JVM's binary UTF-8 collation order."""
-    import re as _re
-    from collections import Counter
-
-    r6 = _r6
-
-    text = text or ""
-    total = len(text)
-    out: dict[str, float] = {}
-    for prefix, pattern in (("dup_line", LINE_SPLIT),
-                            ("dup_para", PARA_SPLIT)):
-        units = [u for u in _re.split(pattern, text) if u != ""]
-        c = Counter(units)
-        n = sum(c.values())
-        nd = sum(v for v in c.values() if v >= 2)
-        ch = sum(v * len(u) for u, v in c.items())
-        chd = sum(v * len(u) for u, v in c.items() if v >= 2)
-        out[f"{prefix}_frac"] = r6(nd / n) if n > 0 else 0.0
-        out[f"{prefix}_char_frac"] = r6(chd / ch) if ch > 0 else 0.0
-    toks = [t for t in _re.split(WS_CLASS, text) if t != ""]
-    for n in top_ns:
-        grams = [" ".join(toks[i:i + n])
-                 for i in range(len(toks) - n + 1)]
-        c = Counter(grams)
-        if not c:
-            out[f"top{n}_char_frac"] = 0.0
-            continue
-        c_top = max(c.values())
-        if total <= 0 or c_top < 2:
-            out[f"top{n}_char_frac"] = 0.0
-            continue
-        g = min(g for g, v in c.items() if v == c_top)
-        out[f"top{n}_char_frac"] = r6(min(1.0, c_top * len(g) / total))
-    for n in dup_ns:
-        grams = [" ".join(toks[i:i + n])
-                 for i in range(len(toks) - n + 1)]
-        c = Counter(grams)
-        dch = sum(v * len(g) for g, v in c.items() if v >= 2)
-        out[f"dup{n}_char_frac"] = (
-            r6(min(1.0, dch / total)) if total > 0 and dch > 0 else 0.0)
-    return out
-
-
 def _keep_gram_sizes(
     thresholds: dict[str, float],
 ) -> tuple[tuple[int, ...], tuple[int, ...]]:

@@ -263,6 +263,28 @@ def near_deduplicate_conversations(
     return deduped, drops
 
 
+def near_deduplicate_embeddings(
+    df: DataFrame, threshold: float = 0.95, vec_col: str = "embedding",
+    observation=None, n_planes: int = 16,
+) -> tuple[DataFrame, DataFrame]:
+    """Embedding near-dedup for turns: drop every turn whose ``vec_col``
+    cosine >= ``threshold`` matches an earlier turn in ``(conv_id,
+    turn_idx)`` order (:func:`operators.dedup.embedding_near_duplicates`,
+    same ``(conv_id, turn_idx)`` struct key and keep-first pair-drop
+    policy as :func:`near_deduplicate_turns`).  Rows with a NULL
+    embedding have nothing to compare: they are never flagged and pass
+    through.  Returns ``(deduped, drops)``; persist + count ``drops``
+    before consuming ``deduped``, as there."""
+    from ..operators.dedup import embedding_near_duplicates
+
+    keyed = df.withColumn("_ek", F.struct("conv_id", "turn_idx"))
+    pairs = embedding_near_duplicates(
+        keyed.filter(F.col(vec_col).isNotNull()), "_ek", vec_col,
+        threshold=threshold, n_planes=n_planes, observation=observation)
+    drops = pairs.select(F.col("id_b").alias("_ek")).distinct()
+    return keyed.join(drops, "_ek", "left_anti").drop("_ek"), drops
+
+
 def conversation_stats(df: DataFrame, salt: int = 16) -> DataFrame:
     """Per-conversation keep/drop/mask counters with two-phase salted agg."""
     partial = (
@@ -343,33 +365,182 @@ def _try_read_first(spark: SparkSession, path: str):
 _ND_CAP_KEYS = ("n_capped_rows", "n_capped_buckets", "max_bucket_n")
 
 
-def _nd_row(stage, n_dropped, m, metrics_observed, n_pre=0,
+class IndexFamily(NamedTuple):
+    """One near-dedup family of :func:`run_pipeline` and its persisted
+    index: turn MinHash, conversation MinHash or turn embedding.
+
+    ``key`` is the column the operators key on: the ``(conv_id,
+    turn_idx)`` struct :meth:`keyed` attaches, or ``conv_id`` itself for
+    a conversation (group) index.  ``value`` is the column they read.
+    The operators share the call shape ``(df, key, value, ...)`` of
+    ``operators/minhash_index.py`` and ``operators/embedding_index.py``,
+    index operators taking the index path next: ``near(df, threshold=,
+    observation=)`` is the in-slice dedup returning ``(deduped, drops)``
+    and ``slice_audit`` its zero-pair bucket recount; ``committed``,
+    ``changed``, ``pairs``, ``audit``, ``create``, ``append``,
+    ``reindex`` and ``probe`` run against the index.  What differs by
+    family beyond the operators is data:
+
+    * ``nullable``: NULL values pass through, a slice without any value
+      writes a zero in-slice row without running dedup, and a create
+      needs at least one non-NULL value (embeddings);
+    * ``resumable``: an index-less run goes through
+      :func:`_near_dedup_full_stage` and its resume drop-set reuse, and
+      lineage rows carry ``drop_set_reused`` (MinHash);
+    * ``missing``: the error text for an input without ``value``;
+    * a conversation index counts ``n_preindexed_changed`` in turn rows,
+      probes replacements as whole conversations and cannot enumerate
+      turn keys for retro-deletes (:attr:`group`)."""
+    name: str
+    stage: str
+    reindex_stage: str
+    sidecar: str
+    stats: tuple
+    key: str
+    value: str
+    path: Optional[str]
+    threshold: float
+    near: Callable
+    slice_audit: Callable
+    committed: Callable
+    changed: Callable
+    pairs: Callable
+    audit: Callable
+    create: Callable
+    append: Callable
+    reindex: Callable
+    probe: Callable
+    nullable: bool = False
+    resumable: bool = False
+    missing: Optional[str] = None
+
+    @property
+    def group(self) -> bool:
+        return self.key == "conv_id"
+
+    def keyed(self, df: DataFrame) -> DataFrame:
+        return (df if self.group
+                else df.withColumn(self.key, F.struct("conv_id", "turn_idx")))
+
+    def unkeyed(self, df: DataFrame) -> DataFrame:
+        return df if self.group else df.drop(self.key)
+
+    def values(self, keyed: DataFrame) -> DataFrame:
+        return (keyed.filter(F.col(self.value).isNotNull()) if self.nullable
+                else keyed)
+
+
+def _index_families(near_dedup_threshold, near_dedup_index_path,
+                    near_dedup_scope, embedding_dedup_threshold,
+                    embedding_index_path, embedding_col,
+                    embedding_n_planes) -> list[IndexFamily]:
+    """The configured near-dedup families in gate order: MinHash first,
+    so the embedding gate sees its survivors."""
+    from functools import partial
+
+    from ..operators import dedup
+
+    fams = []
+    if near_dedup_threshold is not None:
+        from ..operators import minhash_index as mi
+        if near_dedup_scope not in ("turn", "conversation"):
+            raise ValueError(
+                f"near_dedup_scope must be 'turn' or 'conversation', "
+                f"got {near_dedup_scope!r}")
+        thr = float(near_dedup_threshold)
+        fam = IndexFamily(
+            name="minhash", stage="near_dedup",
+            reindex_stage="near_dedup_reindex", sidecar="_lineage_neardup",
+            stats=(("n_near_dup_dropped", "n_dropped"),
+                   ("n_capped_buckets", "n_capped_buckets"),
+                   ("n_preindexed_rows_dropped", "n_preindexed_rows_dropped"),
+                   ("n_preindexed_changed", "n_preindexed_changed")),
+            key="_nk", value="text", path=near_dedup_index_path,
+            threshold=thr, near=near_deduplicate_turns,
+            slice_audit=partial(dedup.minhash_bucket_audit, threshold=thr),
+            committed=mi._committed_doc_ids,
+            changed=mi.changed_preindexed_ids,
+            pairs=mi.minhash_near_duplicates_incremental,
+            audit=mi.minhash_index_bucket_audit,
+            create=partial(mi.write_minhash_index, threshold=thr),
+            append=mi.append_to_minhash_index, reindex=mi.reindex_docs,
+            probe=mi.probe_index_near_duplicates, resumable=True)
+        if near_dedup_scope == "conversation":
+            fam = fam._replace(
+                key="conv_id", near=near_deduplicate_conversations,
+                slice_audit=partial(dedup.minhash_grouped_bucket_audit,
+                                    threshold=thr),
+                committed=mi.committed_group_ids,
+                changed=mi.changed_preindexed_gids,
+                pairs=mi.minhash_near_duplicates_grouped_incremental,
+                audit=mi.minhash_grouped_index_bucket_audit,
+                create=partial(mi.write_grouped_minhash_index,
+                               threshold=thr),
+                append=mi.append_grouped_to_minhash_index,
+                reindex=mi.reindex_groups,
+                probe=mi.probe_grouped_index_near_duplicates)
+        fams.append(fam)
+    if embedding_dedup_threshold is not None:
+        from ..operators import embedding_index as ei
+        thr, planes = float(embedding_dedup_threshold), int(embedding_n_planes)
+        fams.append(IndexFamily(
+            name="embedding", stage="embedding_dedup",
+            reindex_stage="embedding_reindex", sidecar="_lineage_embdedup",
+            stats=(("n_embedding_dup_dropped", "n_dropped"),
+                   ("n_emb_preindexed_rows_dropped",
+                    "n_preindexed_rows_dropped"),
+                   ("n_emb_preindexed_changed", "n_preindexed_changed")),
+            key="_ek", value=embedding_col, path=embedding_index_path,
+            threshold=thr,
+            near=partial(near_deduplicate_embeddings, vec_col=embedding_col,
+                         n_planes=planes),
+            slice_audit=partial(dedup.embedding_bucket_audit,
+                                n_planes=planes),
+            committed=ei._committed_ids, changed=ei.changed_preindexed_ids,
+            pairs=ei.embedding_near_duplicates_incremental,
+            audit=ei.embedding_index_bucket_audit,
+            create=partial(ei.write_embedding_index, threshold=thr,
+                           n_planes=planes),
+            append=ei.append_to_embedding_index,
+            reindex=ei.reindex_embeddings,
+            probe=ei.probe_embedding_index_near_duplicates, nullable=True,
+            missing=("embedding dedup requires a {!r} column in the input "
+                     "(pass embedding_col= to name it); input has {}")))
+    return fams
+
+
+def _nd_row(fam, stage, n_dropped, m, metrics_observed, n_pre=0,
             n_pre_changed=0, reused=False) -> dict:
-    """One ``_lineage_neardup`` row (``m``: the capped-bucket metrics)."""
-    return {"stage": stage, "n_dropped": n_dropped,
-            "n_preindexed_rows_dropped": n_pre,
-            "n_preindexed_changed": n_pre_changed,
-            **{k: m[k] for k in _ND_CAP_KEYS},
-            "metrics_observed": metrics_observed,
-            "drop_set_reused": reused}
+    """One lineage row of ``fam``'s sidecar (``m``: the capped-bucket
+    metrics)."""
+    row = {"stage": stage, "n_dropped": n_dropped,
+           "n_preindexed_rows_dropped": n_pre,
+           "n_preindexed_changed": n_pre_changed,
+           **{k: m[k] for k in _ND_CAP_KEYS},
+           "metrics_observed": metrics_observed}
+    if fam.resumable:
+        row["drop_set_reused"] = reused
+    return row
 
 
-def _in_slice_near_dedup(df, threshold, conv_scope, stage_name):
-    """Full in-slice MinHash near-dedup at turn or conversation scope:
-    the input-wide pass of :func:`_near_dedup_full_stage` and the
-    bootstrap slice of :func:`_near_dedup_slice_stage`.  The drop set is
-    persisted and counted here (fires the capping observation, pins the
-    set for the write).  Returns ``(deduped, nd_row, nd_drops)``."""
+def _in_slice_near_dedup(df, fam, stage_name):
+    """Full in-slice near-dedup of ``fam``: the input-wide pass of
+    :func:`_near_dedup_full_stage`, the bootstrap slice of
+    :func:`_index_dedup_stage` and index-less embedding dedup.  The drop
+    set is persisted and counted here (fires the capping observation,
+    pins the set for the write).  Returns ``(deduped, nd_row,
+    nd_drops_or_None)``."""
     from pyspark.sql import Observation
 
-    from ..operators.dedup import (
-        capped_bucket_metrics, minhash_bucket_audit,
-        minhash_grouped_bucket_audit)
+    from ..operators.dedup import capped_bucket_metrics
 
-    nd_obs = Observation("near_dedup_capping")
-    near = (near_deduplicate_conversations if conv_scope
-            else near_deduplicate_turns)
-    deduped, nd_drops = near(df, threshold=threshold, observation=nd_obs)
+    values = fam.values(fam.keyed(df))
+    if fam.nullable and values.isEmpty():  # nothing to compare
+        return df, _nd_row(fam, stage_name, 0, dict.fromkeys(_ND_CAP_KEYS, 0),
+                           False), None
+    nd_obs = Observation(f"{fam.stage}_capping")
+    deduped, nd_drops = fam.near(df, threshold=fam.threshold,
+                                 observation=nd_obs)
     nd_drops.persist()
     n_nd = nd_drops.count()  # fires the observation; pins the drop set
     m = capped_bucket_metrics(nd_obs)
@@ -381,24 +552,17 @@ def _in_slice_near_dedup(df, threshold, conv_scope, stage_name):
         # here would lie in exactly the pathological run this counter
         # exists to surface.  Recount exactly with one dedicated audit
         # job (rare path only; the hot path stays zero-extra-scan).
-        if conv_scope:
-            m = minhash_grouped_bucket_audit(
-                df, "conv_id", "text", threshold=threshold)
-        else:
-            m = minhash_bucket_audit(
-                df.withColumn("_nk", F.struct("conv_id", "turn_idx")),
-                "_nk", "text", threshold=threshold)
-    return deduped, _nd_row(stage_name, n_nd, m, metrics_observed), nd_drops
+        m = fam.slice_audit(values, fam.key, fam.value)
+    return (deduped, _nd_row(fam, stage_name, n_nd, m, metrics_observed),
+            nd_drops)
 
 
-def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
-                           scope="turn"):
+def _near_dedup_full_stage(spark, df, fam, output_path, resume):
     """Full-input MinHash near-dedup with a persisted drop-set sidecar.
 
-    ``scope`` picks the dedup granularity: ``"turn"`` drops individual
-    near-duplicate turns (:func:`near_deduplicate_turns`),
-    ``"conversation"`` drops whole near-duplicate conversations
-    (:func:`near_deduplicate_conversations`).
+    ``fam`` is the MinHash family: a conversation family drops whole
+    near-duplicate conversations (:func:`near_deduplicate_conversations`),
+    a turn family individual turns (:func:`near_deduplicate_turns`).
 
     The winner set is a deterministic function of (input, threshold,
     scope), so the first run persists the computed drop KEYS to
@@ -410,7 +574,9 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
     between runs) falls back to full recompute: correctness never depends
     on the reuse.  Returns (deduped_df, lineage_row,
     drops_to_unpersist_or_None)."""
-    conv_scope = scope == "conversation"
+    conv_scope = fam.group
+    scope = "conversation" if conv_scope else "turn"
+    threshold = fam.threshold
     key_cols = ["conv_id"] if conv_scope else ["conv_id", "turn_idx"]
     stage_name = "near_dedup_conversations" if conv_scope else "near_dedup"
     drops_path = f"{output_path}/_neardup_drops"
@@ -428,13 +594,12 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
                 if n_nd > 0:  # empty drop sets are meta-only (no parquet)
                     done = spark.read.parquet(drops_path)
                     df = df.join(done, key_cols, "left_anti")
-                nd_row = _nd_row(stage_name, n_nd,
+                nd_row = _nd_row(fam, stage_name, n_nd,
                                  {k: int(meta[k]) for k in _ND_CAP_KEYS},
                                  False, reused=True)
                 return df, nd_row, None
 
-    deduped, nd_row, nd_drops = _in_slice_near_dedup(
-        df, threshold, conv_scope, stage_name)
+    deduped, nd_row, nd_drops = _in_slice_near_dedup(df, fam, stage_name)
     n_nd = nd_row["n_dropped"]
     # persist the drop set + input fingerprint BEFORE the main write so a
     # crashed run's restart can reuse it (drops first, meta last: meta's
@@ -456,279 +621,130 @@ def _near_dedup_full_stage(spark, df, threshold, output_path, resume,
     return deduped, nd_row, nd_drops
 
 
-def _near_dedup_slice_stage(spark, df, threshold, index_path,
-                            scope="turn", collect_changed=False):
-    """Daily-ingest near-dedup: LSH-join the slice against a persisted
-    MinHash index (operators/minhash_index.py) instead of recomputing the
-    corpus -- O(slice + matched buckets), never O(corpus), never old-vs-old.
-    ``scope="turn"`` dedups individual turns against a doc-granularity
-    index; ``scope="conversation"`` dedups whole conversations against a
-    group-granularity index (union-of-turn shingle sets; conversations are
-    closed per slice -- see operators/minhash_index.py).
+def _index_dedup_stage(spark, df, fam, collect_changed=False,
+                       probe_df=None):
+    """Daily-ingest near-dedup of one slice against ``fam``'s persisted
+    index -- O(slice + matched buckets), never O(corpus), never
+    old-vs-old (``operators/minhash_index.py``,
+    ``operators/embedding_index.py``).
 
-    First run (no index at the path) bootstraps: full in-slice near-dedup;
-    run_pipeline then CREATES the index from the kept turns after the main
-    write.  Subsequent runs drop the new side of every corpus match plus
-    the later key of in-slice pairs, and run_pipeline APPENDS the kept
-    turns to the index after the write (append-last: a crash anywhere
-    leaves the index in its pre-slice state, so a resumed run recomputes
-    the same drops against the same index).  Returns
-    (deduped_df, lineage_row, drops_to_unpersist_or_None, index_action,
-    changed_rows_or_None) where index_action is
-    ("create"|"append", kept_df) and changed_rows -- populated only when
-    ``collect_changed`` and changed pre-indexed re-exports exist -- is
-    the PERSISTED slice rows of those keys' CURRENT content, for
-    ``run_pipeline``'s post-write ``reindex_changed`` stage (the caller
-    unpersists it in its finally block)."""
+    First run (no index at ``fam.path``) bootstraps: full in-slice
+    dedup, and ``run_pipeline`` CREATES the index from the kept rows
+    after the main write; an embedding family without an index path
+    stops at the in-slice dedup.  Later runs drop the new side of every
+    corpus match plus the later key of in-slice pairs (corpus wins,
+    keep-first), and ``run_pipeline`` APPENDS the kept rows after the
+    write (append-last: a crash anywhere leaves the index in its
+    pre-slice state, so a resumed run recomputes the same drops against
+    the same index).  Slice rows whose key is ALREADY committed are
+    corpus re-exports (a completed slice re-run, a partially re-exported
+    dump): they drop too, counted in ``n_preindexed_rows_dropped``, and
+    those whose content differs from the indexed state are counted in
+    ``n_preindexed_changed``.
+
+    Returns ``(deduped, lineage_row, drops_or_None, index_action_or_None,
+    changed_rows_or_None)``: ``index_action`` is ``("create"|"append",
+    kept)``; ``changed_rows`` -- only under ``collect_changed`` and when
+    changed re-exports exist -- is the PERSISTED keyed slice rows of
+    those keys' current content, for the post-write reindex (the caller
+    unpersists it).  ``probe_df``, the slice before an earlier index gate
+    anti-joined ITS committed keys, scopes the changed-re-export
+    detection and only it: a key committed to both indexes whose text
+    AND embedding changed is dropped by the earlier gate, and probing
+    only this stage's input would freeze its stale value here."""
     from pyspark.sql import Observation
 
     from ..operators.dedup import capped_bucket_metrics
-    from ..operators.minhash_index import (
-        incremental_drop_keys, minhash_grouped_index_bucket_audit,
-        minhash_index_bucket_audit,
-        minhash_near_duplicates_grouped_incremental,
-        minhash_near_duplicates_incremental)
-
-    conv_scope = scope == "conversation"
-    meta = index_store.read_meta(spark, index_path)
-    if meta is None:  # bootstrap slice: plain in-slice near-dedup
-        deduped, nd_row, nd_drops = _in_slice_near_dedup(
-            df, threshold, conv_scope, "near_dedup_bootstrap")
-        return deduped, nd_row, nd_drops, ("create", deduped), None
-
-    if abs(float(meta["threshold"]) - threshold) > 1e-12:
-        raise ValueError(
-            f"minhash index at {index_path} was built with threshold "
-            f"{meta['threshold']}; this run requested {threshold} -- "
-            f"rebuild the index or match the threshold")
-    expect_gran = "conversation" if conv_scope else "turn"
-    index_gran = meta.get("granularity", "doc")
-    if (index_gran == "group") != conv_scope:
-        raise ValueError(
-            f"minhash index at {index_path} has granularity "
-            f"{index_gran!r} but this run requested "
-            f"near-dedup scope {expect_gran!r} -- scope and index "
-            f"granularity must match")
-    # Slice rows whose key is ALREADY committed to the index are corpus
-    # re-exports (a completed slice re-run, a partially re-exported dump):
-    # emitting them would duplicate already-ingested content, so they are
-    # DROPPED here -- with their own lineage counter, never silently (the
-    # operators' committed filter only excludes them from pair
-    # computation; without this gate they would pass straight to output).
-    from ..operators.minhash_index import (
-        _committed_doc_ids, changed_preindexed_gids, changed_preindexed_ids,
-        committed_group_ids)
-    nd_obs = Observation("near_dedup_capping")
-    n_pre_changed = 0
-    changed_rows = None
-    if conv_scope:
-        committed = (committed_group_ids(spark, index_path)
-                     .withColumnRenamed("gid", "conv_id"))
-        n_pre = df.join(committed, "conv_id", "left_semi").count()
-        if n_pre:  # split identical vs CHANGED re-exports (reindex needed)
-            # counted in TURN ROWS like its n_preindexed_rows_dropped
-            # sibling (one lineage column, one unit) -- the changed-gid
-            # set itself is tiny, the join is a broadcast-sized semi
-            changed_gids = (changed_preindexed_gids(
-                df, "conv_id", "text", index_path)
-                .withColumnRenamed("gid", "conv_id"))
-            n_pre_changed = df.join(F.broadcast(changed_gids), "conv_id",
-                                    "left_semi").count()
-            if collect_changed and n_pre_changed:
-                # each changed conversation's slice rows -- its FULL
-                # current member set under the closed-per-slice
-                # convention reindex_groups requires.  Persisted: the
-                # post-write reindex consumes it several times (two
-                # store writes + the key count) and must see the exact
-                # rows this gate counted, not a re-planned probe
-                changed_rows = df.join(F.broadcast(changed_gids),
-                                       "conv_id", "left_semi").persist()
-        pairs = minhash_near_duplicates_grouped_incremental(
-            df, "conv_id", "text", index_path, observation=nd_obs)
-        drops = (incremental_drop_keys(pairs)
-                 .withColumnRenamed("doc_id", "conv_id"))
-        drops.persist()
-        n_nd = drops.count()  # fires the observation; pins the drop set
-        m = capped_bucket_metrics(nd_obs)
-        metrics_observed = m is not None
-        if m is None:
-            m = minhash_grouped_index_bucket_audit(
-                df, "conv_id", "text", index_path)
-        deduped = (df.join(drops, "conv_id", "left_anti")
-                   .join(committed, "conv_id", "left_anti"))
-    else:
-        keyed = df.withColumn("_nk", F.struct("conv_id", "turn_idx"))
-        committed = (_committed_doc_ids(spark, index_path)
-                     .withColumnRenamed("doc_id", "_nk"))
-        n_pre = keyed.join(committed, "_nk", "left_semi").count()
-        if n_pre:  # split identical vs CHANGED re-exports (reindex needed)
-            changed_ids = (changed_preindexed_ids(
-                keyed, "_nk", "text", index_path)
-                .withColumnRenamed("doc_id", "_nk"))
-            n_pre_changed = changed_ids.count()
-            if collect_changed and n_pre_changed:
-                # persisted for the same reason as the grouped branch
-                changed_rows = keyed.join(F.broadcast(changed_ids),
-                                          "_nk", "left_semi").persist()
-        pairs = minhash_near_duplicates_incremental(
-            keyed, "_nk", "text", index_path, observation=nd_obs)
-        drops = (incremental_drop_keys(pairs)
-                 .withColumnRenamed("doc_id", "_nk"))
-        drops.persist()
-        n_nd = drops.count()  # fires the observation; pins the drop set
-        m = capped_bucket_metrics(nd_obs)
-        metrics_observed = m is not None
-        if m is None:
-            m = minhash_index_bucket_audit(keyed, "_nk", "text", index_path)
-        deduped = (keyed.join(drops, "_nk", "left_anti")
-                   .join(committed, "_nk", "left_anti").drop("_nk"))
-    nd_row = _nd_row("near_dedup_incremental", n_nd, m, metrics_observed,
-                     n_pre=n_pre, n_pre_changed=n_pre_changed)
-    return deduped, nd_row, drops, ("append", deduped), changed_rows
-
-
-def _embedding_dedup_stage(spark, df, threshold, index_path, vec_col,
-                           n_planes, collect_changed=False,
-                           changed_probe_df=None):
-    """Embedding near-dedup keyed on the ``(conv_id, turn_idx)`` struct --
-    the embedding analog of :func:`_near_dedup_slice_stage`, for corpora
-    that ship precomputed turn embeddings.
-
-    ``index_path=None`` runs plain in-slice dedup (keep-first by key, the
-    earlier turn of every cos >= threshold pair wins).  With an index
-    path: first run bootstraps (in-slice dedup; ``run_pipeline`` creates
-    the index from the kept rows after the main write), later runs join
-    the slice against the persisted hyperplane index
-    (operators/embedding_index.py) -- corpus-wins on mixed pairs,
-    keep-first on slice pairs, pre-indexed re-export keys dropped with
-    their own counter, O(slice + matched buckets) per run.
-
-    Rows with a NULL embedding can never be flagged (they have nothing to
-    compare) and pass through; the index stores only non-null vectors.
-    Returns (deduped_df, lineage_row, drops_to_unpersist_or_None,
-    index_action_or_None, changed_rows_or_None) with index_action =
-    ("create"|"append", kept); changed_rows mirrors
-    :func:`_near_dedup_slice_stage`'s contract (slice rows of changed
-    pre-indexed keys, only under ``collect_changed``).
-
-    ``changed_probe_df``: when the MinHash gate runs FIRST, it anti-joins
-    its own committed keys out of this stage's input -- so a key
-    committed to BOTH indexes whose re-export changed text AND embedding
-    would never be seen here, and its stale vector would anchor the
-    embedding index forever while the text side got reindexed.  Passing
-    the pre-MinHash-gate rows here scopes the changed-re-export DETECTION
-    (and only it) to the full slice; the dedup anti-joins and the
-    ``n_preindexed_rows_dropped`` counter still operate on this stage's
-    own input."""
-    from pyspark.sql import Observation
-
-    from ..operators.dedup import (
-        capped_bucket_metrics, embedding_near_duplicates)
-    from ..operators.embedding_index import (
-        _committed_ids, embedding_index_bucket_audit,
-        embedding_near_duplicates_incremental)
     from ..operators.minhash_index import incremental_drop_keys
 
-    if vec_col not in df.columns:
-        raise ValueError(
-            f"embedding dedup requires a {vec_col!r} column in the input "
-            f"(pass embedding_col= to name it); input has {df.columns}")
-    keyed = df.withColumn("_ek", F.struct("conv_id", "turn_idx"))
-    nonnull = keyed.filter(F.col(vec_col).isNotNull())
-    meta = (index_store.read_meta(spark, index_path)
-            if index_path is not None else None)
+    if fam.missing and fam.value not in df.columns:
+        raise ValueError(fam.missing.format(fam.value, df.columns))
+    meta = (index_store.read_meta(spark, fam.path)
+            if fam.path is not None else None)
+    if meta is None:  # bootstrap slice, or no index: in-slice dedup
+        stage = f"{fam.stage}_bootstrap" if fam.path else fam.stage
+        deduped, row, drops = _in_slice_near_dedup(df, fam, stage)
+        action = ("create", deduped) if fam.path else None
+        return deduped, row, drops, action, None
 
-    if meta is None:  # full in-slice dedup (bootstrap or index-less mode)
-        stage = ("embedding_dedup_bootstrap" if index_path is not None
-                 else "embedding_dedup")
-        if nonnull.isEmpty():  # batch op's dim probe would crash
-            nd_row = {"stage": stage, "n_dropped": 0,
-                      "n_preindexed_rows_dropped": 0,
-                      "n_preindexed_changed": 0, "n_capped_rows": 0,
-                      "n_capped_buckets": 0, "max_bucket_n": 0,
-                      "metrics_observed": False}
-            clean = keyed.drop("_ek")
-            action = (("create", clean) if index_path is not None else None)
-            return clean, nd_row, None, action, None
-        obs = Observation("embedding_dedup_capping")
-        pairs = embedding_near_duplicates(
-            nonnull, "_ek", vec_col, threshold=threshold,
-            n_planes=n_planes, observation=obs)
-        drops = pairs.select(F.col("id_b").alias("_ek")).distinct()
-        drops.persist()
-        n_nd = drops.count()  # fires the observation; pins the drop set
-        m = capped_bucket_metrics(obs)
-        metrics_observed = m is not None
-        if m is None:
-            # zero pairs end-to-end prunes the observed subtree; recount
-            # exactly (rare path, one extra bucket scan) -- with the SAME
-            # cap constant the capped join used, so a future tune cannot
-            # desynchronize the audit from the join it describes
-            from ..operators.dedup import (
-                EMB_MAX_BUCKET_SIZE, bucket_cap_stats,
-                make_hyperplane_bucket_udf)
-            dim = nonnull.select(F.size(vec_col).alias("d")).first()["d"]
-            bucket = make_hyperplane_bucket_udf(n_planes, dim)
-            sizes = (nonnull.select(bucket(F.col(vec_col)).alias("bkt"))
-                     .groupBy("bkt").agg(F.count("*").alias("n")))
-            m = bucket_cap_stats(sizes, EMB_MAX_BUCKET_SIZE)
-        deduped = keyed.join(drops, "_ek", "left_anti").drop("_ek")
-        nd_row = {"stage": stage, "n_dropped": n_nd,
-                  "n_preindexed_rows_dropped": 0,
-                  "n_preindexed_changed": 0,
-                  "n_capped_rows": m["n_capped_rows"],
-                  "n_capped_buckets": m["n_capped_buckets"],
-                  "max_bucket_n": m["max_bucket_n"],
-                  "metrics_observed": metrics_observed}
-        action = (("create", deduped) if index_path is not None else None)
-        return deduped, nd_row, drops, action, None
-
-    if abs(float(meta["threshold"]) - threshold) > 1e-12:
+    if abs(float(meta["threshold"]) - fam.threshold) > 1e-12:
         raise ValueError(
-            f"embedding index at {index_path} was built with threshold "
-            f"{meta['threshold']}; this run requested {threshold} -- "
+            f"{fam.name} index at {fam.path} was built with threshold "
+            f"{meta['threshold']}; this run requested {fam.threshold} -- "
             f"rebuild the index or match the threshold")
-    committed = (_committed_ids(spark, index_path)
-                 .withColumnRenamed("doc_id", "_ek"))
-    n_pre = keyed.join(committed, "_ek", "left_semi").count()
-    probe_keyed = (changed_probe_df.withColumn(
-                       "_ek", F.struct("conv_id", "turn_idx"))
-                   if changed_probe_df is not None else keyed)
-    n_pre_probe = (probe_keyed.join(committed, "_ek", "left_semi").count()
-                   if changed_probe_df is not None else n_pre)
-    n_pre_changed = 0
-    changed_rows = None
-    if n_pre_probe:  # split identical vs CHANGED re-exports (reindex)
-        from ..operators.embedding_index import changed_preindexed_ids
-        changed_ids = (changed_preindexed_ids(
-            probe_keyed, "_ek", vec_col, index_path)
-            .withColumnRenamed("doc_id", "_ek"))
-        n_pre_changed = changed_ids.count()
-        if collect_changed and n_pre_changed:
-            # persisted for the same reason as the MinHash branches
-            changed_rows = probe_keyed.join(F.broadcast(changed_ids),
-                                            "_ek", "left_semi").persist()
-    obs = Observation("embedding_dedup_capping")
-    pairs = embedding_near_duplicates_incremental(
-        keyed, "_ek", vec_col, index_path, observation=obs)
-    drops = (incremental_drop_keys(pairs)
-             .withColumnRenamed("doc_id", "_ek"))
+    index_gran = meta.get("granularity", "doc")
+    if (index_gran == "group") != fam.group:
+        scope = "conversation" if fam.group else "turn"
+        raise ValueError(
+            f"{fam.name} index at {fam.path} has granularity "
+            f"{index_gran!r} but this run requested near-dedup scope "
+            f"{scope!r} -- scope and index granularity must match")
+    keyed = fam.keyed(df)
+    committed = fam.committed(spark, fam.path).toDF(fam.key)
+    n_pre = keyed.join(committed, fam.key, "left_semi").count()
+    probe = keyed if probe_df is None else fam.keyed(probe_df)
+    n_probe = (n_pre if probe_df is None
+               else probe.join(committed, fam.key, "left_semi").count())
+    n_changed, changed_rows = 0, None
+    if n_probe:  # split identical vs CHANGED re-exports (reindex needed)
+        changed = (fam.changed(probe, fam.key, fam.value, fam.path)
+                   .toDF(fam.key))
+        rows = probe.join(F.broadcast(changed), fam.key, "left_semi")
+        # a conversation index counts turn rows, the unit of n_pre
+        n_changed = (rows if fam.group else changed).count()
+        if collect_changed and n_changed:
+            # persisted: the post-write reindex consumes it several
+            # times (store writes + the key count) and must see the
+            # exact rows counted here, not a re-planned probe
+            changed_rows = rows.persist()
+    nd_obs = Observation(f"{fam.stage}_capping")
+    pairs = fam.pairs(keyed, fam.key, fam.value, fam.path,
+                      observation=nd_obs)
+    drops = incremental_drop_keys(pairs).toDF(fam.key)
     drops.persist()
-    n_nd = drops.count()
-    m = capped_bucket_metrics(obs)
+    n_nd = drops.count()  # fires the observation; pins the drop set
+    m = capped_bucket_metrics(nd_obs)
     metrics_observed = m is not None
     if m is None:
-        m = embedding_index_bucket_audit(keyed, "_ek", vec_col, index_path)
-    deduped = (keyed.join(drops, "_ek", "left_anti")
-               .join(committed, "_ek", "left_anti").drop("_ek"))
-    nd_row = {"stage": "embedding_dedup_incremental", "n_dropped": n_nd,
-              "n_preindexed_rows_dropped": n_pre,
-              "n_preindexed_changed": n_pre_changed,
-              "n_capped_rows": m["n_capped_rows"],
-              "n_capped_buckets": m["n_capped_buckets"],
-              "max_bucket_n": m["max_bucket_n"],
-              "metrics_observed": metrics_observed}
+        m = fam.audit(keyed, fam.key, fam.value, fam.path)
+    deduped = fam.unkeyed(keyed.join(drops, fam.key, "left_anti")
+                          .join(committed, fam.key, "left_anti"))
+    nd_row = _nd_row(fam, f"{fam.stage}_incremental", n_nd, m,
+                     metrics_observed, n_pre=n_pre, n_pre_changed=n_changed)
     return deduped, nd_row, drops, ("append", deduped), changed_rows
+
+
+def _replacement_drops(fam, up_keyed, own_changed, n_sources):
+    """``_ck`` keys of changed-upsert replacement rows whose new content
+    near-duplicates a DIFFERENT surviving key committed to ``fam``'s
+    index, or None.  A conversation index probes whole conversations
+    (a dropped gid deletes every replacement row of it; eqNullSafe, so
+    a NULL conv_id group cannot slip the drop), and only those whose
+    TEXT changed (``own_changed``, this family's changed rows; the
+    restriction applies when ``n_sources`` families contributed rows):
+    replacements from an embedding-only change are a PARTIAL member set
+    whose partial content the grouped probe would treat as the
+    conversation's full current text, skewing the probe Jaccard and the
+    own-history carve-out -- and their text signature is still valid."""
+    from ..operators.minhash_index import incremental_drop_keys
+
+    if not fam.group:
+        return incremental_drop_keys(
+            fam.probe(up_keyed, "_ck", fam.value, fam.path)).toDF("_ck")
+    if own_changed is None:
+        return None
+    probe_in = up_keyed
+    if n_sources > 1:
+        gids = (own_changed.select(F.col("conv_id").alias("_nd_conv"))
+                .distinct())
+        probe_in = up_keyed.join(
+            F.broadcast(gids),
+            up_keyed["conv_id"].eqNullSafe(F.col("_nd_conv")), "left_semi")
+    gdrop = incremental_drop_keys(
+        fam.probe(probe_in, "conv_id", fam.value, fam.path)).toDF("_gdrop")
+    return up_keyed.join(
+        F.broadcast(gdrop), up_keyed["conv_id"].eqNullSafe(F.col("_gdrop")),
+        "left_semi").select("_ck")
 
 
 def _nonempty_lines(col) -> F.Column:
@@ -911,33 +927,39 @@ def run_pipeline(
     ``(conv_id, turn_idx)``; see :func:`near_deduplicate_turns`) and
     writes the LSH recall-cap counters (``n_capped_buckets`` etc.,
     observed on the drop-set materialization -- no extra input scan) to
-    the ``_lineage_neardup`` sidecar; the computed drop keys persist to a
-    ``_neardup_drops`` sidecar so a resumed run reuses them (one anti-join)
-    instead of recomputing full-input LSH.  ``near_dedup_index_path``
-    switches near-dedup to INCREMENTAL mode for daily ingest slices: the
-    slice LSH-joins against the persisted MinHash index at that path
-    (bootstrap-created on first run, appended after every successful
-    write), dropping turns that near-match the already-ingested corpus or
-    an earlier turn of the slice -- O(slice), never O(corpus); see
-    ``operators/minhash_index.py``.  ``near_dedup_scope="conversation"``
-    switches near-dedup to document granularity: whole conversations whose
-    union-of-turn-shingle Jaccard matches an earlier conversation are
-    dropped (:func:`near_deduplicate_conversations`); ``"turn"`` (default)
-    keeps the per-turn behavior.  The two options compose: conversation
-    scope with an index path maintains a GROUP-granularity index
-    (conversations are closed per slice; a turn-scope run against a group
-    index, or vice versa, fails loudly on the granularity pinned in the
-    index meta).
-    ``embedding_dedup_threshold`` (e.g. 0.95) near-dedups on a
-    precomputed ``embedding_col`` array column instead of / in addition
-    to text shingles: turns whose embedding cosine matches an earlier
-    turn (or, with ``embedding_index_path``, the already-ingested corpus
-    via the persisted hyperplane index -- bootstrap-created on first run,
-    appended after every successful write, exactly like the MinHash
-    index) are dropped keep-first/corpus-wins; counters land in the
-    ``_lineage_embdedup`` sidecar.  NULL embeddings never drop.  Both
-    dedup families compose: MinHash runs first, the embedding stage sees
-    its survivors.
+    the ``_lineage_neardup`` sidecar; without an index path the computed
+    drop keys persist to a ``_neardup_drops`` sidecar so a resumed run
+    reuses them (one anti-join) instead of recomputing full-input LSH.
+    ``near_dedup_scope="conversation"`` switches near-dedup to document
+    granularity: whole conversations whose union-of-turn-shingle Jaccard
+    matches an earlier conversation are dropped
+    (:func:`near_deduplicate_conversations`); ``"turn"`` (default) keeps
+    the per-turn behavior.  ``embedding_dedup_threshold`` (e.g. 0.95)
+    near-dedups on a precomputed ``embedding_col`` array column instead
+    of / in addition to text shingles (:func:`near_deduplicate_embeddings`,
+    counters in ``_lineage_embdedup``).  Both families compose: MinHash
+    runs first, the embedding gate sees its survivors.
+
+    ``near_dedup_index_path`` / ``embedding_index_path`` switch a family
+    to INCREMENTAL mode for daily ingest slices against a persisted index
+    (``operators/minhash_index.py``, ``operators/embedding_index.py``).
+    The three indexes -- turn MinHash, conversation MinHash (a
+    GROUP-granularity index; conversations are closed per slice) and
+    turn embedding -- share one protocol, each an :class:`IndexFamily`
+    run by :func:`_index_dedup_stage` and the loops below: the first run
+    bootstraps (in-slice dedup, index CREATED from the kept rows after
+    the write); later runs drop rows that near-match the ingested corpus
+    or an earlier row of the slice (corpus wins; O(slice), never
+    O(corpus)) plus re-exports of already-committed keys, counted in
+    ``n_preindexed_rows_dropped``, and APPEND the kept rows after the
+    write and the guards (append-last: a crash anywhere leaves the index
+    in its pre-slice state).  A threshold that differs from the index's,
+    or a scope that differs from its granularity, fails loudly.  What
+    differs by family: NULL embeddings never drop, an embedding slice
+    without any vector writes a zero lineage row and creates no index;
+    a conversation index counts ``n_preindexed_changed`` in turn rows;
+    only the MinHash lineage has ``drop_set_reused``.
+
     ``reindex_changed=True`` (requires an index path) ACTS on the
     ``n_preindexed_changed`` counters instead of only reporting them:
     after the main write and the index appends, committed keys whose
@@ -947,42 +969,41 @@ def run_pipeline(
     ``reindex_embeddings``) so FUTURE slices dedup against the current
     content instead of the stale signature; each reindex appends a
     ``{stage, n_keys, epoch}`` row to the ``_lineage_reindex`` sidecar.
+    With both index gates on, the embedding gate's change detection sees
+    the slice before the MinHash gate dropped its committed keys, so a
+    key whose text AND embedding changed is reindexed in both.
     The changed rows are still DROPPED from this run's output (they are
     re-exports of already-written keys; replacing the stale OUTPUT rows
     is the caller's upsert -- Iceberg MERGE in the nominal deployment).
     To give that MERGE a source, the changed keys' current content is
     ALSO run through the same gates as the main path -- decontamination,
-    the row gates (pre-scrub, like the main path), the replacement probes
-    against the near-dedup indexes (``probe_index_near_duplicates`` /
-    ``probe_embedding_index_near_duplicates``: new content duplicating a
-    DIFFERENT surviving committed key must not land; resembling the
-    key's own predecessor never deletes), and the pure sampling-fraction
-    rule -- then scrubbed and written to
-    ``{output_path}/_changed_upsert`` with an ``_action`` column:
-    ``upsert`` rows carry the processed replacement (MERGE: matched ->
-    update, not-matched -> insert, covering a grown conversation's new
-    turns); ``update`` replaces ``upsert`` whenever a rank-based
-    sampling gate (exact-n stratified / token-budget mix) is active --
-    rank membership is a property of the original run's population and
-    cannot be re-derived per key, so replacements update matched rows
-    but never insert; ``delete`` rows mark keys whose NEW content fails
-    a drop gate so the stale output row must be removed.  Replacement
-    keys the fraction rule excludes are dropped from the sidecar
-    outright (they were never written; ``n_sampled_out`` counts them).
+    the row gates (pre-scrub, like the main path), a replacement probe
+    against each committed index (new content duplicating a DIFFERENT
+    surviving committed key must not land; resembling the key's own
+    predecessor never deletes), and the pure sampling-fraction rule --
+    then scrubbed and written to ``{output_path}/_changed_upsert`` with
+    an ``_action`` column: ``upsert`` rows carry the processed
+    replacement (MERGE: matched -> update, not-matched -> insert,
+    covering a grown conversation's new turns); ``update`` replaces
+    ``upsert`` whenever a rank-based sampling gate (exact-n stratified /
+    token-budget mix) is active -- rank membership is a property of the
+    original run's population and cannot be re-derived per key, so
+    replacements update matched rows but never insert; ``delete`` rows
+    mark keys whose NEW content fails a drop gate so the stale output
+    row must be removed.  Replacement keys the fraction rule excludes are
+    dropped from the sidecar outright (they were never written;
+    ``n_sampled_out`` counts them).  The turn MinHash and embedding
+    indexes probe per key; a conversation index probes whole-group
+    content, only of conversations whose text changed, and a dropped gid
+    deletes every replacement row of that conversation.
     Under ``decontam_scope="conversation"``, changed rows join the
     contamination flag source (a changed turn quoting a benchmark
     poisons its conversation's clean new siblings in the main write
     too), and the poisoned conversations' already-committed keys --
-    enumerated from a turn-keyed index when one is active -- are
-    emitted as key-only ``delete`` rows (retroactive contamination; a
-    group-granularity index alone cannot enumerate turn keys, so that
+    enumerated from the turn MinHash index, else the embedding index --
+    are emitted as key-only ``delete`` rows (retroactive contamination;
+    a group-granularity index alone cannot enumerate turn keys, so that
     configuration covers only the keys present in the changed set).
-    Near-dedup replacement probes run for all three index shapes: the
-    turn-scope MinHash index and the embedding index probe per key, and
-    a conversation-granularity index probes whole-group content
-    (:func:`operators.minhash_index.probe_grouped_index_near_duplicates`)
-    with a dropped gid deleting every replacement row of that
-    conversation.
     The sidecar is written before the reindex commits, so a crash
     between the two can only duplicate byte-identical rows on the
     re-run (dedupe the MERGE source by key), never lose them; counts
@@ -1121,11 +1142,12 @@ def run_pipeline(
     # input, the right trade for deterministic output.
     if dedup:
         df = deduplicate_turns(df)
-    nd_gate_on = (near_dedup_threshold is not None
-                  and near_dedup_index_path is not None)
-    eb_gate_on = (embedding_dedup_threshold is not None
-                  and embedding_index_path is not None)
-    if reindex_changed and not (nd_gate_on or eb_gate_on):
+    fams = _index_families(
+        near_dedup_threshold, near_dedup_index_path, near_dedup_scope,
+        embedding_dedup_threshold, embedding_index_path, embedding_col,
+        embedding_n_planes)
+    index_fams = [f for f in fams if f.path is not None]
+    if reindex_changed and not index_fams:
         raise ValueError(
             "reindex_changed=True acts on a persisted index's changed "
             "re-exports; enable at least one index gate (near_dedup_"
@@ -1160,60 +1182,38 @@ def run_pipeline(
     if gopher_quality_rules is not None:
         from ..operators.doc_quality import validate_gopher_quality_rules
         gq_rules = validate_gopher_quality_rules(gopher_quality_rules)
-    nd_drops = None
-    eb_drops = None
     dc_drops = None
-    nd_changed_rows = None
-    eb_changed_rows = None
     up_cached = None
+    held = []  # persisted drop sets and changed rows
     # Cache guard: every persisted frame the body creates is released in
     # the finally, also when a model read, a sidecar write, the main
     # write, a guard or index maintenance raises -- a long-lived session
     # must not accumulate dead cache entries.
     try:
-        nd_row = None
-        nd_drops = None
-        nd_index_action = None  # slice mode: ("create"|"append", kept_df)
-        nd_changed_rows = None  # slice rows of changed pre-indexed keys
-        # the embedding stage's changed-re-export detection must see the
-        # slice BEFORE the MinHash gate anti-joins its committed keys away:
-        # a doubly-committed key whose re-export changed text AND embedding
-        # is dropped there, and probing only the post-gate rows would freeze
-        # its stale vector in the embedding index forever
-        df_pre_index = df if (reindex_changed and eb_gate_on) else None
-        if near_dedup_threshold is not None:
-            if near_dedup_scope not in ("turn", "conversation"):
-                raise ValueError(
-                    f"near_dedup_scope must be 'turn' or 'conversation', "
-                    f"got {near_dedup_scope!r}")
-            if near_dedup_index_path is not None:
-                (df, nd_row, nd_drops, nd_index_action,
-                 nd_changed_rows) = _near_dedup_slice_stage(
-                    spark, df, float(near_dedup_threshold),
-                    near_dedup_index_path, scope=near_dedup_scope,
-                    collect_changed=reindex_changed)
+        gated = []  # (family, lineage row, index action, changed rows)
+        pre_gate = df
+        for fam in fams:
+            if fam.path is None and fam.resumable:
+                df, row, drops = _near_dedup_full_stage(
+                    spark, df, fam, output_path, resume)
+                action = changed = None
             else:
-                df, nd_row, nd_drops = _near_dedup_full_stage(
-                    spark, df, float(near_dedup_threshold), output_path, resume,
-                    scope=near_dedup_scope)
+                # the changed-re-export detection sees the slice BEFORE
+                # an earlier index gate anti-joined its committed keys
+                # (see _index_dedup_stage)
+                probe_df = (pre_gate if reindex_changed and any(
+                    f.path for f, *_ in gated) else None)
+                df, row, drops, action, changed = _index_dedup_stage(
+                    spark, df, fam, reindex_changed, probe_df)
+            held += [drops, changed]
             # persist the recall-risk counters BEFORE the main write: a run
             # that later trips the retention guard is exactly the run whose
             # capping metrics an operator needs to see
             # (own sidecar: mixed schemas in one parquet dir read unreliably)
-            write_rows(spark, [nd_row], f"{output_path}/_lineage_neardup",
+            write_rows(spark, [row], f"{output_path}/{fam.sidecar}",
                        "append")
-        eb_drops = None
-        eb_index_action = None  # ("create"|"append", kept_df)
-        eb_changed_rows = None
-        if embedding_dedup_threshold is not None:
-            (df, eb_row, eb_drops, eb_index_action,
-             eb_changed_rows) = _embedding_dedup_stage(
-                spark, df, float(embedding_dedup_threshold),
-                embedding_index_path, embedding_col, int(embedding_n_planes),
-                collect_changed=reindex_changed,
-                changed_probe_df=(df_pre_index if nd_gate_on else None))
-            write_rows(spark, [eb_row], f"{output_path}/_lineage_embdedup",
-                       "append")
+            gated.append((fam, row, action, changed))
+        changed_rows = [(f, c) for f, _, _, c in gated if c is not None]
         # one definition of the sampling key set, shared by the row-sampling
         # gate, the token-mix gate, and the changed-upsert re-check
         sp_keys = (list(sample_key_cols) if sample_key_cols
@@ -1492,12 +1492,10 @@ def run_pipeline(
                 # collected under reindex_changed; otherwise the changed
                 # content stays counted-not-acted, as documented.
                 flag_src = keyed.select("_ck", "text")
-                for ch in (nd_changed_rows, eb_changed_rows):
-                    if ch is not None:
-                        flag_src = flag_src.unionByName(
-                            ch.withColumn(
-                                "_ck", F.struct("conv_id", "turn_idx"))
-                            .select("_ck", "text"))
+                for _, ch in changed_rows:
+                    flag_src = flag_src.unionByName(
+                        ch.withColumn("_ck", F.struct("conv_id", "turn_idx"))
+                        .select("_ck", "text"))
                 flagged = dc_flagger(flag_src)
                 dc_drops = flagged.select(F.col("_ck.conv_id").alias(
                     "conv_id")).distinct()
@@ -1594,72 +1592,35 @@ def run_pipeline(
             int(m_out.get("lines_out") or 0), min_line_ratio)
         write_rows(spark, [guard_row], f"{output_path}/_lineage_guards",
                    "append")
-        if nd_index_action is not None:
-            # Index content = dedup-kept turns, BEFORE the toxicity/resume
-            # gates: the index answers "what has this corpus already seen",
-            # so a toxic turn dropped from the OUTPUT still anchors dedup of
-            # its future near-copies (which the toxicity gate would drop
-            # anyway -- near-copies of toxic text score toxic).
-            # index maintenance runs LAST, only after the write + guards
-            # succeeded: a crash anywhere above leaves the index in its
-            # pre-slice state, so a resumed run recomputes the same drops
-            # against the same index (idempotent restart).  Cost: one extra
-            # signature pass over the kept slice rows.
-            from ..operators.minhash_index import (
-                append_grouped_to_minhash_index, append_to_minhash_index,
-                write_grouped_minhash_index, write_minhash_index)
-            action, kept = nd_index_action
-            conv_scope = near_dedup_scope == "conversation"
-            if conv_scope:
-                kept_keyed, key_col = kept, "conv_id"
-            else:
-                kept_keyed = kept.withColumn(
-                    "_nk", F.struct("conv_id", "turn_idx"))
-                key_col = "_nk"
-            if action == "create":
-                # gate on the KEPT set, not rows written this call: a
-                # bootstrap that crashed mid-create and RESUMED writes zero
-                # new output rows (resume_filter removed them) but must
-                # still create the index, or the whole bootstrap corpus
-                # silently never enters it and later slices dedup against
-                # nothing
-                if not kept_keyed.isEmpty():  # empty input: no index
-                    create = (write_grouped_minhash_index if conv_scope
-                              else write_minhash_index)
-                    create(kept_keyed, key_col, "text",
-                           near_dedup_index_path,
-                           threshold=float(near_dedup_threshold))
-            else:
+        # Index content = dedup-kept rows, BEFORE the toxicity/resume
+        # gates: the index answers "what has this corpus already seen", so
+        # a toxic turn dropped from the OUTPUT still anchors dedup of its
+        # future near-copies (which the toxicity gate would drop anyway --
+        # near-copies of toxic text score toxic).  Index maintenance runs
+        # LAST, only after the write + guards succeeded: a crash anywhere
+        # above leaves every index in its pre-slice state, so a resumed run
+        # recomputes the same drops against the same index (idempotent
+        # restart).  Cost: one extra signature pass over the kept rows.
+        for fam, _, action, _ in gated:
+            if action is None:
+                continue
+            mode, kept = action
+            kept = fam.keyed(kept)
+            if mode == "append":
                 # idempotent by construction: the append fns anti-join each
                 # store's already-committed keys, so a completed-slice
                 # re-run appends nothing and a half-crashed append
                 # completes exactly-once
-                append = (append_grouped_to_minhash_index if conv_scope
-                          else append_to_minhash_index)
-                append(kept_keyed, key_col, "text", near_dedup_index_path)
-        if eb_index_action is not None:
-            # same last-step commit protocol as the MinHash index: a
-            # crash anywhere above leaves the embedding index in its
-            # pre-slice state, and the append functions are idempotent
-            from ..operators.embedding_index import (
-                append_to_embedding_index, write_embedding_index)
-            eb_action, eb_kept = eb_index_action
-            eb_keyed = eb_kept.withColumn(
-                "_ek", F.struct("conv_id", "turn_idx"))
-            if eb_action == "create":
-                # the index needs >= 1 non-null vector to pin its dim; a
-                # bootstrap slice without any stays index-less and the
-                # next run bootstraps again
-                if not eb_keyed.filter(
-                        F.col(embedding_col).isNotNull()).isEmpty():
-                    write_embedding_index(
-                        eb_keyed, "_ek", embedding_col,
-                        embedding_index_path,
-                        threshold=float(embedding_dedup_threshold),
-                        n_planes=int(embedding_n_planes))
-            else:
-                append_to_embedding_index(
-                    eb_keyed, "_ek", embedding_col, embedding_index_path)
+                fam.append(kept, fam.key, fam.value, fam.path)
+            elif not fam.values(kept).isEmpty():
+                # gate the create on the KEPT set, not rows written this
+                # call: a bootstrap that crashed mid-create and RESUMED
+                # writes zero new output rows (resume_filter removed them)
+                # but must still create the index, or the whole bootstrap
+                # corpus silently never enters it.  An empty kept set (or,
+                # for embeddings, one without a non-NULL vector to pin the
+                # dim) stays index-less and the next run bootstraps again
+                fam.create(kept, fam.key, fam.value, fam.path)
         # Processed replacement rows for changed re-exports: the
         # changed keys' CURRENT content run through the same content
         # gates (decontamination, toxicity, near-dedup probes, the pure
@@ -1710,42 +1671,30 @@ def run_pipeline(
             # output from earlier slices; an uninterrupted run over the
             # same content would have dropped the whole conversation.
             # Enumerate the poisoned conversations' committed keys from
-            # a turn-keyed index and emit deletes for them.  (A group-
+            # the first committed turn-keyed index (turn MinHash, then
+            # embedding) and emit deletes for them.  (A group-
             # granularity index alone cannot enumerate turn keys --
             # documented gap.  Keys the index holds but the output never
             # wrote -- decontam/toxicity-dropped at their own ingest --
             # produce deletes that match nothing; harmless.)
-            ck_src = None
-            if (nd_gate_on and near_dedup_scope == "turn"
-                    and index_store.committed(
-                        spark, f"{near_dedup_index_path}/meta")):
-                from ..operators.minhash_index import _committed_doc_ids
-                ck_src = _committed_doc_ids(spark, near_dedup_index_path)
-            elif eb_gate_on and index_store.committed(
-                    spark, f"{embedding_index_path}/meta"):
-                from ..operators.embedding_index import _committed_ids
-                ck_src = _committed_ids(spark, embedding_index_path)
-            if ck_src is not None:
+            ck_fam = next((f for f in index_fams if not f.group
+                           and index_store.committed(
+                               spark, f"{f.path}/meta")), None)
+            if ck_fam is not None:
                 dcv_r = dc_drops.withColumnRenamed("conv_id", "_dc_conv")
                 retro_deletes = (
-                    ck_src.select(
+                    ck_fam.committed(spark, ck_fam.path).select(
                         F.col("doc_id.conv_id").alias("conv_id"),
                         F.col("doc_id.turn_idx").alias("turn_idx"))
                     .join(F.broadcast(dcv_r),
                           F.col("conv_id").eqNullSafe(F.col("_dc_conv")),
                           "left_semi"))
-        if (nd_changed_rows is not None or eb_changed_rows is not None
-                or retro_deletes is not None):
+        if changed_rows or retro_deletes is not None:
             from pyspark.sql.window import Window as _W
 
-            from ..operators.minhash_index import incremental_drop_keys
             rank_gated = (sample_n_per_stratum is not None
                           or sample_token_shares is not None)
-            srcs = []
-            if nd_changed_rows is not None:
-                srcs.append(nd_changed_rows.drop("_nk"))
-            if eb_changed_rows is not None:
-                srcs.append(eb_changed_rows.drop("_ek"))
+            srcs = [fam.unkeyed(ch) for fam, ch in changed_rows]
             up = None
             if srcs:
                 up = srcs[0]
@@ -1769,7 +1718,6 @@ def run_pipeline(
                               _W.partitionBy("conv_id", "turn_idx")
                                 .orderBy(F.col("text").asc_nulls_last())))
                       .filter(F.col("_rn") == 1).drop("_rn"))
-            up_cached = None
             if up is not None:
                 # Persist + materialize NOW, at the ROOT frame every
                 # consumer below derives from (the sampling count, the
@@ -1830,71 +1778,13 @@ def run_pipeline(
                 # keys, so without these probes a re-export rewritten
                 # into a near-copy of a DIFFERENT committed doc (or
                 # conversation) would sail in as its replacement
-                if nd_gate_on and index_store.committed(
-                        spark, f"{near_dedup_index_path}/meta"):
-                    if near_dedup_scope == "turn":
-                        from ..operators.minhash_index import (
-                            probe_index_near_duplicates)
-                        del_srcs.append(
-                            incremental_drop_keys(
-                                probe_index_near_duplicates(
-                                    up_keyed, "_ck", "text",
-                                    near_dedup_index_path))
-                            .withColumnRenamed("doc_id", "_ck"))
-                    else:
-                        # conversation scope: a dropped gid deletes ALL
-                        # of the conversation's replacement rows
-                        # (eqNullSafe: a NULL conv_id group must not
-                        # slip the drop, same as the decontam drop).
-                        # Probe ONLY conversations whose TEXT changed
-                        # (gids present in nd_changed_rows, the full-
-                        # member changed set): with the embedding gate
-                        # on, up_keyed can also carry embedding-changed-
-                        # only turn rows -- a PARTIAL member set whose
-                        # partial content the grouped probe would treat
-                        # as the conversation's full current text,
-                        # skewing the probe jaccard and the own-history
-                        # carve-out (r6 ADVICE).  An embedding-only
-                        # change leaves the text signature valid, so
-                        # those conversations need no text probe.
-                        from ..operators.minhash_index import (
-                            probe_grouped_index_near_duplicates)
-                        gprobe_in = up_keyed
-                        if eb_changed_rows is not None:
-                            if nd_changed_rows is None:
-                                gprobe_in = None
-                            else:
-                                nd_gids = (nd_changed_rows
-                                           .select(F.col("conv_id")
-                                                   .alias("_nd_conv"))
-                                           .distinct())
-                                gprobe_in = up_keyed.join(
-                                    F.broadcast(nd_gids),
-                                    up_keyed["conv_id"].eqNullSafe(
-                                        F.col("_nd_conv")),
-                                    "left_semi")
-                        if gprobe_in is not None:
-                            gdrop = incremental_drop_keys(
-                                probe_grouped_index_near_duplicates(
-                                    gprobe_in, "conv_id", "text",
-                                    near_dedup_index_path)
-                            ).withColumnRenamed("doc_id", "_gdrop")
-                            del_srcs.append(
-                                up_keyed.join(
-                                    F.broadcast(gdrop),
-                                    up_keyed["conv_id"].eqNullSafe(
-                                        F.col("_gdrop")),
-                                    "left_semi").select("_ck"))
-                if eb_gate_on and index_store.committed(
-                        spark, f"{embedding_index_path}/meta"):
-                    from ..operators.embedding_index import (
-                        probe_embedding_index_near_duplicates)
-                    del_srcs.append(
-                        incremental_drop_keys(
-                            probe_embedding_index_near_duplicates(
-                                up_keyed, "_ck", embedding_col,
-                                embedding_index_path))
-                        .withColumnRenamed("doc_id", "_ck"))
+                for fam, _, _, own in gated:
+                    if fam.path is not None and index_store.committed(
+                            spark, f"{fam.path}/meta"):
+                        d = _replacement_drops(fam, up_keyed, own,
+                                               len(changed_rows))
+                        if d is not None:
+                            del_srcs.append(d)
                 out_up = scrub_transform(up, **scrub_kwargs).withColumn(
                     "_ck", F.struct("conv_id", "turn_idx"))
                 if del_srcs:
@@ -1974,57 +1864,25 @@ def run_pipeline(
         # row: the index itself is correct and the append-only meta_eN
         # markers at the index path remain the authoritative record of
         # every committed reindex.
-        def _reindex_sidecar(stage, n_keys, epoch):
+        # (A grouped reindex: every turn contributes >=1 shingle row to
+        # the exploded store -- sub-shingle_k texts are padded -- so a
+        # changed conversation ALWAYS gains epoch-N rows and the per-gid
+        # max-epoch window resolves to them; an all-short re-export
+        # cannot strand a key on its stale epoch-0 state.)
+        for fam, ch in changed_rows:
+            ri_meta = fam.reindex(ch, fam.key, fam.value, fam.path)
             write_rows(
-                spark,
-                [{"stage": stage, "n_keys": n_keys, "epoch": int(epoch)}],
+                spark, [{"stage": fam.reindex_stage,
+                         "n_keys": ch.select(fam.key).distinct().count(),
+                         "epoch": int(ri_meta["epoch"])}],
                 f"{output_path}/_lineage_reindex", "append",
                 schema="stage string, n_keys long, epoch long")
-        if nd_changed_rows is not None:
-            from ..operators.minhash_index import (
-                reindex_docs, reindex_groups)
-            # Every turn contributes >=1 shingle row to the exploded
-            # grouped store -- sub-shingle_k texts are padded
-            # (``_batch_shingles``: "always >=1 per row") -- so a
-            # changed conversation ALWAYS gains epoch-N rows here and
-            # the per-gid max-epoch window resolves to them; an
-            # all-short re-export cannot strand a key on its stale
-            # epoch-0 state.
-            if near_dedup_scope == "conversation":
-                ri_meta = reindex_groups(
-                    nd_changed_rows, "conv_id", "text",
-                    near_dedup_index_path)
-                ri_keys = (nd_changed_rows.select("conv_id")
-                           .distinct().count())
-            else:
-                ri_meta = reindex_docs(
-                    nd_changed_rows, "_nk", "text", near_dedup_index_path)
-                ri_keys = nd_changed_rows.select("_nk").distinct().count()
-            _reindex_sidecar("near_dedup_reindex", ri_keys,
-                             ri_meta["epoch"])
-        if eb_changed_rows is not None:
-            from ..operators.embedding_index import reindex_embeddings
-            ri_meta = reindex_embeddings(
-                eb_changed_rows, "_ek", embedding_col,
-                embedding_index_path)
-            ri_keys = eb_changed_rows.select("_ek").distinct().count()
-            _reindex_sidecar("embedding_reindex", ri_keys,
-                             ri_meta["epoch"])
         wall = time.time() - t0
         stats = {"rows": n, "wall_sec": round(wall, 3),
                  "rows_per_sec": round(n / wall, 1) if wall > 0 else None,
                  **{k: v for k, v in guard_row.items() if k != "stage"}}
-        if nd_row is not None:
-            stats["n_near_dup_dropped"] = nd_row["n_dropped"]
-            stats["n_capped_buckets"] = nd_row["n_capped_buckets"]
-            stats["n_preindexed_rows_dropped"] = \
-                nd_row["n_preindexed_rows_dropped"]
-            stats["n_preindexed_changed"] = nd_row["n_preindexed_changed"]
-        if embedding_dedup_threshold is not None:
-            stats["n_embedding_dup_dropped"] = eb_row["n_dropped"]
-            stats["n_emb_preindexed_rows_dropped"] = \
-                eb_row["n_preindexed_rows_dropped"]
-            stats["n_emb_preindexed_changed"] = eb_row["n_preindexed_changed"]
+        for fam, row, _, _ in gated:
+            stats.update((k, row[col]) for k, col in fam.stats)
         if decontaminate_against is not None:
             stats["n_contaminated_dropped"] = n_contam
         if sample_fraction is not None or sample_n_per_stratum is not None:
@@ -2034,8 +1892,7 @@ def run_pipeline(
             stats["token_mix_budget"] = tm_row["budget_tokens"]
         return stats
     finally:
-        for _f in (nd_drops, eb_drops, dc_drops, nd_changed_rows,
-                   eb_changed_rows, up_cached):
+        for _f in (*held, dc_drops, up_cached):
             if _f is not None:
                 _f.unpersist()
 

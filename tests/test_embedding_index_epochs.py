@@ -4,6 +4,8 @@ was recomputed get fresh buckets/vectors in a new epoch, readers resolve
 per-key latest-epoch, a crash before the marker leaves the old epoch
 live, and compaction rewrites the resolved state."""
 
+import os
+
 import pytest
 
 from sumi_agent_spark.operators.embedding_index import (
@@ -73,6 +75,9 @@ def test_reindex_crash_before_marker_leaves_old_epoch_live(
     path = str(tmp_path / "eidx")
     write_embedding_index(_old(spark), "doc_id", "v", path, threshold=0.95)
 
+    # build the reindex input BEFORE patching createDataFrame: the
+    # reindex's only call of it is the epoch marker, after its stores
+    changed = _changed(spark)
     real = spark.createDataFrame
 
     def boom(*a, **k):
@@ -80,8 +85,13 @@ def test_reindex_crash_before_marker_leaves_old_epoch_live(
 
     monkeypatch.setattr(spark, "createDataFrame", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        reindex_embeddings(_changed(spark), "doc_id", "v", path)
+        reindex_embeddings(changed, "doc_id", "v", path)
     monkeypatch.setattr(spark, "createDataFrame", real)
+    # the stores of epoch 1 were written: the crash fell between them
+    # and the marker
+    assert os.path.isdir(f"{path}/vectors_e1")
+    assert os.path.isdir(f"{path}/buckets_e1")
+    assert not os.path.exists(f"{path}/meta_e1")
 
     near_new = _df(spark, [("p1", V_NEAR_NOVEL)])
     assert _pairs(embedding_near_duplicates_incremental(

@@ -4,6 +4,8 @@ changed get fresh signatures in a new epoch, readers resolve per-doc
 latest-epoch, a crash before the epoch marker leaves the old epoch live,
 and changed_preindexed_ids surfaces the docs that need the reindex."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,7 +88,9 @@ def test_reindex_crash_before_marker_leaves_old_epoch_live(
     path = str(tmp_path / "didx")
     write_minhash_index(_old(spark), "doc_id", "text", path, threshold=0.6)
 
-    # reindex_docs touches createDataFrame exactly once -- the marker
+    # build the reindex input BEFORE patching createDataFrame: the
+    # reindex's only call of it is the epoch marker, after its stores
+    changed = _changed(spark)
     real = spark.createDataFrame
 
     def boom(*a, **k):
@@ -94,8 +98,13 @@ def test_reindex_crash_before_marker_leaves_old_epoch_live(
 
     monkeypatch.setattr(spark, "createDataFrame", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        reindex_docs(_changed(spark), "doc_id", "text", path)
+        reindex_docs(changed, "doc_id", "text", path)
     monkeypatch.setattr(spark, "createDataFrame", real)
+    # the stores of epoch 1 were written: the crash fell between them
+    # and the marker
+    assert os.path.isdir(f"{path}/shingles_e1")
+    assert os.path.isdir(f"{path}/bands_e1")
+    assert not os.path.exists(f"{path}/meta_e1")
 
     # old epoch still live: the new signature is invisible
     assert _pairs(minhash_near_duplicates_incremental(

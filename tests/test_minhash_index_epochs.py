@@ -3,6 +3,8 @@
 fresh signatures in a new epoch, readers resolve per-group latest-epoch,
 and a crash before the meta flip leaves the old epoch live."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,7 +96,9 @@ def test_reindex_crash_before_meta_flip_leaves_old_epoch_live(
     write_grouped_minhash_index(_old(spark), "conv_id", "text", path,
                                 threshold=0.6)
 
-    # reindex_groups touches createDataFrame exactly once -- the meta flip
+    # build the reindex input BEFORE patching createDataFrame: the
+    # reindex's only call of it is the epoch marker, after its stores
+    grown = _grown(spark)
     real = spark.createDataFrame
 
     def boom(*a, **k):
@@ -102,8 +106,13 @@ def test_reindex_crash_before_meta_flip_leaves_old_epoch_live(
 
     monkeypatch.setattr(spark, "createDataFrame", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        reindex_groups(_grown(spark), "conv_id", "text", path)
+        reindex_groups(grown, "conv_id", "text", path)
     monkeypatch.setattr(spark, "createDataFrame", real)
+    # the stores of epoch 1 were written: the crash fell between them
+    # and the marker
+    assert os.path.isdir(f"{path}/shingles_e1")
+    assert os.path.isdir(f"{path}/bands_e1")
+    assert not os.path.exists(f"{path}/meta_e1")
 
     # old epoch still live: the grown signature is invisible
     assert _pairs(minhash_near_duplicates_grouped_incremental(

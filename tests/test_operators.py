@@ -6,9 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from sumi_agent_spark.operators.dedup import (
-    brute_force_jaccard_pairs,
     embedding_near_duplicates,
     exact_duplicates,
+    make_jaccard_udf,
     minhash_near_duplicates,
     simhash_near_duplicates,
 )
@@ -66,6 +66,21 @@ def test_exact_duplicates_caps_hot_group(spark):
     assert len(out) == 1
     assert out.iloc[0]["n_docs"] == 100_000
     assert list(out.iloc[0]["doc_ids"]) == [0, 1, 2, 3, 4]
+
+
+def brute_force_jaccard_pairs(df, id_col, text_col, threshold=0.8,
+                              shingle_k=5):
+    """Exact all-pairs Jaccard (the small-data oracle for LSH recall tests).
+
+    O(n^2) cross join -- only for validation scales."""
+    jac = make_jaccard_udf(shingle_k)
+    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    a = base.select(F.col("doc_id").alias("id_a"), F.col("text").alias("text_a"))
+    b = base.select(F.col("doc_id").alias("id_b"), F.col("text").alias("text_b"))
+    return (a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+            .withColumn("jaccard", jac("text_a", "text_b"))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
 def test_minhash_lsh_matches_brute_force(docs):

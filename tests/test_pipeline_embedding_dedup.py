@@ -1,5 +1,5 @@
 """run_pipeline's embedding near-dedup gate (plans/pipeline.py,
-_embedding_dedup_stage): in-slice mode, the persisted-index daily-ingest
+_index_dedup_stage with the embedding IndexFamily): in-slice mode, the persisted-index daily-ingest
 protocol across three slices, and the failure edges."""
 
 import datetime

@@ -2,10 +2,17 @@
 metric values, edge cases, cross-engine determinism properties, and the
 Gopher-threshold filter."""
 
+import re as _re
+from collections import Counter
+
 import pytest
 
 from sumi_agent_spark.operators.repetition import (
     GOPHER_THRESHOLDS,
+    LINE_SPLIT,
+    PARA_SPLIT,
+    WS_CLASS,
+    _r6,
     repetition_filter,
     repetition_keep_condition,
     repetition_stats,
@@ -248,12 +255,58 @@ EDGE_TEXTS = [
 ]
 
 
+def _py_repetition_metrics(text, top_ns, dup_ns):
+    """Pure-Python replica of ``repetition_stats`` for ONE document --
+    the parity reference pinned against the batch kernel.  Counters are
+    exact ints and each metric is one float division, identical to the
+    JVM's double division; rounding replicates Spark's ``F.round(x, 6)``
+    exactly via the shared ``_r6`` (``BigDecimal.valueOf`` = HALF_UP over
+    the shortest decimal repr; see its docstring for why neither
+    ``Decimal(x)`` nor the banker's ``round`` builtin is equivalent);
+    string ties compare by code point, which equals the JVM's binary
+    UTF-8 collation order."""
+    r6 = _r6
+    text = text or ""
+    total = len(text)
+    out = {}
+    for prefix, pattern in (("dup_line", LINE_SPLIT),
+                            ("dup_para", PARA_SPLIT)):
+        units = [u for u in _re.split(pattern, text) if u != ""]
+        c = Counter(units)
+        n = sum(c.values())
+        nd = sum(v for v in c.values() if v >= 2)
+        ch = sum(v * len(u) for u, v in c.items())
+        chd = sum(v * len(u) for u, v in c.items() if v >= 2)
+        out[f"{prefix}_frac"] = r6(nd / n) if n > 0 else 0.0
+        out[f"{prefix}_char_frac"] = r6(chd / ch) if ch > 0 else 0.0
+    toks = [t for t in _re.split(WS_CLASS, text) if t != ""]
+    for n in top_ns:
+        grams = [" ".join(toks[i:i + n])
+                 for i in range(len(toks) - n + 1)]
+        c = Counter(grams)
+        if not c:
+            out[f"top{n}_char_frac"] = 0.0
+            continue
+        c_top = max(c.values())
+        if total <= 0 or c_top < 2:
+            out[f"top{n}_char_frac"] = 0.0
+            continue
+        g = min(g for g, v in c.items() if v == c_top)
+        out[f"top{n}_char_frac"] = r6(min(1.0, c_top * len(g) / total))
+    for n in dup_ns:
+        grams = [" ".join(toks[i:i + n])
+                 for i in range(len(toks) - n + 1)]
+        c = Counter(grams)
+        dch = sum(v * len(g) for g, v in c.items() if v >= 2)
+        out[f"dup{n}_char_frac"] = (
+            r6(min(1.0, dch / total)) if total > 0 and dch > 0 else 0.0)
+    return out
+
+
 def test_python_replica_matches_spark_aggregation(spark):
-    """The streaming kernel (_py_repetition_metrics) must reproduce the
+    """The Python replica (_py_repetition_metrics) must reproduce the
     JVM aggregation byte-exactly on every edge text -- including the
     HALF_UP rounding and the tie-break collation."""
-    from sumi_agent_spark.operators.repetition import (
-        _py_repetition_metrics)
     rows = [(i, t) for i, t in enumerate(EDGE_TEXTS)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r.asDict() for r in
