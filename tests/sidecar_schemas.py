@@ -1,7 +1,7 @@
-"""Pinned parquet schemas of the index-gate sidecars of ``run_pipeline``:
-the tests assert column names, order and arrow types with
-:func:`schema`, so a refactor of the index gates cannot change them
-unnoticed."""
+"""Pinned parquet schemas of the index-gate and decontamination sidecars
+of ``run_pipeline``: the tests assert column names, order and arrow
+types with :func:`schema`, so a refactor of the gates cannot change
+them unnoticed."""
 
 import pyarrow.parquet as pq
 
@@ -18,6 +18,12 @@ EMBDEDUP = [
     ("n_dropped", "int64"), ("n_preindexed_changed", "int64"),
     ("n_preindexed_rows_dropped", "int64"), ("stage", "string")]
 NEARDUP = [("drop_set_reused", "bool"), *EMBDEDUP]
+# explicit-schema rows keep their declared order
+DECONTAM = [
+    ("stage", "string"), ("n_dropped", "int64"), ("k", "int64"),
+    ("min_hits", "int64"), ("ngrams", "string"), ("scope", "string"),
+    ("min_containment", "double"), ("mode", "string"),
+    ("benchmark_path", "string")]
 REINDEX = [("stage", "string"), ("n_keys", "int64"), ("epoch", "int64")]
 UPSERT = [("stage", "string"), ("n_upsert", "int64"),
           ("n_update", "int64"), ("n_delete", "int64"),

@@ -10,6 +10,8 @@ import datetime
 
 import pytest
 
+from sidecar_schemas import DECONTAM, schema
+
 BENCH = [
     (0, "The quick brown fox jumps over the lazy dog by the river bank."),
     (1, "Machine translation quality is judged with held-out references."),
@@ -164,6 +166,7 @@ def test_pipeline_decontaminate_gate(spark, tmp_path):
     keys = set(zip(got["conv_id"], got["turn_idx"]))
     assert keys == {("c1", 1), ("c2", 0)}
     assert stats["n_contaminated_dropped"] == 2
+    assert schema(out + "/_lineage_decontam") == DECONTAM
     side = spark.read.parquet(out + "/_lineage_decontam").toPandas()
     assert len(side) == 1
     assert int(side["n_dropped"].iloc[0]) == 2
@@ -408,6 +411,7 @@ def test_pipeline_decontam_conversation_scope(spark, tmp_path):
     got = spark.read.parquet(out).toPandas()
     assert set(got["conv_id"]) == {"c2"}
     assert stats["n_contaminated_dropped"] == 1  # ONE conversation
+    assert schema(out + "/_lineage_decontam") == DECONTAM
     side = spark.read.parquet(out + "/_lineage_decontam").toPandas()
     assert side.iloc[0]["scope"] == "conversation"
 
@@ -453,6 +457,7 @@ def test_pipeline_decontam_min_containment(spark, tmp_path):
                   spark.read.parquet(out_c).toPandas()["turn_idx"]))
     assert got == {("c1", 1), ("c2", 0)}
     assert s_c["n_contaminated_dropped"] == 1
+    assert schema(out_c + "/_lineage_decontam") == DECONTAM
     side = spark.read.parquet(out_c + "/_lineage_decontam").toPandas()
     assert abs(float(side.iloc[0]["min_containment"]) - 0.9) < 1e-12
 
@@ -612,6 +617,7 @@ def test_pipeline_decontam_fuzzy_mode(spark, tmp_path):
     got = spark.read.parquet(out).toPandas()
     assert set(got["conv_id"]) == {"c2"}
     assert stats["n_contaminated_dropped"] == 1
+    assert schema(out + "/_lineage_decontam") == DECONTAM
     side = spark.read.parquet(out + "/_lineage_decontam").toPandas()
     assert side.iloc[0]["mode"] == "fuzzy"
 
