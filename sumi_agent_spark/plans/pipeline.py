@@ -1,5 +1,5 @@
-"""End-to-end scrub pipeline: read -> dedup/sample/decontam gates -> order ->
-row gates -> quality + scrub -> write.
+"""End-to-end scrub pipeline: read -> dedup/sample gates -> order -> row
+gates (decontamination first) -> quality + scrub -> write.
 
 Spark-first shape (SURVEY.md §3.1 translation):
 
@@ -23,6 +23,7 @@ Spark-first shape (SURVEY.md §3.1 translation):
 
 from __future__ import annotations
 
+import json
 import time
 from typing import Callable, NamedTuple, Optional
 
@@ -690,13 +691,20 @@ def _index_dedup_stage(spark, df, fam, collect_changed=False,
         changed = (fam.changed(probe, fam.key, fam.value, fam.path)
                    .toDF(fam.key))
         rows = probe.join(F.broadcast(changed), fam.key, "left_semi")
+        if collect_changed:
+            # persisted BEFORE the count, which then builds it: the
+            # post-write reindex consumes it several times (store writes
+            # + the key count) and must see the exact rows counted here,
+            # and the change detection runs once
+            rows.persist()
+            changed = rows.select(fam.key).distinct()
         # a conversation index counts turn rows, the unit of n_pre
         n_changed = (rows if fam.group else changed).count()
-        if collect_changed and n_changed:
-            # persisted: the post-write reindex consumes it several
-            # times (store writes + the key count) and must see the
-            # exact rows counted here, not a re-planned probe
-            changed_rows = rows.persist()
+        if collect_changed:
+            if n_changed:
+                changed_rows = rows
+            else:
+                rows.unpersist()
     nd_obs = Observation(f"{fam.stage}_capping")
     pairs = fam.pairs(keyed, fam.key, fam.value, fam.path,
                       observation=nd_obs)
@@ -775,21 +783,25 @@ def _assert_retention(stage: str, rows_in: int, rows_out: int,
 
 
 class RowGate(NamedTuple):
-    """One row-local keep/drop gate of :func:`run_pipeline`.
+    """One keep/drop gate of :func:`run_pipeline`.
 
     ``keep`` is a non-NULL boolean Column that decides each row on its
     own (a JVM expression or an Arrow kernel read as a struct) over the
     frame ``prepare`` returns; ``prepare`` attaches the columns ``keep``
-    reads (a model score; it may join) and runs before the range
-    exchange.  Each run appends ``(name, n_dropped, *params)`` to the
-    ``sidecar`` lineage directory with schema ``stage string, n_dropped
-    long, <ddl>``."""
+    reads (a model score or a contamination flag; it may join) and runs
+    before the range exchange.  Each run appends ``(name, n_dropped,
+    *params)`` to the ``sidecar`` lineage directory with schema ``stage
+    string, n_dropped long, <ddl>``.  ``n_dropped`` is the number of
+    rows charged to the gate, or the row count of ``drops`` when it is
+    set: the persisted key set of a gate that counts another unit
+    (decontamination at conversation scope counts conversations)."""
     name: str
     sidecar: str
     keep: Column
     params: tuple
     ddl: str
     prepare: Optional[Callable[[DataFrame], DataFrame]] = None
+    drops: Optional[DataFrame] = None
 
 
 def _scored(score, model, out_col):
@@ -801,16 +813,134 @@ def _scored(score, model, out_col):
     return prepare
 
 
-def _row_gates(spark, drop_toxic_above, gq_rules, rep_thresholds,
+def _decontam_gate(spark, held, slice_df, changed, against, text_col, k,
+                   min_hits, ngrams, scope, min_containment,
+                   mode) -> RowGate:
+    """The decontamination gate: ``prepare`` left-joins the flagged set
+    and ``keep`` is "no flag".  At turn scope ``prepare`` flags the
+    ``(conv_id, turn_idx)`` keys of its own input; at conversation scope
+    it joins (null-safe) the poisoned-conversation set flagged from
+    ``slice_df`` plus the ``changed`` re-export frames, built once and
+    shared by the main path and the changed-upsert re-check.  Every
+    flagged set is persisted and added to ``held``: the range-boundary
+    job builds it and the write job reuses it."""
+    if scope not in ("turn", "conversation"):
+        raise ValueError(
+            f"decontam_scope must be 'turn' or 'conversation', "
+            f"got {scope!r}")
+    if mode not in ("exact", "fuzzy"):
+        raise ValueError(
+            f"decontam_mode must be 'exact' or 'fuzzy', got {mode!r}")
+    from ..operators.decontaminate import (
+        benchmark_overlap_report, contaminated_keys,
+        flag_benchmark_near_overlap)
+    bench_df = spark.read.parquet(against)
+    # shared by both per-bench-row rules (fuzzy + containment): one
+    # definition, the two modes cannot drift
+    bench_ided = bench_df.withColumn(
+        "_bid", F.md5(F.coalesce(F.col(text_col), F.lit(""))))
+    if mode == "fuzzy":
+        # the fuzzy rule's extra parameter contract, validated up-front
+        if min_containment is None:
+            raise ValueError(
+                "decontam_mode='fuzzy' requires decontam_min_containment "
+                "(the containment verify threshold)")
+        if ngrams != "char":
+            raise ValueError(
+                "decontam_mode='fuzzy' supports char shingles only "
+                f"(got ngrams={ngrams!r})")
+
+    def flagged(keyed: DataFrame) -> DataFrame:
+        """``_dk``-keyed rows -> the distinct flagged ``_dk`` keys."""
+        if mode == "fuzzy":
+            # paraphrase-tolerant rule: windowed MinHash-LSH candidates +
+            # short-shingle containment verify.  ``k`` is the SHINGLE
+            # size here -- keep it SHORT (operator default 7): short
+            # grams survive a light rewording.  Word grams have no fuzzy
+            # variant (the windowing is char-positional).
+            rep = flag_benchmark_near_overlap(
+                keyed, "_dk", "text", bench_ided, "_bid",
+                bench_text_col=text_col, threshold=float(min_containment),
+                shingle_k=int(k))
+            # min_hits is an absolute floor as in the containment rule:
+            # a tiny eval row hits 100% containment on a handful of
+            # shared short grams otherwise
+            return (rep.filter(F.col("n_hits") >= F.lit(int(min_hits)))
+                    .select("_dk").distinct())
+        if min_containment is not None:
+            # PaLM-style rule: flag a turn when >= this fraction of ANY
+            # single benchmark row's distinct k-grams appear in it (a
+            # turn grazing 1 gram from each of 1000 eval rows is noise;
+            # 70% of one row is a quote), min_hits as a floor.  The
+            # benchmark row id is the md5 of its TEXT: deterministic
+            # under retries, and duplicate benchmark texts share their
+            # gram sets anyway.
+            return benchmark_overlap_report(
+                keyed, "_dk", "text", bench_ided, "_bid",
+                bench_text_col=text_col, k=int(k), min_hits=int(min_hits),
+                ngrams=ngrams, min_containment=float(min_containment),
+            ).select("_dk").distinct()
+        return contaminated_keys(
+            keyed, "_dk", "text", bench_df, bench_text_col=text_col,
+            k=int(k), min_hits=int(min_hits), ngrams=ngrams)
+
+    def held_flags(flags: DataFrame) -> DataFrame:
+        flags = flags.withColumn("_dc", F.lit(True)).persist()
+        held.append(flags)
+        return F.broadcast(flags)
+
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.withColumn("_dk", F.struct("conv_id", "turn_idx"))
+
+    convs = None
+    if scope == "conversation":
+        # one contaminated turn poisons its whole conversation.  Changed
+        # re-exports' CURRENT content joins the flag source: a changed
+        # committed turn quoting a benchmark is not in the slice (its
+        # index gate dropped it as committed), yet it poisons the
+        # conversation's clean new siblings too
+        src = keyed(slice_df).select("_dk", "text")
+        for ch in changed:
+            src = src.unionByName(keyed(ch).select("_dk", "text"))
+        convs = held_flags(flagged(src).select(
+            F.col("_dk.conv_id").alias("_dc_conv")).distinct())
+
+        def prepare(df: DataFrame) -> DataFrame:
+            # NULL-SAFE: an equi-join never matches a NULL conv_id
+            return df.join(convs, df["conv_id"].eqNullSafe(
+                F.col("_dc_conv")), "left").drop("_dc_conv")
+    else:
+        def prepare(df: DataFrame) -> DataFrame:
+            df = keyed(df)
+            return df.join(held_flags(flagged(df)), "_dk", "left").drop("_dk")
+    return RowGate(
+        "decontaminate", "_lineage_decontam", F.col("_dc").isNull(),
+        (int(k), int(min_hits), ngrams, scope,
+         float(min_containment) if min_containment is not None else None,
+         mode, against),
+        "k long, min_hits long, ngrams string, scope string, "
+        "min_containment double, mode string, benchmark_path string",
+        prepare, convs)
+
+
+def _row_gates(spark, held, slice_df, changed, decontaminate_against,
+               decontam, drop_toxic_above, gq_rules, rep_thresholds,
                quality_model_path, quality_min_score,
                perplexity_model_path, perplexity_max) -> list[RowGate]:
     """The configured row gates in charging order: a row is charged to
-    the first gate it fails.  Every gate is evaluated on every row --
-    the repetition kernel is one Arrow pass over all rows, and the
-    classifier and LM ``prepare`` joins score all rows before the
-    range exchange -- so the order decides attribution, not cost."""
+    the first gate it fails.  Decontamination comes first
+    (:func:`_decontam_gate`, with ``decontam`` its keyword arguments;
+    ``slice_df`` and ``changed`` are its conversation-scope flag source,
+    ``held`` collects its persisted sets).  Every gate is evaluated on
+    every row -- the flag and the classifier and LM ``prepare`` joins
+    score all rows before the range exchange, and the repetition kernel
+    is one Arrow pass over all rows -- so the order decides attribution,
+    not cost."""
     text = F.col("text")
     gates = []
+    if decontaminate_against is not None:
+        gates.append(_decontam_gate(spark, held, slice_df, changed,
+                                    decontaminate_against, **decontam))
     if drop_toxic_above is not None:
         from ..operators.toxicity import toxicity_score_col
         thr = float(drop_toxic_above)
@@ -976,8 +1106,8 @@ def run_pipeline(
     re-exports of already-written keys; replacing the stale OUTPUT rows
     is the caller's upsert -- Iceberg MERGE in the nominal deployment).
     To give that MERGE a source, the changed keys' current content is
-    ALSO run through the same gates as the main path -- decontamination,
-    the row gates (pre-scrub, like the main path), a replacement probe
+    ALSO run through the same gates as the main path -- the row gates,
+    decontamination first (pre-scrub, like the main path), a replacement probe
     against each committed index (new content duplicating a DIFFERENT
     surviving committed key must not land; resembling the key's own
     predecessor never deletes), and the pure sampling-fraction rule --
@@ -1043,7 +1173,40 @@ def run_pipeline(
     thresholds and the same membership; counts land in the
     ``_lineage_token_mix`` sidecar.
     Row gates (:class:`RowGate`, applied in this order; a row failing
-    several is charged to the first): ``drop_toxic_above`` (e.g. 0.3)
+    several is charged to the first): ``decontaminate_against`` (a
+    parquet path of benchmark rows with a ``decontam_text_col`` text
+    column) drops turns that share at least ``decontam_min_hits`` exact
+    ``decontam_k``-gram shingles with the benchmark set
+    (operators/decontaminate.py) -- the standard eval-contamination
+    gate -> ``_lineage_decontam`` (with the parameters).  Its
+    ``prepare`` left-joins the persisted, broadcast flagged set and its
+    keep Column is "no flag".  At the default ``turn`` scope the flag
+    is per-row-independent, so it composes with resume/dedup in any
+    order without changing winner sets, and ``n_dropped`` counts the
+    rows it removes (duplicate keys included).
+    ``decontam_scope="conversation"`` widens the drop from the flagged
+    turn to its whole conversation (one quoted eval question makes the
+    surrounding dialog eval-correlated -- the document-level rule most
+    pipelines apply; ``n_dropped`` then counts conversations, the rows
+    of the persisted poisoned-conversation set, joined null-safe so a
+    NULL ``conv_id`` drops too) -- and is therefore NOT
+    order-independent: the flag runs on the dedup stages' SURVIVORS, so
+    if near-dedup dropped a conversation's only contaminated turn in
+    favor of a near-copy in another conversation, that conversation's
+    remaining turns are kept.  Run decontamination on the raw dump (a
+    separate ``run_pipeline`` pass, or ``flag_benchmark_overlap``
+    directly) when the stricter pre-dedup document rule is required.
+    ``decontam_min_containment`` (e.g. 0.7) switches the flag rule from
+    global-set hit counting to per-benchmark-row containment
+    (:func:`operators.decontaminate.benchmark_overlap_report`): a turn
+    is contaminated when >= that fraction of any SINGLE eval row's
+    distinct k-grams appear in it, with ``decontam_min_hits`` as an
+    absolute floor.  ``decontam_mode="fuzzy"`` swaps the exact-gram
+    flag for the paraphrase-tolerant windowed-LSH containment rule
+    (:func:`operators.decontaminate.flag_benchmark_near_overlap`):
+    ``decontam_min_containment`` becomes the required verify threshold
+    and ``decontam_k`` the SHORT shingle size (e.g. 7 -- short grams
+    survive a light rewording).  ``drop_toxic_above`` (e.g. 0.3)
     drops turns whose lexicon toxicity score exceeds the threshold
     (operators/toxicity.py; NULL text scores 0 and is never dropped)
     -> ``_lineage_toxicity``.  ``gopher_quality_rules`` (the literal
@@ -1070,45 +1233,16 @@ def run_pipeline(
     rows score NULL and pass -> ``_lineage_perplexity``.  The two model
     scores are attached by a keyed token aggregate, so they require
     unique ``(conv_id, turn_idx)`` keys (run ``dedup=True`` first on
-    dirty input).  All five gates run pre-scrub, on the range-ordered
+    dirty input).  All six gates run pre-scrub, on the range-ordered
     frame, and each is evaluated on every row (a model gate also scores
     rows an earlier gate drops): one projection computes each row's
-    first failing gate, the
-    write pass itself counts rows in and each gate's drops (one
-    Observation, no extra job), and the survivors are scrubbed.  Each
-    gate's sidecar row ``(stage, n_dropped, <params>)`` is appended
-    after the write and before the retention guard can raise.
-    Changed-upsert replacement rows are re-checked against the same
-    gate list.
-    ``decontaminate_against`` (a parquet path of benchmark rows with a
-    ``decontam_text_col`` text column) drops turns that share at least
-    ``decontam_min_hits`` exact ``decontam_k``-gram shingles with the
-    benchmark set (operators/decontaminate.py) -- the standard
-    eval-contamination gate; the drop count + parameters land in the
-    ``_lineage_decontam`` sidecar.  At the default ``turn`` scope the
-    gate is per-row-independent like the toxicity gate, so it composes
-    with resume/dedup in any order without changing winner sets.
-    ``decontam_scope="conversation"`` widens the drop from the flagged
-    turn to its whole conversation (one quoted eval question makes the
-    surrounding dialog eval-correlated -- the document-level rule most
-    pipelines apply; the lineage ``n_dropped`` then counts
-    conversations) -- and is therefore NOT order-independent: the flag
-    runs on the dedup stages' SURVIVORS, so if near-dedup dropped a
-    conversation's only contaminated turn in favor of a near-copy in
-    another conversation, that conversation's remaining turns are kept.
-    Run decontamination on the raw dump (a separate
-    ``run_pipeline`` pass, or ``flag_benchmark_overlap`` directly) when
-    the stricter pre-dedup document rule is required.  ``decontam_min_containment`` (e.g. 0.7) switches
-    the flag rule from global-set hit counting to per-benchmark-row
-    containment (:func:`operators.decontaminate.benchmark_overlap_report`):
-    a turn is contaminated when >= that fraction of any SINGLE eval
-    row's distinct k-grams appear in it, with ``decontam_min_hits`` as
-    an absolute floor.  ``decontam_mode="fuzzy"`` swaps the exact-gram
-    flag for the paraphrase-tolerant windowed-LSH containment rule
-    (:func:`operators.decontaminate.flag_benchmark_near_overlap`):
-    ``decontam_min_containment`` becomes the required verify threshold
-    and ``decontam_k`` the SHORT shingle size (e.g. 7 -- short grams
-    survive a light rewording).  Lineage sidecar schemas are ADDITIVE across releases
+    first failing gate, the write pass itself counts rows in and each
+    gate's drops (one Observation, no extra job), and the survivors are
+    scrubbed.  Each gate's sidecar row ``(stage, n_dropped, <params>)``
+    is appended after the write and before the retention guard can
+    raise.  Changed-upsert replacement rows are re-checked against the
+    same gate list (at conversation scope against the same poisoned
+    set).  Lineage sidecar schemas are ADDITIVE across releases
     (e.g. r5 added ``ngrams`` to ``_lineage_decontam``): an output
     directory resumed across an upgrade can hold lineage files with and
     without a new column, so audits should read sidecars with
@@ -1182,7 +1316,6 @@ def run_pipeline(
     if gopher_quality_rules is not None:
         from ..operators.doc_quality import validate_gopher_quality_rules
         gq_rules = validate_gopher_quality_rules(gopher_quality_rules)
-    dc_drops = None
     up_cached = None
     held = []  # persisted drop sets and changed rows
     # Cache guard: every persisted frame the body creates is released in
@@ -1338,8 +1471,6 @@ def run_pipeline(
                 raise ValueError(
                     "sample_token_shares requires sample_token_stratum_col "
                     "(the column whose values the shares key on)")
-            import json as _json
-
             from ..operators.sampling import (
                 token_budget_keep_condition, token_budget_sample)
             tok = (F.col(sample_token_col) if sample_token_col
@@ -1363,13 +1494,13 @@ def run_pipeline(
                 F.coalesce(F.sum(cond.cast("long")), F.lit(0))).first()[0])
             tm_row = {"stage": "sample_token_mix",
                       "stratum_col": sample_token_stratum_col,
-                      "shares": _json.dumps(sample_token_shares,
+                      "shares": json.dumps(sample_token_shares,
                                             sort_keys=True),
                       "budget_tokens": float(tm_info["budget_tokens"]),
                       "seed": int(sample_seed),
                       "key_cols": ",".join(sp_keys),
                       "token_col": sample_token_col,
-                      "strata": _json.dumps(tm_info["strata"],
+                      "strata": json.dumps(tm_info["strata"],
                                             sort_keys=True),
                       "rows_in": tm_in, "rows_kept": tm_kept,
                       "n_dropped": tm_in - tm_kept}
@@ -1382,161 +1513,19 @@ def run_pipeline(
                        "rows_kept long, n_dropped long")
         if resume:
             df = resume_filter(df, output_path)
-        dc_drops = None
-        dc_flagger = None  # the configured contamination rule, reused by
-        # the changed-upsert stage after the write
-        if decontaminate_against is not None:
-            # per-row-independent gate, so it sits AFTER resume_filter (a
-            # resumed run only re-checks still-unwritten turns); the flagged
-            # key set is small by construction, so persist + count it for
-            # lineage, then one anti-join -- the same drop-set pattern as
-            # near-dedup.  Runs before the toxicity filter so contaminated
-            # turns never pay the toxicity regex either.
-            if decontam_scope not in ("turn", "conversation"):
-                raise ValueError(
-                    f"decontam_scope must be 'turn' or 'conversation', "
-                    f"got {decontam_scope!r}")
-            if decontam_mode not in ("exact", "fuzzy"):
-                raise ValueError(
-                    f"decontam_mode must be 'exact' or 'fuzzy', "
-                    f"got {decontam_mode!r}")
-            from ..operators.decontaminate import (
-                benchmark_overlap_report, contaminated_keys,
-                flag_benchmark_near_overlap)
-            bench_df = spark.read.parquet(decontaminate_against)
-            keyed = df.withColumn("_ck", F.struct("conv_id", "turn_idx"))
-            # shared by both per-bench-row branches (fuzzy + containment):
-            # one definition, the two modes cannot drift
-            _bench_ided = bench_df.withColumn(
-                "_bid", F.md5(F.coalesce(F.col(decontam_text_col),
-                                         F.lit(""))))
-            if decontam_mode == "fuzzy":
-                # the fuzzy branch's extra parameter contract, validated
-                # up-front (the flagger below is also reused by the
-                # changed-upsert stage, which must fail here, not there)
-                if decontam_min_containment is None:
-                    raise ValueError(
-                        "decontam_mode='fuzzy' requires "
-                        "decontam_min_containment (the containment verify "
-                        "threshold)")
-                if decontam_ngrams != "char":
-                    raise ValueError(
-                        "decontam_mode='fuzzy' supports char shingles only "
-                        f"(got ngrams={decontam_ngrams!r})")
-
-            def dc_flagger(keyed_df):
-                """``_ck``-keyed rows -> distinct flagged ``_ck`` keys.
-
-                One definition of the configured contamination rule, applied
-                to the main slice here and to the changed-upsert rows after
-                the write -- the two call sites cannot drift."""
-                if decontam_mode == "fuzzy":
-                    # paraphrase-tolerant rule: windowed MinHash-LSH
-                    # candidates + short-shingle containment verify
-                    # (flag_benchmark_near_overlap).  decontam_k is the
-                    # SHINGLE size here -- keep it SHORT (operator default
-                    # 7): short grams survive a light rewording, which is
-                    # the whole point; decontam_min_containment is the
-                    # required verify threshold.  Word grams have no fuzzy
-                    # variant (the windowing is char-positional).
-                    rep = flag_benchmark_near_overlap(
-                        keyed_df, "_ck", "text", _bench_ided, "_bid",
-                        bench_text_col=decontam_text_col,
-                        threshold=float(decontam_min_containment),
-                        shingle_k=int(decontam_k))
-                    # min_hits applies as an absolute floor exactly as in
-                    # the exact containment branch: a tiny eval row hits
-                    # 100% containment on a handful of shared short grams
-                    # otherwise
-                    return (rep.filter(F.col("n_hits")
-                                       >= F.lit(int(decontam_min_hits)))
-                            .select("_ck").distinct())
-                if decontam_min_containment is not None:
-                    # PaLM-style rule: flag a turn when >= this fraction of
-                    # ANY single benchmark row's distinct k-grams appear in
-                    # it -- per-row containment needs the attribution
-                    # report, not the global-set hit count (a turn grazing
-                    # 1 gram from each of 1000 eval rows is noise; 70% of
-                    # one row is a quote).  min_hits still applies as a
-                    # floor (tiny eval rows would otherwise hit 100%
-                    # containment on one shared gram).  The benchmark row
-                    # id is derived from the row's TEXT (md5):
-                    # deterministic under retries, and duplicate benchmark
-                    # texts collapsing into one id is exactly right --
-                    # their gram sets are identical.
-                    rep = benchmark_overlap_report(
-                        keyed_df, "_ck", "text", _bench_ided, "_bid",
-                        bench_text_col=decontam_text_col,
-                        k=int(decontam_k), min_hits=int(decontam_min_hits),
-                        ngrams=decontam_ngrams,
-                        min_containment=float(decontam_min_containment))
-                    return rep.select("_ck").distinct()
-                return contaminated_keys(
-                    keyed_df, "_ck", "text", bench_df,
-                    bench_text_col=decontam_text_col,
-                    k=int(decontam_k), min_hits=int(decontam_min_hits),
-                    ngrams=decontam_ngrams)
-
-            if decontam_scope == "conversation":
-                # one contaminated turn poisons the whole conversation (a
-                # quoted eval question makes the surrounding dialog eval-
-                # correlated too -- the standard document-level drop rule);
-                # n_dropped then counts CONVERSATIONS, cheap by construction
-                # (no extra full-input scan for a turn recount).
-                # Changed re-exports' CURRENT content joins the flag source:
-                # a changed committed turn quoting a benchmark poisons its
-                # conversation, but that turn is not in ``keyed`` (the index
-                # gate dropped it as committed) -- without the union the main
-                # gate would write the conversation's clean sibling turns
-                # while the upsert stage deleted only the changed row.  Only
-                # collected under reindex_changed; otherwise the changed
-                # content stays counted-not-acted, as documented.
-                flag_src = keyed.select("_ck", "text")
-                for _, ch in changed_rows:
-                    flag_src = flag_src.unionByName(
-                        ch.withColumn("_ck", F.struct("conv_id", "turn_idx"))
-                        .select("_ck", "text"))
-                flagged = dc_flagger(flag_src)
-                dc_drops = flagged.select(F.col("_ck.conv_id").alias(
-                    "conv_id")).distinct()
-                dc_drops.persist()
-                n_contam = dc_drops.count()
-                # NULL-SAFE anti-join: a plain equi-join never matches NULL
-                # keys, so a contaminated turn with conv_id=NULL would pass
-                # straight through the supposedly-stricter conversation
-                # scope (the turn-scope struct join is null-safe for
-                # embedded fields already)
-                base_df = keyed.drop("_ck")
-                dc = dc_drops.withColumnRenamed("conv_id", "_dc_conv")
-                df = base_df.join(
-                    dc, base_df["conv_id"].eqNullSafe(dc["_dc_conv"]),
-                    "left_anti")
-            else:
-                dc_drops = dc_flagger(keyed)
-                dc_drops.persist()
-                n_contam = dc_drops.count()  # pins the drop set for the write
-                df = keyed.join(dc_drops, "_ck", "left_anti").drop("_ck")
-            dc_row = {"stage": "decontaminate", "n_dropped": n_contam,
-                      "k": int(decontam_k), "min_hits": int(decontam_min_hits),
-                      "ngrams": decontam_ngrams, "scope": decontam_scope,
-                      "min_containment": (float(decontam_min_containment)
-                                          if decontam_min_containment
-                                          is not None else None),
-                      "mode": decontam_mode,
-                      "benchmark_path": decontaminate_against}
-            # explicit schema: min_containment is NULL when the hit-count
-            # rule is active, and inference cannot type an all-None field
-            write_rows(
-                spark, [dc_row], f"{output_path}/_lineage_decontam", "append",
-                schema="stage string, n_dropped long, k long, min_hits long, "
-                       "ngrams string, scope string, min_containment double, "
-                       "mode string, benchmark_path string")
-        gates = _row_gates(spark, drop_toxic_above, gq_rules, rep_thresholds,
-                           quality_model_path, quality_min_score,
-                           perplexity_model_path, perplexity_max)
+        gates = _row_gates(
+            spark, held, df, [ch for _, ch in changed_rows],
+            decontaminate_against,
+            dict(text_col=decontam_text_col, k=decontam_k,
+                 min_hits=decontam_min_hits, ngrams=decontam_ngrams,
+                 scope=decontam_scope,
+                 min_containment=decontam_min_containment,
+                 mode=decontam_mode),
+            drop_toxic_above, gq_rules, rep_thresholds, quality_model_path,
+            quality_min_score, perplexity_model_path, perplexity_max)
         # range-order BEFORE the row gates and the scrub: the boundary
-        # sampling job then reads the raw input columns (plus the model
-        # scores ``prepare`` attaches), and the gate kernels and scrub
+        # sampling job then reads the raw input columns (plus the flags
+        # and scores ``prepare`` attaches), and the gate kernels and scrub
         # UDFs run once, after the exchange.  Rows in and each gate's
         # drops are observed there too, on the write pass itself: an
         # Observation below the exchange would also count the rows the
@@ -1580,9 +1569,11 @@ def run_pipeline(
         m_in, m_out = _obs(in_obs), _obs(out_obs)
         # before the guard can raise: a run that trips it is exactly
         # the run whose gate counts an operator needs to see
+        n_gate = {g.name: (g.drops.count() if g.drops is not None
+                           else int(m_in.get(g.name) or 0)) for g in gates}
         for g in gates:
             write_rows(
-                spark, [(g.name, int(m_in.get(g.name) or 0), *g.params)],
+                spark, [(g.name, n_gate[g.name], *g.params)],
                 f"{output_path}/{g.sidecar}", "append",
                 schema="stage string, n_dropped long, " + g.ddl)
         guard_row = _assert_retention(
@@ -1655,7 +1646,9 @@ def run_pipeline(
         # the re-run redetect the same keys and append byte-identical
         # rows (the MERGE source should dedupe by key), never lose them.
         retro_deletes = None
-        # n_contam > 0 gates the whole branch: with zero poisoned
+        poisoned = next((g.drops for g in gates if g.drops is not None),
+                        None)
+        # a non-empty poisoned set gates the whole branch: with none
         # conversations the semi-join below is empty by construction,
         # and building it anyway would make retro_deletes a non-None
         # empty frame on EVERY converged steady-state run -- paying a
@@ -1664,8 +1657,8 @@ def run_pipeline(
         # _SUCCESS-only directory that breaks the caller's documented
         # MERGE-source schema inference) plus a spurious all-zero
         # lineage row
-        if (reindex_changed and decontam_scope == "conversation"
-                and dc_drops is not None and n_contam > 0):
+        if (reindex_changed and poisoned is not None
+                and n_gate["decontaminate"] > 0):
             # Retroactive contamination: a conversation poisoned THIS
             # run (by a new or changed turn) may have clean turns in the
             # output from earlier slices; an uninterrupted run over the
@@ -1681,12 +1674,11 @@ def run_pipeline(
                            and index_store.committed(
                                spark, f"{f.path}/meta")), None)
             if ck_fam is not None:
-                dcv_r = dc_drops.withColumnRenamed("conv_id", "_dc_conv")
                 retro_deletes = (
                     ck_fam.committed(spark, ck_fam.path).select(
                         F.col("doc_id.conv_id").alias("conv_id"),
                         F.col("doc_id.turn_idx").alias("turn_idx"))
-                    .join(F.broadcast(dcv_r),
+                    .join(poisoned,
                           F.col("conv_id").eqNullSafe(F.col("_dc_conv")),
                           "left_semi"))
         if changed_rows or retro_deletes is not None:
@@ -1749,27 +1741,14 @@ def run_pipeline(
                 up_keyed = up.withColumn(
                     "_ck", F.struct("conv_id", "turn_idx"))
                 del_srcs = []  # one-column ``_ck`` frames to delete
-                if dc_flagger is not None:
-                    if decontam_scope == "conversation":
-                        # the main gate's poisoned-conversation set
-                        # already includes convs flagged by changed rows
-                        # (the flag source unions them) -- reuse it, one
-                        # rule, no second flagger pass
-                        dcv = dc_drops.withColumnRenamed(
-                            "conv_id", "_dc_conv")
-                        del_srcs.append(
-                            up_keyed.join(
-                                F.broadcast(dcv),
-                                up_keyed["conv_id"].eqNullSafe(
-                                    F.col("_dc_conv")),
-                                "left_semi").select("_ck"))
-                    else:
-                        del_srcs.append(dc_flagger(up_keyed))
                 if gates:
-                    # the main path's row gates, same order and same
+                    # the main path's gates, same order and same
                     # predicates, evaluated pre-scrub (the post-scrub
                     # frame's columns belong to scrub_transform; a
-                    # grouped transform has no ``text`` column)
+                    # grouped transform has no ``text`` column); the
+                    # conversation-scope decontamination reuses the
+                    # main path's poisoned set, which already includes
+                    # conversations the changed rows poison
                     del_srcs.append(
                         _prepared(up_keyed, gates)
                         .filter(_gate_index(gates) != 0).select("_ck"))
@@ -1884,7 +1863,7 @@ def run_pipeline(
         for fam, row, _, _ in gated:
             stats.update((k, row[col]) for k, col in fam.stats)
         if decontaminate_against is not None:
-            stats["n_contaminated_dropped"] = n_contam
+            stats["n_contaminated_dropped"] = n_gate["decontaminate"]
         if sample_fraction is not None or sample_n_per_stratum is not None:
             stats["n_sample_dropped"] = sp_row["n_dropped"]
         if sample_token_shares is not None:
@@ -1892,7 +1871,7 @@ def run_pipeline(
             stats["token_mix_budget"] = tm_row["budget_tokens"]
         return stats
     finally:
-        for _f in (*held, dc_drops, up_cached):
+        for _f in (*held, up_cached):
             if _f is not None:
                 _f.unpersist()
 
@@ -1903,7 +1882,6 @@ def run_pipeline(
 
 def main() -> None:
     import argparse
-    import json
 
     from ..session import get_spark
 
@@ -1937,7 +1915,9 @@ def add_pipeline_args(ap) -> None:
     """The shared pipeline-stage CLI surface, defined ONCE for every
     entry point (the in-package runner above and the spark-submit wrapper
     tools/run_pipeline.py) so the two argparse blocks cannot drift.
-    Pair with :func:`pipeline_kwargs`."""
+    Each flag's ``dest`` is its :func:`run_pipeline` keyword and its
+    ``type`` parses the value that keyword takes, so
+    :func:`pipeline_kwargs` only collects them."""
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--dedup", action="store_true",
                     help="drop exact-duplicate turns before scrubbing")
@@ -1946,7 +1926,8 @@ def add_pipeline_args(ap) -> None:
                     "duplicate (shingle Jaccard >= J) earlier in "
                     "(conv_id, turn_idx) order; capping metrics land in "
                     "the _lineage_neardup sidecar")
-    ap.add_argument("--near-dedup-index", default=None, metavar="PATH",
+    ap.add_argument("--near-dedup-index", dest="near_dedup_index_path",
+                    default=None, metavar="PATH",
                     help="incremental near-dedup: LSH-join this ingest "
                     "slice against the persisted MinHash index at PATH "
                     "(bootstrap-created on first run, appended after every "
@@ -1961,7 +1942,8 @@ def add_pipeline_args(ap) -> None:
                     ">= C matches an earlier turn (or the corpus, with "
                     "--embedding-index); input must carry the embedding "
                     "column")
-    ap.add_argument("--embedding-index", default=None, metavar="PATH",
+    ap.add_argument("--embedding-index", dest="embedding_index_path",
+                    default=None, metavar="PATH",
                     help="incremental embedding dedup against the "
                     "persisted hyperplane index at PATH (bootstrap-created "
                     "on first run, appended after every successful write)")
@@ -1986,7 +1968,8 @@ def add_pipeline_args(ap) -> None:
     ap.add_argument("--sample-seed", type=int, default=0,
                     help="sampling seed (default: 0; disjoint seeds give "
                     "independent samples)")
-    ap.add_argument("--sample-key-cols", default=None, metavar="C1,C2",
+    ap.add_argument("--sample-key-cols", type=_csv, default=None,
+                    metavar="C1,C2",
                     help="comma-separated key columns the sampling hash "
                     "is keyed on (default: conv_id,turn_idx)")
     ap.add_argument("--sample-n-per-stratum", type=int, default=None,
@@ -1994,20 +1977,21 @@ def add_pipeline_args(ap) -> None:
                     "rows per stratum, by the same deterministic hash "
                     "rank (requires --sample-strata-cols; duplicate keys "
                     "fail loudly -- run with --dedup)")
-    ap.add_argument("--sample-strata-cols", default=None, metavar="C1,C2",
+    ap.add_argument("--sample-strata-cols", type=_csv, default=None,
+                    metavar="C1,C2",
                     help="comma-separated stratum columns for "
                     "--sample-n-per-stratum (e.g. role)")
     ap.add_argument("--drop-toxic-above", type=float, default=None,
                     metavar="T", help="drop turns with toxicity score > T")
-    ap.add_argument("--gopher-quality-rules", default=None,
-                    metavar="GOPHER|JSON",
+    ap.add_argument("--gopher-quality-rules", type=_gopher_or_json,
+                    default=None, metavar="GOPHER|JSON",
                     help="drop turns breaching any Gopher quality rule: "
                     "the literal 'gopher' for the full Table A1 catalog "
                     "(English-centric), or a JSON metric->[min,max] dict "
                     "with nulls for unbounded sides (counts land in the "
                     "_lineage_docquality sidecar)")
-    ap.add_argument("--repetition-thresholds", default=None,
-                    metavar="GOPHER|JSON",
+    ap.add_argument("--repetition-thresholds", type=_gopher_or_json,
+                    default=None, metavar="GOPHER|JSON",
                     help="drop turns breaching any Gopher repetition "
                     "threshold: the literal 'gopher' for the standard "
                     "catalog, or a JSON metric->max dict (counts land "
@@ -2052,7 +2036,8 @@ def add_pipeline_args(ap) -> None:
                     metavar="C", help="PaLM-style rule: flag when >= C of "
                     "any single benchmark row's distinct k-grams appear "
                     "in the turn (default: off = global-set min-hits rule)")
-    ap.add_argument("--sample-token-shares", default=None, metavar="JSON",
+    ap.add_argument("--sample-token-shares", type=_json, default=None,
+                    metavar="JSON",
                     help="token-budget mixture gate: JSON dict of "
                     "{stratum value: target token share} (requires "
                     "--sample-token-stratum-col)")
@@ -2078,55 +2063,26 @@ def add_pipeline_args(ap) -> None:
 
 
 def pipeline_kwargs(args) -> dict:
-    """The :func:`run_pipeline` keyword arguments for a parsed
-    :func:`add_pipeline_args` namespace."""
-    return dict(
-        resume=args.resume,
-        dedup=args.dedup,
-        near_dedup_threshold=args.near_dedup_threshold,
-        near_dedup_index_path=args.near_dedup_index,
-        near_dedup_scope=args.near_dedup_scope,
-        embedding_dedup_threshold=args.embedding_dedup_threshold,
-        embedding_index_path=args.embedding_index,
-        embedding_col=args.embedding_col,
-        embedding_n_planes=args.embedding_n_planes,
-        reindex_changed=args.reindex_changed,
-        sample_fraction=args.sample_fraction,
-        sample_seed=args.sample_seed,
-        sample_key_cols=(args.sample_key_cols.split(",")
-                         if args.sample_key_cols else None),
-        sample_n_per_stratum=args.sample_n_per_stratum,
-        sample_strata_cols=(args.sample_strata_cols.split(",")
-                            if args.sample_strata_cols else None),
-        drop_toxic_above=args.drop_toxic_above,
-        repetition_thresholds=(
-            args.repetition_thresholds
-            if args.repetition_thresholds in (None, "gopher")
-            else __import__("json").loads(args.repetition_thresholds)),
-        gopher_quality_rules=(
-            args.gopher_quality_rules
-            if args.gopher_quality_rules in (None, "gopher")
-            else __import__("json").loads(args.gopher_quality_rules)),
-        quality_model_path=args.quality_model_path,
-        quality_min_score=args.quality_min_score,
-        perplexity_model_path=args.perplexity_model_path,
-        perplexity_max=args.perplexity_max,
-        decontaminate_against=args.decontaminate_against,
-        decontam_text_col=args.decontam_text_col,
-        decontam_k=args.decontam_k,
-        decontam_min_hits=args.decontam_min_hits,
-        decontam_ngrams=args.decontam_ngrams,
-        decontam_scope=args.decontam_scope,
-        decontam_min_containment=args.decontam_min_containment,
-        decontam_mode=args.decontam_mode,
-        sample_token_shares=(__import__("json").loads(
-            args.sample_token_shares) if args.sample_token_shares
-            else None),
-        sample_token_stratum_col=args.sample_token_stratum_col,
-        sample_token_budget=args.sample_token_budget,
-        sample_token_col=args.sample_token_col,
-        sample_token_allow_short=args.sample_token_allow_short,
-    )
+    """The :func:`run_pipeline` keyword arguments of a parsed
+    :func:`add_pipeline_args` namespace: each flag's ``dest`` is its
+    keyword."""
+    import argparse
+
+    ap = argparse.ArgumentParser(add_help=False)
+    add_pipeline_args(ap)
+    return {k: getattr(args, k) for k in vars(ap.parse_args([]))}
+
+
+def _csv(s: str) -> Optional[list]:
+    return s.split(",") if s else None
+
+
+def _json(s: str):
+    return json.loads(s) if s else None
+
+
+def _gopher_or_json(s: str):
+    return s if s == "gopher" else json.loads(s)
 
 
 if __name__ == "__main__":

@@ -179,6 +179,35 @@ def test_pipeline_decontaminate_gate(spark, tmp_path):
     assert spark.read.parquet(out2).count() == 4
 
 
+def test_pipeline_decontaminate_counts_rows_of_duplicate_keys(spark,
+                                                             tmp_path):
+    """At turn scope ``n_dropped`` counts the rows the gate removes, so
+    with a contaminated key on two rows (``dedup=False``) the gate
+    arithmetic still closes: ``rows_in + n_dropped`` = input rows."""
+    from sumi_agent_spark.plans.pipeline import run_pipeline
+
+    ts = datetime.datetime(2025, 1, 1)
+    rows = [
+        ("c1", 0, "user", DOCS[0][1], "", ts),     # contaminated
+        ("c1", 0, "user", DOCS[0][1], "", ts),     # same key, same text
+        ("c1", 1, "user", DOCS[1][1], "", ts),     # clean
+    ]
+    inp = str(tmp_path / "dk_in.parquet")
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp").write.parquet(inp)
+    bench_path = str(tmp_path / "bench.parquet")
+    _bench_df(spark).write.parquet(bench_path)
+    out = str(tmp_path / "dk_out")
+    stats = run_pipeline(spark, inp, out, decontaminate_against=bench_path)
+    assert stats["n_contaminated_dropped"] == 2
+    side = spark.read.parquet(out + "/_lineage_decontam").toPandas()
+    guards = spark.read.parquet(out + "/_lineage_guards").toPandas()
+    assert side["n_dropped"].tolist() == [2]
+    assert int(guards["rows_in"].iloc[0]) + 2 == len(rows)
+    assert stats["rows"] == 1
+
+
 def test_pipeline_decontaminate_resume_idempotent(spark, tmp_path):
     """A resumed run with the gate re-drops the same turns and writes
     nothing new when the first run completed."""

@@ -18,6 +18,9 @@ GIBBERISH = "zxq glorp wubble qqqq snorfle blargh wibble zonk"
 # scores as good prose for the classifier, but its unseen tokens lift
 # the unigram LM's perplexity above the cutoff
 MIXED = "the committee measured zxq glorp wubble qqqq snorfle blargh"
+# an eval question, and a toxic turn quoting it
+EVAL_Q = "which river crosses the old capital"
+TOXIC_QUOTE = "worthless idiot loser moron " + EVAL_Q
 
 
 def _write_turns(rows, path):
@@ -110,9 +113,12 @@ def _models(spark, tmp_path):
 
 
 def test_all_row_gates_charge_first_failing_gate(spark, tmp_path):
-    """All five gates on.  A row failing several gates is counted once,
+    """All six gates on.  A row failing several gates is counted once,
     by the earliest; per-gate counts match an independent replica built
     from the operators' stats frames; every sidecar keeps its schema."""
+    from sidecar_schemas import DECONTAM
+    from sumi_agent_spark.operators.decontaminate import (
+        flag_benchmark_overlap)
     from sumi_agent_spark.operators.doc_quality import gopher_quality_stats
     from sumi_agent_spark.operators.lm_perplexity import score_perplexity
     from sumi_agent_spark.operators.quality_classifier import (
@@ -124,7 +130,9 @@ def test_all_row_gates_charge_first_failing_gate(spark, tmp_path):
     qc, qpath, lm, lpath = _models(spark, tmp_path)
     rows = [("a", 0, CLEAN), ("a", 1, TOXIC_SPAM), ("a", 2, SHORT),
             ("b", 0, SPAM), ("b", 1, JUNK), ("b", 2, GIBBERISH),
-            ("b", 3, None), ("b", 4, MIXED)]
+            ("b", 3, None), ("b", 4, MIXED), ("c", 0, TOXIC_QUOTE)]
+    bench_path = str(tmp_path / "bench.parquet")
+    spark.createDataFrame([(EVAL_Q,)], ["text"]).write.parquet(bench_path)
     cand = spark.createDataFrame(
         [(i, t) for i, (_, _, t) in enumerate(rows)],
         "doc_id long, text string")
@@ -137,18 +145,22 @@ def test_all_row_gates_charge_first_failing_gate(spark, tmp_path):
     assert q[0] > min_score > q[4] and p[0] < max_ppl < p[7]
     rules = {"word_count": (5, None)}
 
+    dc = {r["doc_id"]: r["contaminated"] for r in flag_benchmark_overlap(
+        cand, "doc_id", "text", spark.read.parquet(bench_path)).collect()}
     tox = {r["doc_id"]: r["toxicity"] > 0.3
            for r in toxicity_scores(cand).collect()}
     gq = {r["doc_id"]: r["word_count"] < 5
           for r in gopher_quality_stats(cand).collect()}
     rep = {r["doc_id"]: any(r[k] > v for k, v in GOPHER_THRESHOLDS.items())
            for r in repetition_stats(cand).collect()}
-    fails = {i: [tox[i], gq[i], rep[i], q[i] < min_score,
+    fails = {i: [dc[i], tox[i], gq[i], rep[i], q[i] < min_score,
                  p[i] is not None and p[i] > max_ppl]
              for i in range(len(rows))}
-    # the toxic spam row fails toxicity AND repetition
-    assert fails[1][0] and fails[1][2]
-    expect = [0] * 5
+    # the toxic spam row fails toxicity AND repetition; the toxic quote
+    # fails decontamination AND toxicity
+    assert fails[1][1] and fails[1][3]
+    assert fails[8][0] and fails[8][1]
+    expect = [0] * 6
     for f in fails.values():
         if any(f):
             expect[f.index(True)] += 1
@@ -158,7 +170,8 @@ def test_all_row_gates_charge_first_failing_gate(spark, tmp_path):
     _write_turns(rows, inp)
     out = str(tmp_path / "out")
     stats = run_pipeline(
-        spark, inp, out, drop_toxic_above=0.3, gopher_quality_rules=rules,
+        spark, inp, out, decontaminate_against=bench_path,
+        drop_toxic_above=0.3, gopher_quality_rules=rules,
         repetition_thresholds="gopher", quality_model_path=qpath,
         quality_min_score=min_score, perplexity_model_path=lpath,
         perplexity_max=max_ppl)
@@ -169,6 +182,7 @@ def test_all_row_gates_charge_first_failing_gate(spark, tmp_path):
     assert stats["rows_in"] == len(kept)
 
     sidecars = [
+        ("_lineage_decontam", "decontaminate", DECONTAM[2:]),
         ("_lineage_toxicity", "toxicity", [("threshold", "double")]),
         ("_lineage_docquality", "gopher_quality", [("rules", "string")]),
         ("_lineage_repetition", "repetition", [("thresholds", "string")]),
