@@ -1495,13 +1495,13 @@ def run_pipeline(
             tm_row = {"stage": "sample_token_mix",
                       "stratum_col": sample_token_stratum_col,
                       "shares": json.dumps(sample_token_shares,
-                                            sort_keys=True),
+                                           sort_keys=True),
                       "budget_tokens": float(tm_info["budget_tokens"]),
                       "seed": int(sample_seed),
                       "key_cols": ",".join(sp_keys),
                       "token_col": sample_token_col,
                       "strata": json.dumps(tm_info["strata"],
-                                            sort_keys=True),
+                                           sort_keys=True),
                       "rows_in": tm_in, "rows_kept": tm_kept,
                       "n_dropped": tm_in - tm_kept}
             write_rows(
