@@ -1648,8 +1648,8 @@ def run_pipeline(
         retro_deletes = None
         poisoned = next((g.drops for g in gates if g.drops is not None),
                         None)
-        # a non-empty poisoned set gates the whole branch: with none
-        # conversations the semi-join below is empty by construction,
+        # a non-empty poisoned-conversation set gates the whole branch:
+        # without one the semi-join below is empty by construction,
         # and building it anyway would make retro_deletes a non-None
         # empty frame on EVERY converged steady-state run -- paying a
         # committed-key scan per run and appending a zero-row
