@@ -124,10 +124,18 @@ def test_append_then_next_slice_sees_previous_slice(spark, slice_df,
 def test_incremental_capping_counts_full_bucket(spark, tmp_path):
     """Bucket caps count old + new rows together: 600 corpus copies + 600
     slice copies of one text exceed a 1000 cap even though neither side
-    alone does -- and the capped run yields zero pairs."""
+    alone does -- and the capped run yields zero pairs.  Holds for the doc
+    index and for the group index (one-row groups), and each incremental
+    operator's observed capping metrics equal its audit's recount."""
     from pyspark.sql import Observation
 
     from sumi_agent_spark.operators.dedup import capped_bucket_metrics
+    from sumi_agent_spark.operators.minhash_index import (
+        minhash_grouped_index_bucket_audit,
+        minhash_index_bucket_audit,
+        minhash_near_duplicates_grouped_incremental,
+        write_grouped_minhash_index,
+    )
 
     text = "identical boilerplate beyond the cap " * 3
     corpus = spark.range(600).select(
@@ -139,22 +147,32 @@ def test_incremental_capping_counts_full_bucket(spark, tmp_path):
     slice_df = spark.range(600).select(
         (F.col("id") + 10).alias("doc_id"),
         F.lit(text).alias("text")).unionByName(extra)
-    path = str(tmp_path / "idx")
-    write_minhash_index(corpus, "doc_id", "text", path, threshold=0.8)
+    for granularity, write, incremental, audit in [
+            ("doc", write_minhash_index, minhash_near_duplicates_incremental,
+             minhash_index_bucket_audit),
+            ("group", write_grouped_minhash_index,
+             minhash_near_duplicates_grouped_incremental,
+             minhash_grouped_index_bucket_audit)]:
+        path = str(tmp_path / f"idx_{granularity}")
+        write(corpus, "doc_id", "text", path, threshold=0.8)
 
-    obs = Observation("inc_capping")
-    inc = minhash_near_duplicates_incremental(
-        slice_df, "doc_id", "text", path, max_bucket_size=1000,
-        observation=obs)
-    assert _pairset(inc.select("id_a", "id_b", "jaccard")) \
-        .keys() == {(0, 1)}  # the hot bucket contributed nothing
-    m = capped_bucket_metrics(obs)
-    # threshold 0.8 -> 16 bands; each band's hot bucket holds 600 corpus
-    # + 600 slice rows -- over the cap only because both sides count
-    assert m is not None
-    assert m["max_bucket_n"] == 1200
-    assert m["n_capped_buckets"] == 16
-    assert m["n_capped_rows"] == 16 * 1200
+        obs = Observation(f"inc_capping_{granularity}")
+        inc = incremental(slice_df, "doc_id", "text", path,
+                          max_bucket_size=1000, observation=obs)
+        # the hot bucket contributed nothing
+        assert _pairset(inc.select("id_a", "id_b", "jaccard")) \
+            .keys() == {(0, 1)}, granularity
+        m = capped_bucket_metrics(obs)
+        # threshold 0.8 -> 16 bands; each band's hot bucket holds 600
+        # corpus + 600 slice rows -- over the cap only because both sides
+        # count
+        assert m is not None, granularity
+        assert m["max_bucket_n"] == 1200
+        assert m["n_capped_buckets"] == 16
+        assert m["n_capped_rows"] == 16 * 1200
+        # the audit recounts exactly the buckets the run saw
+        assert audit(slice_df, "doc_id", "text", path,
+                     max_bucket_size=1000) == m, granularity
 
 
 def test_rerun_of_completed_slice_is_inert(spark, corpus, slice_df,
