@@ -5,7 +5,8 @@ Per-query isolation with the noop sink (§1.4), repeatable timing, and
 frozen ``bench.py`` stays the round-over-round comparator; this file
 exists so optimization work can (a) time one query at a time without
 the suite around it and (b) commit before/after physical plans under
-``plans/r07/``.
+``plans/r07/``.  Written plans are normalized (:func:`normalize_plan`), so
+the plans of two checkouts diff line by line.
 
 Usage:
   python bench_extra.py --sf /root/testdata/sf1.0 --queries conv_near_dup
@@ -18,10 +19,27 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+# ids a session hands out from global counters: expression ids
+# (``doc_id#1234L``), exchange plan ids and RDD ids
+_PLAN_IDS = [re.compile(p) for p in
+             (r"(?<=#)(\d+)", r"(?<=plan_id=)(\d+)", r"(?<=RDD\[)(\d+)(?=\])")]
+
+
+def normalize_plan(plan: str) -> str:
+    """Renumber each kind of session-global id in ``plan`` by first
+    appearance, so two runs of the same plan print the same text while
+    references between nodes stay visible."""
+    for pat in _PLAN_IDS:
+        ids: dict[str, str] = {}
+        plan = pat.sub(lambda m: ids.setdefault(m[1], str(len(ids) + 1)),
+                       plan)
+    return plan
 
 
 def main() -> None:
@@ -56,7 +74,7 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted")
             with open(os.path.join(args.plans,
                                    f"{name}_{args.suffix}.txt"), "w") as f:
-                f.write(plan)
+                f.write(normalize_plan(plan))
         if args.no_time:
             continue
         times = []
