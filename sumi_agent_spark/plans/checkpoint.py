@@ -9,9 +9,9 @@ is available behind ``partition_stats=True`` which prices one extra
 column-pruned scan of the written output.
 
 Restart is idempotent: ``resume_filter`` anti-joins processed
-``(conv_id, turn_idx)`` keys out of the input, reading only the output's key
-columns (column pruning keeps that scan cheap).  Plain DataFrame ops -- no
-custom commit protocol.
+``(conv_id, turn_idx)`` keys out of the input, null-safe, reading only the
+output's key columns (column pruning keeps that scan cheap).  Plain
+DataFrame ops -- no custom commit protocol.
 """
 
 from __future__ import annotations
@@ -108,7 +108,8 @@ def write_with_lineage(
 def resume_filter(df: DataFrame, output_path: str) -> DataFrame:
     """Drop (conv_id, turn_idx) pairs already present in the output.
 
-    Only a missing output path means "fresh start".  Any other read error
+    The anti-join is null-safe: a plain equi-join never matches a NULL
+    ``conv_id``, so every restart would append those rows again.  Only a missing output path means "fresh start".  Any other read error
     (corrupt files, schema trouble, transient storage failure) propagates:
     swallowing it would silently reprocess everything and append duplicate
     rows, breaking the idempotent-restart guarantee."""
@@ -116,14 +117,14 @@ def resume_filter(df: DataFrame, output_path: str) -> DataFrame:
 
     spark = df.sparkSession
     try:
-        done = spark.read.parquet(output_path).select("conv_id", "turn_idx")
+        done = spark.read.parquet(output_path).select(
+            F.col("conv_id").alias("_done_conv"),
+            F.col("turn_idx").alias("_done_turn"))
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return df  # nothing written yet
         raise
-    return df.join(done, on=["conv_id", "turn_idx"], how="left_anti")
-
-
-def read_lineage(spark, output_path: str) -> DataFrame:
-    return spark.read.parquet(f"{output_path}/_lineage")
+    return df.join(done, df["conv_id"].eqNullSafe(F.col("_done_conv"))
+                   & df["turn_idx"].eqNullSafe(F.col("_done_turn")),
+                   "left_anti")

@@ -183,6 +183,28 @@ def test_run_pipeline_and_resume(spark, fixture_pdf, tmp_path):
     assert lineage2["n_turns"].sum() == 150
 
 
+def test_resume_after_complete_run_keeps_null_conv_id_rows_once(
+        spark, fixture_pdf, tmp_path):
+    """A resume over fully-processed input writes nothing: the resume
+    anti-join is null-safe, so a NULL-conv_id turn is not appended again."""
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    pdf = fixture_pdf.head(20).copy()
+    pdf.loc[pdf.index[3], "conv_id"] = None
+    pdf.to_parquet(inp, index=False)
+    run_pipeline(spark, inp, out)
+
+    def written():
+        return (spark.read.parquet(out).toPandas()
+                .sort_values(["conv_id", "turn_idx"], na_position="first")
+                .reset_index(drop=True))
+    before = written()
+    assert before["conv_id"].isna().sum() == 1
+    stats = run_pipeline(spark, inp, out, resume=True)
+    assert stats["rows"] == 0
+    pd.testing.assert_frame_equal(written(), before)
+
+
 def test_deduplicate_turns(spark):
     import datetime
 
