@@ -1801,31 +1801,27 @@ def run_pipeline(
                         retro_rows, allowMissingColumns=True)
                 else:
                     out_up = retro_rows
-            out_up.persist()
-            try:
-                uc = out_up.agg(*[
-                    F.coalesce(F.sum((F.col("_action") == a).cast("long")),
-                               F.lit(0)).alias(f"n_{a}")
-                    for a in ("upsert", "update", "delete")]).first()
-                out_up.write.mode("append").parquet(
-                    f"{output_path}/_changed_upsert")
-                # additive schema (n_update / n_sampled_out joined the
-                # row): read the sidecar with mergeSchema=true, like
-                # every lineage sidecar here
-                write_rows(
-                    spark,
-                    [{"stage": "changed_upsert",
-                      "n_upsert": int(uc["n_upsert"]),
-                      "n_update": int(uc["n_update"]),
-                      "n_delete": int(uc["n_delete"]),
-                      "n_sampled_out": int(n_sampled_out)}],
-                    f"{output_path}/_lineage_upsert", "append",
-                    schema="stage string, n_upsert long, n_update long, "
-                           "n_delete long, n_sampled_out long")
-            finally:
-                out_up.unpersist()
-                if up_cached is not None:
-                    up_cached.unpersist()
+            # the action counts are observed on the write itself
+            actions = ("upsert", "update", "delete")
+            up_obs = Observation("changed_upsert")
+            (out_up.observe(up_obs, *[
+                F.sum((F.col("_action") == a).cast("long")).alias(a)
+                for a in actions])
+             .write.mode("append").parquet(f"{output_path}/_changed_upsert"))
+            uc = _obs(up_obs)
+            # additive schema (n_update / n_sampled_out joined the row):
+            # read the sidecar with mergeSchema=true, like every lineage
+            # sidecar here
+            write_rows(
+                spark,
+                [{"stage": "changed_upsert",
+                  **{f"n_{a}": int(uc.get(a) or 0) for a in actions},
+                  "n_sampled_out": int(n_sampled_out)}],
+                f"{output_path}/_lineage_upsert", "append",
+                schema="stage string, n_upsert long, n_update long, "
+                       "n_delete long, n_sampled_out long")
+            if up_cached is not None:  # the outer finally covers a raise
+                up_cached.unpersist()
         # reindex_changed runs LAST, after the appends (disjoint key
         # sets; changed_rows is persisted, so the reindex sees exactly
         # the rows the gate counted).  Delete-action replacements are
