@@ -13,6 +13,17 @@ n-gram Jaccard verification, and embedding-cosine near-dup.  All Spark-first:
   LSH false positives never reach the output -- recall is the only
   approximation, tuned by (n_hashes, bands).
 
+One LSH core serves the batch operators here and the incremental and
+probe operators of ``minhash_index`` and ``embedding_index``:
+``_capped`` (full-bucket count window, optional capping Observation, cap
+filter), ``_canonical_candidate_pairs`` (incremental pair orientation),
+``_pair_ids`` (candidate ids for restricting verify inputs),
+``_verified_values`` (per-doc values scored by ``_array_jaccard`` or
+``cosine_cols``), ``_row_jaccard`` (exploded group shingle rows, joined
+and counted) and ``_filter_predecessor_shadow`` (the value probes'
+carve-out).  A change to candidate generation or verification is made
+once, there.
+
 Determinism: all hash families derive from fixed seeds; no wall clock.
 """
 
@@ -290,8 +301,7 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str,
             .filter(F.col("n_docs") > 1))
 
 
-def _observe_capping(sized: DataFrame, observation, cap: int,
-                     count_col: str = "bucket_n") -> DataFrame:
+def _observe_capping(sized: DataFrame, observation, cap: int) -> DataFrame:
     """Attach recall-risk metrics for silently-capped LSH buckets.
 
     Buckets larger than ``max_bucket_size`` are dropped before the
@@ -315,7 +325,7 @@ def _observe_capping(sized: DataFrame, observation, cap: int,
     :func:`capped_bucket_metrics` returns ``None`` for that case; use
     :func:`minhash_bucket_audit` (one dedicated aggregation job) when an
     exact answer is required for an empty-output run."""
-    n = F.col(count_col)
+    n = F.col("bucket_n")
     capped = n > max(cap, 0)
     return sized.observe(
         observation,
@@ -380,15 +390,9 @@ def _banded(sig_df: DataFrame, id_col: str, bands: int,
 def _banded_pairs(sig_df: DataFrame, id_col: str, bands: int,
                   max_bucket_size: int, observation=None) -> DataFrame:
     """Self-join signature bands -> distinct candidate (id_a < id_b) pairs."""
-    banded = _banded(sig_df, id_col, bands)
-    from pyspark.sql.window import Window
-
     # cap pathological buckets before the quadratic self-join
-    sized = banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "band_key")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size).drop("bucket_n")
+    capped = _capped(_banded(sig_df, id_col, bands), ["band", "band_key"],
+                     max_bucket_size, observation)
     a = capped.alias("a")
     b = capped.alias("b")
     return (a.join(b, ["band", "band_key"])
@@ -503,6 +507,79 @@ def _filter_predecessor_shadow(
             .select("id_a", "id_b",
                     F.round(score_col, 6).alias(score_col),
                     "new_a", "new_b"))
+
+
+def _capped(rows: DataFrame, bucket_cols, max_bucket_size: int,
+            observation=None) -> DataFrame:
+    """``rows`` without the rows of buckets larger than
+    ``max_bucket_size``.  The window counts each FULL bucket (every row
+    sharing ``bucket_cols``, whichever side or run it came from); the
+    optional ``observation`` reports what the cap dropped
+    (:func:`_observe_capping`).  Every LSH operator caps through here."""
+    from pyspark.sql.window import Window
+
+    sized = rows.withColumn(
+        "bucket_n", F.count("*").over(Window.partitionBy(bucket_cols)))
+    if observation is not None:
+        sized = _observe_capping(sized, observation, max_bucket_size)
+    return sized.filter(F.col("bucket_n") <= max_bucket_size).drop("bucket_n")
+
+
+def _pair_ids(pairs: DataFrame, name: str) -> DataFrame:
+    """The distinct ids on either side of a pair frame, as one column
+    ``name``: the candidate set the verify inputs are restricted to."""
+    return (pairs.select(F.col("id_a").alias(name))
+            .union(pairs.select(F.col("id_b").alias(name)))
+            .distinct())
+
+
+def _array_jaccard(x, y):
+    """Exact Jaccard of two array columns as a double expression."""
+    inter = F.size(F.array_intersect(x, y)).cast("double")
+    return inter / ((F.size(x) + F.size(y)).cast("double") - inter)
+
+
+def _verified_values(pairs: DataFrame, values: DataFrame, col: str,
+                     sim_fn, threshold: float, score: str) -> DataFrame:
+    """Value verify of candidate ``pairs``: each side's ``col`` joins in
+    from ``values`` ``(doc_id, col)`` as ``{col}_a`` / ``{col}_b``,
+    ``sim_fn`` (array Jaccard, cosine) scores it into ``score``, and
+    pairs below ``threshold`` drop.  The score is left unrounded."""
+    va, vb = (values.select(F.col("doc_id").alias(f"id_{s}"),
+                            F.col(col).alias(f"{col}_{s}")) for s in "ab")
+    return (pairs.join(va, "id_a").join(vb, "id_b")
+            .withColumn(score, sim_fn(F.col(f"{col}_a"), F.col(f"{col}_b")))
+            .filter(F.col(score) >= threshold))
+
+
+def _row_jaccard(pairs: DataFrame, rows_a: DataFrame, rows_b: DataFrame,
+                 threshold: float, sizes: Optional[DataFrame] = None
+                 ) -> DataFrame:
+    """Exact Jaccard of candidate ``pairs`` over exploded set rows:
+    ``id_a``'s set is its ``(gid, sh)`` rows in ``rows_a``, ``id_b``'s
+    its rows in ``rows_b``.  Set sizes ``(gid, n_sh)`` come from
+    ``sizes`` when given, else each side's rows are counted.  The
+    intersection is two joins and a count grouped by every column of
+    ``pairs``, so no per-group array is ever built.  Keeps
+    ``jaccard >= threshold`` (unrounded).  The inner joins drop pairs
+    with no shared row and ids with no rows: their Jaccard is 0 or
+    undefined, and no threshold > 0 keeps them."""
+    def n(rows, s):
+        sz = (sizes if sizes is not None
+              else rows.groupBy("gid").agg(F.count("*").alias("n_sh")))
+        return sz.select(F.col("gid").alias(f"id_{s}"),
+                         F.col("n_sh").alias(f"n_{s}"))
+    ea = rows_a.select(F.col("gid").alias("id_a"), "sh")
+    eb = rows_b.select(F.col("gid").alias("id_b"), "sh")
+    keys = ["id_a", "id_b", *(c for c in pairs.columns
+                              if c not in ("id_a", "id_b"))]
+    inter = (pairs.join(ea, "id_a").join(eb, ["id_b", "sh"])
+             .groupBy(*keys).agg(F.count("*").alias("n_inter")))
+    jac = (F.col("n_inter").cast("double")
+           / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"))
+    return (inter.join(n(rows_a, "a"), "id_a").join(n(rows_b, "b"), "id_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= threshold))
 
 
 def resolve_bands(threshold: float, n_hashes: int,
@@ -629,14 +706,8 @@ def minhash_near_duplicates(
                           max_bucket_size, observation).localCheckpoint(eager=False)
     sizes = ss.select("doc_id", F.size("sh").alias("_n"))
     pairs = _size_prefiltered_pairs(pairs, sizes, threshold)
-    sh = ss.select("doc_id", "sh")
-    sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (pairs.join(sa, "id_a").join(sb, "id_b")
-            .withColumn("jaccard", inter / union)
-            .filter(F.col("jaccard") >= threshold)
+    return (_verified_values(pairs, ss.select("doc_id", "sh"), "sh",
+                             _array_jaccard, threshold, "jaccard")
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
@@ -699,10 +770,9 @@ def minhash_near_duplicates_grouped(
       two joins + a count -- every step is a shuffle of scalar rows, never
       a per-group in-memory set.
 
-    Same banding, capping and observation machinery as
-    :func:`minhash_near_duplicates`; returns ``(id_a, id_b, jaccard)`` with
-    ``id_a < id_b`` (group keys) and ``jaccard >= threshold`` computed
-    exactly over the union shingle sets.
+    Returns ``(id_a, id_b, jaccard)`` with ``id_a < id_b`` (group keys)
+    and ``jaccard >= threshold`` computed exactly over the union shingle
+    sets (:func:`_row_jaccard`).
 
     Plan note (r7 optimization): the candidate-pair subtree feeds three
     consumers and the shingle explode four, so both are materialized once
@@ -727,12 +797,9 @@ def minhash_near_duplicates_grouped(
                                   shingle_k).localCheckpoint(eager=False)
     pairs = _banded_pairs(group_sig, "gid", bands, max_bucket_size,
                           observation).localCheckpoint(eager=False)
-    cand = (pairs.select(F.col("id_a").alias("gid"))
-            .union(pairs.select(F.col("id_b").alias("gid")))
-            .distinct())
     # union shingle set per candidate group, as rows: explode each member
     # row's unique-shingle array, dedup on (gid, shingle)
-    sh_rows = (base.join(cand, "gid", "left_semi")
+    sh_rows = (base.join(_pair_ids(pairs, "gid"), "gid", "left_semi")
                .select("gid", F.explode(shingles("text")).alias("sh"))
                .distinct().localCheckpoint(eager=False))
     sizes = (sh_rows.groupBy("gid").agg(F.count("*").alias("n_sh"))
@@ -742,20 +809,9 @@ def minhash_near_duplicates_grouped(
     pairs = _size_prefiltered_pairs(
         pairs, sizes.select(F.col("gid").alias("doc_id"),
                             F.col("n_sh").alias("_n")), threshold)
-    ea = sh_rows.select(F.col("gid").alias("id_a"), "sh")
-    eb = sh_rows.select(F.col("gid").alias("id_b"), "sh")
-    inter = (pairs.join(ea, "id_a").join(eb, ["id_b", "sh"])
-             .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter")))
-    # inner join drops zero-intersection candidate pairs -- correct for any
-    # threshold > 0 (their jaccard is 0; group sets are never empty because
-    # short/NULL texts shingle to the padded sentinel)
-    na = sizes.select(F.col("gid").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("gid").alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = (F.col("n_inter").cast("double")
-           / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"))
-    return (inter.join(na, "id_a").join(nb, "id_b")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+    # group sets are never empty (short/NULL texts shingle to the padded
+    # sentinel), so the row verify loses no pair a threshold > 0 keeps
+    return (_row_jaccard(pairs, sh_rows, sh_rows, threshold, sizes)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
@@ -925,8 +981,6 @@ def simhash_near_duplicates(
     """SimHash near-dups: band the 64-bit hash into ``chunks`` pieces --
     pigeonhole: hamming <= chunks-1 guarantees one identical chunk -- then
     exact-verify with popcount (native bit ops, JVM-side)."""
-    from pyspark.sql.window import Window
-
     from ..parallel import fan_out
 
     simhash = make_simhash_udf()
@@ -945,11 +999,7 @@ def simhash_near_duplicates(
                    ":", F.col("chunk"),
                    F.expr(f"shiftrightunsigned(sh, chunk * {width}) "
                           f"& {(1 << width) - 1}").cast("string"))))
-    sized = chunked.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("chunk_key")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size)
+    capped = _capped(chunked, "chunk_key", max_bucket_size, observation)
     a, b = capped.alias("a"), capped.alias("b")
     pairs = (a.join(b, "chunk_key")
              .filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -1046,8 +1096,6 @@ def embedding_near_duplicates(
 
     Sign-bucket on ``n_planes`` fixed random hyperplanes (cos >= 0.95 pairs
     collide with high probability), then exact-verify cosine JVM-side."""
-    from pyspark.sql.window import Window
-
     from ..parallel import fan_out
 
     dim_row = df.select(F.size(vec_col).alias("d")).first()
@@ -1056,11 +1104,7 @@ def embedding_near_duplicates(
     base = fan_out(df).select(
         F.col(id_col).alias("doc_id"), F.col(vec_col).alias("v"),
         bucket(F.col(vec_col)).alias("bkt"))
-    sized = base.withColumn("bucket_n",
-                            F.count("*").over(Window.partitionBy("bkt")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size)
+    capped = _capped(base, "bkt", max_bucket_size, observation)
     a, b = capped.alias("a"), capped.alias("b")
     return (a.join(b, "bkt")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))

@@ -24,8 +24,12 @@ Layout at ``index_path`` (commit protocol: ``index_store.py``):
   differently), and a slice whose vectors have a different dimension
   raises instead of silently hashing garbage.
 
-Candidate generation joins NEW x (OLD union NEW) bucket rows -- never
-old-vs-old -- with FULL-bucket capping (old + new rows).  The capping
+Candidate generation joins NEW x (OLD union NEW) bucket rows
+(``_slice_buckets``, shared with the bucket audit) -- never old-vs-old --
+with FULL-bucket capping (old + new rows).  Capping, candidate
+restriction and the cosine verify are the shared LSH core of
+``operators.dedup`` (``_capped``, ``_canonical_candidate_pairs``,
+``_pair_ids``, ``_verified_values`` with ``cosine_cols``).  The capping
 window and the candidate join share one ``bkt`` exchange (reused), so the
 run pays a single narrow-row shuffle of the bucket store per slice; the
 heavy data -- the dim-sized vector store -- is only ever joined
@@ -46,8 +50,10 @@ from . import index_store
 from .dedup import (
     EMB_MAX_BUCKET_SIZE,
     _canonical_candidate_pairs,
+    _capped,
     _filter_predecessor_shadow,
-    _observe_capping,
+    _pair_ids,
+    _verified_values,
     bucket_cap_stats,
     cosine_cols,
     make_hyperplane_bucket_udf,
@@ -275,12 +281,12 @@ def embedding_near_duplicates_incremental(
     """Near-identical embedding pairs touching the new slice, against
     index + slice: ``(id_a, id_b, cos, new_a, new_b)`` with ``cos >=``
     the index's pinned threshold, ids canonically ordered, never
-    old-vs-old.  Same shape as the MinHash incremental operator: bucket
-    rows shuffle-join with full-bucket capping (observable), exact cosine
-    verifies JVM-side against the vector store restricted to candidate
-    ids, nothing is collected to the driver.  The bucket store (narrow
-    rows) shuffles once per slice -- the window and the join reuse one
-    exchange; the wide vector store never joins unrestricted.
+    old-vs-old.  Bucket rows shuffle-join with full-bucket capping
+    (observable), exact cosine verifies JVM-side against the vector
+    store restricted to candidate ids, nothing is collected to the
+    driver.  The bucket store (narrow rows) shuffles once per slice --
+    the window and the join reuse one exchange; the wide vector store
+    never joins unrestricted.
 
     Recall: ``probe_bits=1`` (the DEFAULT; multi-probe, the ``lsh_topk``
     trick) probes every slice row into its true bucket plus its
@@ -314,26 +320,10 @@ def embedding_near_duplicates_incremental(
     from ..parallel import fan_out
 
     # fan_out: a single-row-group slice scan would serialize the bucket
-    # UDF and the verify joins behind one task
-    base = fan_out(_clean_base(new_df, id_col, vec_col))
-    _check_dim(base, meta)
-    from pyspark.sql.window import Window
-
-    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
-    threshold = meta["threshold"]
-    live = meta["epoch"]
-    # localCheckpoint: the anti-joined slice feeds the bucket UDF, the
-    # verify union and the phantom anti-join -- three consumers that
-    # would each re-read the slice and re-run the committed-key anti-join
-    base = base.join(_committed_ids(spark, index_path, live), "doc_id",
-                     "left_anti").localCheckpoint(eager=False)
-    new_b = (base.select("doc_id", bucket("v").alias("bkt"))
-             .withColumn("is_new", F.lit(True)))
-    # epoch resolution BEFORE the capping window: a reindexed key's stale
-    # epoch-0 bucket row must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see index_store.resolve_latest)
-    old_b = (read_latest(spark, index_path, "buckets", live, ["doc_id", "bkt"])
-             .withColumn("is_new", F.lit(False)))
+    # UDF and the verify joins behind one task; the slice is
+    # materialized (see _slice_buckets)
+    base, all_b = _slice_buckets(fan_out(_clean_base(new_df, id_col, vec_col)),
+                                 index_path, meta, checkpoint=True)
     # the capping window shuffles bucket rows on bkt -- the SAME
     # partitioning the candidate self-join needs, so the exchange is
     # computed once and reused: one narrow-row shuffle of the bucket
@@ -341,46 +331,68 @@ def embedding_near_duplicates_incremental(
     # not help: shuffled it costs the same corpus exchange, broadcast it
     # caps the slice size, and a shared-UDF build side trips Spark's
     # zip-partitions assertion -- measured, r4.)
-    all_b = old_b.unionByName(new_b)
-    sized = all_b.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("bkt")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size) \
-        .drop("bucket_n")
+    capped = _capped(all_b, "bkt", max_bucket_size, observation)
     a = capped.filter("is_new")
     if probe_bits == 1:
         # explode each (un-capped) slice row to its true bucket plus all
         # one-bit neighbor keys; the b side keeps true buckets only, so
         # pair candidates = "a's probe set hits b's true bucket" and the
         # capping semantics (true rows per bucket) are untouched
-        neighbor_keys = F.array(
-            F.col("bkt"), *[F.col("bkt").bitwiseXOR(F.lit(1 << j))
-                            for j in range(int(meta["n_planes"]))])
         a = a.select("doc_id", "is_new",
-                     F.explode(neighbor_keys).alias("bkt"))
+                     F.explode(_neighbor_keys(meta)).alias("bkt"))
     # localCheckpoint: pairs feeds both candidate branches + the verify
     pairs = _canonical_candidate_pairs(a, capped, "doc_id", "bkt") \
         .localCheckpoint(eager=False)
     # verify vectors: store rows restricted to candidate ids (never the
     # full corpus) and anti-joined against the slice so a crashed
     # append's phantom vectors cannot pair twice; plus the slice's own
-    cand = (pairs.select(F.col("id_a").alias("doc_id"))
-            .union(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct())
+    cand = _pair_ids(pairs, "doc_id")
     # candidate-restrict FIRST, then resolve epochs: the per-key window
     # runs over candidate rows only, never the O(corpus) vector store
-    old_v = (read_latest(spark, index_path, "vectors", live, ["doc_id", "v"],
-                         cand)
+    old_v = (read_latest(spark, index_path, "vectors", meta["epoch"],
+                         ["doc_id", "v"], cand)
              .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_v = old_v.unionByName(base.join(cand, "doc_id", "left_semi"))
-    va = all_v.select(F.col("doc_id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = all_v.select(F.col("doc_id").alias("id_b"), F.col("v").alias("v_b"))
-    return (pairs.join(va, "id_a").join(vb, "id_b")
-            .withColumn("cos", cosine_cols(F.col("v_a"), F.col("v_b")))
-            .filter(F.col("cos") >= threshold)
+    return (_verified_values(pairs, all_v, "v", cosine_cols,
+                             meta["threshold"], "cos")
             .select("id_a", "id_b", F.round("cos", 6).alias("cos"),
                     "new_a", "new_b"))
+
+
+def _neighbor_keys(meta: dict):
+    """A row's true bucket key followed by its ``n_planes`` one-bit
+    neighbor keys (``probe_bits=1`` multi-probe)."""
+    return F.array(F.col("bkt"),
+                   *[F.col("bkt").bitwiseXOR(F.lit(1 << j))
+                     for j in range(int(meta["n_planes"]))])
+
+
+def _slice_buckets(base: DataFrame, index_path: str, meta: dict,
+                   checkpoint: bool = False) -> tuple[DataFrame, DataFrame]:
+    """``(base, rows)``: the bucket rows an incremental run sees.
+
+    ``base`` (non-NULL ``(doc_id, v)`` slice rows) is checked against
+    the index dim and loses the keys already committed (they are
+    corpus); ``checkpoint`` materializes it, since the pair computation
+    reads it for the bucket UDF, the verify union and the phantom
+    anti-join.  ``rows`` are the index's epoch-resolved bucket rows
+    (``is_new`` false; resolution comes before the capping window, so a
+    reindexed key's stale epoch-0 row neither counts nor pairs) and the
+    slice's (``is_new`` true).
+    :func:`embedding_near_duplicates_incremental` caps these rows and
+    :func:`embedding_index_bucket_audit` counts them."""
+    _check_dim(base, meta)
+    spark, live = base.sparkSession, meta["epoch"]
+    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
+    base = base.join(_committed_ids(spark, index_path, live), "doc_id",
+                     "left_anti")
+    if checkpoint:
+        base = base.localCheckpoint(eager=False)
+    new_b = (base.select("doc_id", bucket("v").alias("bkt"))
+             .withColumn("is_new", F.lit(True)))
+    old_b = (read_latest(spark, index_path, "buckets", live, ["doc_id", "bkt"])
+             .withColumn("is_new", F.lit(False)))
+    return base, old_b.unionByName(new_b)
 
 
 def probe_embedding_index_near_duplicates(
@@ -424,8 +436,6 @@ def probe_embedding_index_near_duplicates(
     _check_model_rev(meta, model_rev)
     base = _unique_vec_rows(_clean_base(probe_df, id_col, vec_col))
     _check_dim(base, meta)
-    from pyspark.sql.window import Window
-
     bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
     threshold = meta["threshold"]
     live = meta["epoch"]
@@ -435,10 +445,7 @@ def probe_embedding_index_near_duplicates(
     # multi-probing) -- the corpus restriction must cover the probe
     # fanout, or neighbor-bucket candidates would be filtered out
     if probe_bits == 1:
-        neighbor_keys = F.array(
-            F.col("bkt"), *[F.col("bkt").bitwiseXOR(F.lit(1 << j))
-                            for j in range(int(meta["n_planes"]))])
-        touched = (probe_b.select(F.explode(neighbor_keys).alias("bkt"))
+        touched = (probe_b.select(F.explode(_neighbor_keys(meta)).alias("bkt"))
                    .distinct())
     else:
         touched = probe_b.select("bkt").distinct()
@@ -448,31 +455,22 @@ def probe_embedding_index_near_duplicates(
                  "doc_id", live, touched, ["bkt"])
              .join(base.select("doc_id"), "doc_id", "left_anti")
              .withColumn("is_new", F.lit(False)))
-    all_b = old_b.unionByName(probe_b)
-    sized = all_b.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("bkt")))
-    capped = (sized.filter(F.col("bucket_n") <= max_bucket_size)
-              .drop("bucket_n")
-              .localCheckpoint())
+    capped = _capped(old_b.unionByName(probe_b), "bkt",
+                     max_bucket_size).localCheckpoint()
     a = capped.filter("is_new")
     if probe_bits == 1:
         a = a.select("doc_id", "is_new",
-                     F.explode(neighbor_keys).alias("bkt"))
+                     F.explode(_neighbor_keys(meta)).alias("bkt"))
     pairs = (_canonical_candidate_pairs(a, capped, "doc_id", "bkt")
              .localCheckpoint())
-    cand = (pairs.select(F.col("id_a").alias("doc_id"))
-            .union(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct())
+    cand = _pair_ids(pairs, "doc_id")
     old_v = (read_latest(spark, index_path, "vectors", live, ["doc_id", "v"],
                          cand)
              .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_v = (old_v.unionByName(base.join(cand, "doc_id", "left_semi"))
              .localCheckpoint())
-    va = all_v.select(F.col("doc_id").alias("id_a"), F.col("v").alias("v_a"))
-    vb = all_v.select(F.col("doc_id").alias("id_b"), F.col("v").alias("v_b"))
-    verified = (pairs.join(va, "id_a").join(vb, "id_b")
-                .withColumn("cos", cosine_cols(F.col("v_a"), F.col("v_b")))
-                .filter(F.col("cos") >= threshold))
+    verified = _verified_values(pairs, all_v, "v", cosine_cols, threshold,
+                                "cos")
     # predecessor-shadow carve-out, shared with the MinHash probes
     # (dedup._filter_predecessor_shadow): a corpus vector
     # matching only the probe key's own stored history never voids the
@@ -492,18 +490,10 @@ def embedding_index_bucket_audit(
 ) -> dict:
     """Exact capping recount over index + slice bucket rows, for the
     empty-output corner where the observe counter is pruned."""
-    spark = new_df.sparkSession
-    meta = _read_meta(spark, index_path)
-    base = _clean_base(new_df, id_col, vec_col)
-    _check_dim(base, meta)
-    bucket = make_hyperplane_bucket_udf(meta["n_planes"], meta["dim"])
-    live = meta["epoch"]
-    base = base.join(_committed_ids(spark, index_path, live), "doc_id",
-                     "left_anti")
-    new_b = base.select("doc_id", bucket("v").alias("bkt"))
-    old_b = read_latest(spark, index_path, "buckets", live, ["doc_id", "bkt"])
-    sizes = (old_b.unionByName(new_b)
-             .groupBy("bkt").agg(F.count("*").alias("n")))
+    meta = _read_meta(new_df.sparkSession, index_path)
+    _, rows = _slice_buckets(_clean_base(new_df, id_col, vec_col),
+                             index_path, meta)
+    sizes = rows.groupBy("bkt").agg(F.count("*").alias("n"))
     return bucket_cap_stats(sizes, max_bucket_size)
 
 

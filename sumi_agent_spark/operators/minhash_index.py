@@ -9,8 +9,8 @@ them instead of recomputing the corpus:
 * ``bands/``    -- the LSH bucket rows ``(doc_id, band, band_key)``,
   partitioned by ``band`` so the banded join co-locates by bucket files;
 * ``shingles/`` -- each doc's unique shingle-hash array, the verify-stage
-  input (exact Jaccard runs JVM-side via ``array_intersect`` exactly like
-  the batch operator, with no access to the original corpus text);
+  input (exact Jaccard runs JVM-side via ``array_intersect``, with no
+  access to the original corpus text);
 * ``meta/``     -- one row pinning the geometry (n_hashes, bands,
   shingle_k, threshold).  Geometry is part of the index identity: a slice
   signed with different hashes can never match the persisted buckets, so a
@@ -22,7 +22,13 @@ when it entered the index).  Bucket capping counts the FULL bucket (old +
 new rows): a boilerplate bucket is hot regardless of which run its rows
 arrived in, and using the full size keeps the incremental run's candidate
 set exactly equal to what a full-corpus run would generate for the same
-pairs (proven in tests/test_minhash_index.py).
+pairs (proven in tests/test_minhash_index.py).  ``_slice_bands`` and
+``_slice_group_bands`` build those OLD union NEW bucket rows once for
+each incremental operator and its bucket audit.  Capping, candidate
+restriction and verification are the shared core of
+``operators.dedup`` (``_capped``, ``_canonical_candidate_pairs``,
+``_pair_ids``, ``_verified_values`` for doc arrays, ``_row_jaccard`` for
+exploded group rows, including the grouped probe's shadow carve-out).
 
 Storage cost, stated honestly: ``shingles/`` stores one 8-byte hash per
 unique k-gram, i.e. roughly ``8 x n_chars`` per document -- a multiple of
@@ -46,11 +52,16 @@ from pyspark.sql import functions as F
 
 from . import index_store
 from .dedup import (
+    _array_jaccard,
     _banded,
     _canonical_candidate_pairs,
+    _capped,
     _filter_predecessor_shadow,
     _group_signatures,
-    _observe_capping,
+    _pair_ids,
+    _row_jaccard,
+    _size_prefiltered_pairs,
+    _verified_values,
     bucket_cap_stats,
     make_minhash_udf,
     make_shingle_udf,
@@ -231,32 +242,16 @@ def minhash_near_duplicates_incremental(
     per-run cost is O(slice + matched buckets), not O(corpus)."""
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path)
-    live = meta["epoch"]
-    minhash = make_minhash_udf(meta["n_hashes"], meta["shingle_k"])
     shingles = make_shingle_udf(meta["shingle_k"])
-    threshold = meta["threshold"]
 
     from ..parallel import fan_out
 
     # fan_out: a single-row-group slice scan would serialize the
-    # signature UDF; localCheckpoint: base feeds the signature pass, the
-    # candidate-restricted verify shingles AND the store anti-join --
-    # three consumers that would each re-scan the slice and re-run the
-    # committed-key anti-join (a band-store read) per reference
-    base = (fan_out(new_df.select(F.col(id_col).alias("doc_id"),
-                                  F.col(text_col).alias("text")))
-            .join(_committed_doc_ids(spark, index_path, live), "doc_id",
-                  "left_anti")
-            .localCheckpoint(eager=False))
-    sig = base.select("doc_id", minhash("text").alias("sig"))
-    new_banded = _banded(sig, "doc_id", meta["bands"], key="md5") \
-        .withColumn("is_new", F.lit(True))
-    # epoch resolution BEFORE the capping window: a reindexed doc's stale
-    # epoch-0 band rows must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see index_store.resolve_latest)
-    old_banded = (read_latest(spark, index_path, "bands", live,
-                              ["doc_id", "band", "band_key"])
-                  .withColumn("is_new", F.lit(False)))
+    # signature UDF; the slice is materialized (see _slice_bands)
+    base, all_banded = _slice_bands(
+        fan_out(new_df.select(F.col(id_col).alias("doc_id"),
+                              F.col(text_col).alias("text"))),
+        index_path, meta, checkpoint=True)
     # the capping window shuffles index band rows on (band, band_key) --
     # the SAME partitioning the candidate self-join needs, so the exchange
     # is computed once and reused: the incremental run pays one narrow-row
@@ -265,18 +260,8 @@ def minhash_near_duplicates_incremental(
     # semi-join costs the same corpus exchange, a broadcast one caps the
     # slice size, and a shared-UDF build side trips Spark's
     # zip-partitions assertion -- measured, r4.)
-    all_banded = old_banded.unionByName(new_banded)
-
-    from pyspark.sql.window import Window
-    # cap on the FULL bucket size (old + new): hotness is a property of the
-    # bucket, not of which run contributed the rows -- and full-bucket
-    # counting is what makes incremental == full-run-restricted exact
-    sized = all_banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "band_key")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size) \
-        .drop("bucket_n")
+    capped = _capped(all_banded, ["band", "band_key"], max_bucket_size,
+                     observation)
     # left side: slice rows only.  localCheckpoint: pairs feeds both
     # candidate-restriction branches and the final verify join -- without
     # it each reference recomputes the banded window + self-join
@@ -288,11 +273,8 @@ def minhash_near_duplicates_incremental(
     # union: without the restriction every incremental run would shuffle
     # the O(corpus)-sized shingle store (the index's largest artifact,
     # ~8 B per corpus char) into the pair join, contradicting the
-    # O(slice + matched buckets) cost contract (the grouped and embedding
-    # variants already restrict; this path was the straggler).
-    cand = (pairs.select(F.col("id_a").alias("doc_id"))
-            .union(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct())
+    # O(slice + matched buckets) cost contract.
+    cand = _pair_ids(pairs, "doc_id")
     new_sh = (base.join(cand, "doc_id", "left_semi")
               .select("doc_id", shingles("text").alias("sh")))
     # anti-join the store against the slice's keys: a crashed append may
@@ -301,23 +283,49 @@ def minhash_near_duplicates_incremental(
     # the fresh one), but each affected pair would emit twice.
     # candidate-restrict FIRST, then resolve epochs: the per-doc window
     # runs over candidate rows only, never the O(corpus) store
-    old_sh = (read_latest(spark, index_path, "shingles", live,
+    old_sh = (read_latest(spark, index_path, "shingles", meta["epoch"],
                           ["doc_id", "sh"], cand)
               .join(base.select("doc_id"), "doc_id", "left_anti"))
     # candidate-restricted, so bounded: materialize once for the size
     # prune + both verify sides
     all_sh = old_sh.unionByName(new_sh).localCheckpoint(eager=False)
-    from .dedup import _size_prefiltered_pairs
+    threshold = meta["threshold"]
     pairs = _size_prefiltered_pairs(
         pairs, all_sh.select("doc_id", F.size("sh").alias("_n")), threshold)
-    sa = all_sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = all_sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (pairs.join(sa, "id_a").join(sb, "id_b")
-            .withColumn("jaccard",
-                        _array_jaccard(F.col("sh_a"), F.col("sh_b")))
-            .filter(F.col("jaccard") >= threshold)
+    return (_verified_values(pairs, all_sh, "sh", _array_jaccard,
+                             threshold, "jaccard")
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
                     "new_a", "new_b"))
+
+
+def _slice_bands(base: DataFrame, index_path: str, meta: dict,
+                 checkpoint: bool = False) -> tuple[DataFrame, DataFrame]:
+    """``(base, rows)``: the LSH bucket rows an incremental run sees.
+
+    ``base`` (``(doc_id, text)`` slice rows) loses the docs already
+    committed to the index: they are corpus, and counting them again
+    would shift every bucket's size on a re-run.  ``checkpoint``
+    materializes it; in the pair computation it feeds the signature
+    pass, the verify shingles and the phantom anti-join.  ``rows`` are
+    the index's epoch-resolved band rows (``is_new`` false; resolution
+    comes before the capping window, so a reindexed doc's stale epoch-0
+    rows neither count nor pair) and the slice's (``is_new`` true).
+    :func:`minhash_near_duplicates_incremental` caps these rows and
+    :func:`minhash_index_bucket_audit` counts them, so the audit
+    recounts exactly the buckets the run saw."""
+    spark, live = base.sparkSession, meta["epoch"]
+    base = base.join(_committed_doc_ids(spark, index_path, live), "doc_id",
+                     "left_anti")
+    if checkpoint:
+        base = base.localCheckpoint(eager=False)
+    minhash = make_minhash_udf(meta["n_hashes"], meta["shingle_k"])
+    sig = base.select("doc_id", minhash("text").alias("sig"))
+    new_banded = (_banded(sig, "doc_id", meta["bands"], key="md5")
+                  .withColumn("is_new", F.lit(True)))
+    old_banded = (read_latest(spark, index_path, "bands", live,
+                              ["doc_id", "band", "band_key"])
+                  .withColumn("is_new", F.lit(False)))
+    return base, old_banded.unionByName(new_banded)
 
 
 def minhash_index_bucket_audit(
@@ -330,25 +338,15 @@ def minhash_index_bucket_audit(
     :func:`minhash_near_duplicates_incremental` is free but unavailable
     when the run's output is completely empty (Spark prunes the observed
     subtree -- see ``operators.dedup._observe_capping``); this recomputes
-    the bucket sizes over the SAME old-union-new row set and returns exact
+    the bucket sizes over the SAME old-union-new row set
+    (:func:`_slice_bands`) and returns exact
     {n_capped_rows, n_capped_buckets, max_bucket_n}.  One extra banded
     scan of slice + index -- an audit tool, not the hot path."""
-    spark = new_df.sparkSession
-    meta = _read_meta(spark, index_path)
-    live = meta["epoch"]
-    minhash = make_minhash_udf(meta["n_hashes"], meta["shingle_k"])
-    # same already-committed filter as the pair computation, so the audit
-    # recounts exactly the buckets that run saw
-    sig = (new_df.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("text"))
-           .join(_committed_doc_ids(spark, index_path, live), "doc_id",
-                 "left_anti")
-           .select("doc_id", minhash("text").alias("sig")))
-    new_banded = _banded(sig, "doc_id", meta["bands"], key="md5")
-    old_banded = read_latest(spark, index_path, "bands", live,
-                             ["doc_id", "band", "band_key"])
-    sizes = (old_banded.unionByName(new_banded)
-             .groupBy("band", "band_key").agg(F.count("*").alias("n")))
+    meta = _read_meta(new_df.sparkSession, index_path)
+    _, rows = _slice_bands(new_df.select(F.col(id_col).alias("doc_id"),
+                                         F.col(text_col).alias("text")),
+                           index_path, meta)
+    sizes = rows.groupBy("band", "band_key").agg(F.count("*").alias("n"))
     return bucket_cap_stats(sizes, max_bucket_size)
 
 
@@ -494,21 +492,13 @@ def probe_index_near_duplicates(
                       ["band", "band_key"])
                   .join(base.select("doc_id"), "doc_id", "left_anti")
                   .withColumn("is_new", F.lit(False)))
-    from pyspark.sql.window import Window
-    all_banded = old_banded.unionByName(probe_banded)
-    sized = all_banded.withColumn(
-        "bucket_n",
-        F.count("*").over(Window.partitionBy("band", "band_key")))
-    capped = (sized.filter(F.col("bucket_n") <= max_bucket_size)
-              .drop("bucket_n")
-              .localCheckpoint())
+    capped = _capped(old_banded.unionByName(probe_banded),
+                     ["band", "band_key"], max_bucket_size).localCheckpoint()
     pairs = (_canonical_candidate_pairs(
                  capped.filter("is_new"), capped, "doc_id",
                  ["band", "band_key"])
              .localCheckpoint())
-    cand = (pairs.select(F.col("id_a").alias("doc_id"))
-            .union(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct())
+    cand = _pair_ids(pairs, "doc_id")
     new_sh = (base.join(cand, "doc_id", "left_semi")
               .select("doc_id", shingles("text").alias("sh")))
     # probe keys resolve to their NEW shingles (the store rows are the
@@ -518,14 +508,8 @@ def probe_index_near_duplicates(
                           ["doc_id", "sh"], cand)
               .join(base.select("doc_id"), "doc_id", "left_anti"))
     all_sh = old_sh.unionByName(new_sh).localCheckpoint()
-    sa = all_sh.select(F.col("doc_id").alias("id_a"),
-                       F.col("sh").alias("sh_a"))
-    sb = all_sh.select(F.col("doc_id").alias("id_b"),
-                       F.col("sh").alias("sh_b"))
-    verified = (pairs.join(sa, "id_a").join(sb, "id_b")
-                .withColumn("jaccard",
-                            _array_jaccard(F.col("sh_a"), F.col("sh_b")))
-                .filter(F.col("jaccard") >= threshold))
+    verified = _verified_values(pairs, all_sh, "sh", _array_jaccard,
+                                threshold, "jaccard")
     # Predecessor-shadow carve-out (see _filter_predecessor_shadow): a
     # corpus doc matching only the probe key's own stored history --
     # typically an earlier replacement deleted for duplicating this key,
@@ -542,8 +526,8 @@ def probe_index_near_duplicates(
 
 # ─── Group-granularity (conversation) index ───
 #
-# Same stores and commit protocol as the doc index (index_store.py), with
-# two differences pinned in meta as granularity="group":
+# Stores and commit protocol come from index_store.py, as for the doc
+# index; meta pins granularity="group" for two differences:
 #
 # * ``bands/`` keys are GROUP ids and band keys come from the group's
 #   union-set signature (elementwise unsigned min over member rows --
@@ -570,12 +554,6 @@ def _group_shingle_rows(df: DataFrame, group_col: str, text_col: str,
                       F.col(text_col).alias("text"))
             .select("doc_id", F.explode(shingles("text")).alias("sh"))
             .distinct())
-
-
-def _array_jaccard(x, y):
-    """Exact Jaccard of two array columns as a double expression."""
-    inter = F.size(F.array_intersect(x, y)).cast("double")
-    return inter / ((F.size(x) + F.size(y)).cast("double") - inter)
 
 
 def committed_group_ids(spark: SparkSession, index_path: str,
@@ -722,42 +700,16 @@ def minhash_near_duplicates_grouped_incremental(
     rows); the exact verify joins exploded shingle rows -- index rows for
     corpus groups, freshly-shingled rows for slice groups, both
     semi-join-restricted to candidate groups."""
-    from pyspark.sql.window import Window
-
     spark = new_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
-    threshold = meta["threshold"]
-    live = meta["epoch"]
-    committed = committed_group_ids(spark, index_path, live)
-    base = (new_df.select(F.col(group_col).alias("gid"),
-                          F.col(text_col).alias("text"))
-            .join(committed, "gid", "left_anti"))
-
-    gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
-                             meta["shingle_k"])
-    new_banded = (_banded(gsig, "gid", meta["bands"], key="md5")  # aliases to doc_id
-                  .withColumnRenamed("doc_id", "gid")
-                  .withColumn("is_new", F.lit(True)))
-    # epoch resolution BEFORE the capping window: a rebuilt group's stale
-    # epoch-0 band rows must neither inflate bucket sizes nor generate
-    # candidates (free at epoch 0 -- see index_store.resolve_latest)
-    old_banded = (read_latest(spark, index_path, "bands", live,
-                              ["doc_id", "band", "band_key"])
-                  .select(F.col("doc_id").alias("gid"), "band", "band_key")
-                  .withColumn("is_new", F.lit(False)))
-    all_banded = old_banded.unionByName(new_banded)
-    sized = all_banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "band_key")))
-    if observation is not None:
-        sized = _observe_capping(sized, observation, max_bucket_size)
-    capped = sized.filter(F.col("bucket_n") <= max_bucket_size) \
-        .drop("bucket_n")
+    base, all_banded = _slice_group_bands(new_df, group_col, text_col,
+                                          index_path, meta)
+    capped = _capped(all_banded, ["band", "band_key"], max_bucket_size,
+                     observation)
     pairs = _canonical_candidate_pairs(
         capped.filter("is_new"), capped, "gid", ["band", "band_key"])
 
-    cand = (pairs.select(F.col("id_a").alias("gid"))
-            .union(pairs.select(F.col("id_b").alias("gid")))
-            .distinct())
+    cand = _pair_ids(pairs, "gid")
     new_sh = (_group_shingle_rows(base.join(cand, "gid", "left_semi"),
                                   "gid", "text", meta["shingle_k"])
               .withColumnRenamed("doc_id", "gid"))
@@ -770,27 +722,42 @@ def minhash_near_duplicates_grouped_incremental(
     slice_gids = base.select("gid").distinct()
     # candidate-restrict FIRST, then resolve epochs: the per-gid window
     # runs over candidate rows only, never the O(corpus) store
-    old_sh = (read_latest(spark, index_path, "shingles", live,
+    old_sh = (read_latest(spark, index_path, "shingles", meta["epoch"],
                           ["doc_id", "sh"],
                           cand.withColumnRenamed("gid", "doc_id"))
               .select(F.col("doc_id").alias("gid"), "sh")
               .join(slice_gids, "gid", "left_anti"))
     sh_rows = old_sh.unionByName(new_sh)
-    sizes = sh_rows.groupBy("gid").agg(F.count("*").alias("n_sh"))
-    ea = sh_rows.select(F.col("gid").alias("id_a"), "sh")
-    eb = sh_rows.select(F.col("gid").alias("id_b"), "sh")
-    inter = (pairs.join(ea, "id_a").join(eb, ["id_b", "sh"])
-             .groupBy("id_a", "id_b", "new_a", "new_b")
-             .agg(F.count("*").alias("n_inter")))
-    na = sizes.select(F.col("gid").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("gid").alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = (F.col("n_inter").cast("double")
-           / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"))
-    return (inter.join(na, "id_a").join(nb, "id_b")
-            .withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= threshold)
+    return (_row_jaccard(pairs, sh_rows, sh_rows, meta["threshold"])
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
                     "new_a", "new_b"))
+
+
+def _slice_group_bands(new_df: DataFrame, group_col: str, text_col: str,
+                       index_path: str, meta: dict
+                       ) -> tuple[DataFrame, DataFrame]:
+    """``(base, rows)`` for a grouped incremental run: the group analog
+    of :func:`_slice_bands`.  ``base`` holds the ``(gid, text)`` member
+    rows of the slice groups not yet committed; ``rows`` are the
+    index's epoch-resolved band rows plus the slice groups' union-set
+    signature bands, as ``(gid, band, band_key, is_new)``.  The pair
+    computation and :func:`minhash_grouped_index_bucket_audit` both
+    build their buckets here."""
+    spark, live = new_df.sparkSession, meta["epoch"]
+    base = (new_df.select(F.col(group_col).alias("gid"),
+                          F.col(text_col).alias("text"))
+            .join(committed_group_ids(spark, index_path, live), "gid",
+                  "left_anti"))
+    gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
+                             meta["shingle_k"])
+    new_banded = (_banded(gsig, "gid", meta["bands"], key="md5")  # aliases to doc_id
+                  .withColumnRenamed("doc_id", "gid")
+                  .withColumn("is_new", F.lit(True)))
+    old_banded = (read_latest(spark, index_path, "bands", live,
+                              ["doc_id", "band", "band_key"])
+                  .select(F.col("doc_id").alias("gid"), "band", "band_key")
+                  .withColumn("is_new", F.lit(False)))
+    return base, old_banded.unionByName(new_banded)
 
 
 def probe_grouped_index_near_duplicates(
@@ -842,8 +809,6 @@ def probe_grouped_index_near_duplicates(
     an executor loss during the probe fails the job instead of
     recomputing -- is acceptable for a slice-sized maintenance op whose
     enclosing pipeline run is idempotent and resumable."""
-    from pyspark.sql.window import Window
-
     spark = probe_df.sparkSession
     meta = _read_meta(spark, index_path, expect_granularity="group")
     threshold = meta["threshold"]
@@ -866,20 +831,14 @@ def probe_grouped_index_near_duplicates(
                   .select(F.col("doc_id").alias("gid"), "band", "band_key")
                   .join(probe_gids, "gid", "left_anti")
                   .withColumn("is_new", F.lit(False)))
-    all_banded = old_banded.unionByName(probe_banded)
-    sized = all_banded.withColumn(
-        "bucket_n", F.count("*").over(Window.partitionBy("band", "band_key")))
-    capped = (sized.filter(F.col("bucket_n") <= max_bucket_size)
-              .drop("bucket_n")
-              .localCheckpoint())
+    capped = _capped(old_banded.unionByName(probe_banded),
+                     ["band", "band_key"], max_bucket_size).localCheckpoint()
     pairs = (_canonical_candidate_pairs(
                  capped.filter("is_new"), capped, "gid",
                  ["band", "band_key"])
              .localCheckpoint())
 
-    cand = (pairs.select(F.col("id_a").alias("gid"))
-            .union(pairs.select(F.col("id_b").alias("gid")))
-            .distinct())
+    cand = _pair_ids(pairs, "gid")
     new_sh = (_group_shingle_rows(base.join(cand, "gid", "left_semi"),
                                   "gid", "text", meta["shingle_k"])
               .withColumnRenamed("doc_id", "gid"))
@@ -893,64 +852,28 @@ def probe_grouped_index_near_duplicates(
               .join(probe_gids, "gid", "left_anti")
               .localCheckpoint())
     sh_rows = old_sh.unionByName(new_sh).localCheckpoint()
-    sizes = sh_rows.groupBy("gid").agg(F.count("*").alias("n_sh"))
-    ea = sh_rows.select(F.col("gid").alias("id_a"), "sh")
-    eb = sh_rows.select(F.col("gid").alias("id_b"), "sh")
-    inter = (pairs.join(ea, "id_a").join(eb, ["id_b", "sh"])
-             .groupBy("id_a", "id_b", "new_a", "new_b")
-             .agg(F.count("*").alias("n_inter")))
-    na = sizes.select(F.col("gid").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("gid").alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = (F.col("n_inter").cast("double")
-           / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"))
-    verified = (inter.join(na, "id_a").join(nb, "id_b")
-                .withColumn("jaccard", jac)
-                .filter(F.col("jaccard") >= threshold))
+    verified = _row_jaccard(pairs, sh_rows, sh_rows, threshold)
 
-    # Predecessor-shadow carve-out, row-count shaped: stored rows of the
-    # probe gids (their old content) vs stored rows of the mixed pairs'
-    # corpus gids.  Restricted to the (tiny) verified mixed pair set
-    # before any shingle join.
-    mixedp = (verified.filter(F.col("new_a") != F.col("new_b"))
-              .select(F.when(F.col("new_a"), F.col("id_a"))
-                       .otherwise(F.col("id_b")).alias("_pgid"),
-                      F.when(F.col("new_a"), F.col("id_b"))
-                       .otherwise(F.col("id_a")).alias("_cgid")))
+    # Predecessor-shadow carve-out, row-count shaped: the same row verify
+    # between the probe gid's stored (old) rows and the corpus gid's
+    # stored rows of each verified mixed pair.  Probe-probe pairs never
+    # match a shadow pair: its corpus side is never a probe gid.
+    probe_id = F.when(F.col("new_a"), F.col("id_a")).otherwise(F.col("id_b"))
+    corpus_id = F.when(F.col("new_a"), F.col("id_b")).otherwise(F.col("id_a"))
     pold = (read_latest(spark, index_path, "shingles", live, ["doc_id", "sh"],
                         probe_gids.withColumnRenamed("gid", "doc_id"))
-            .select(F.col("doc_id").alias("_pgid"), "sh"))
-    np_ = pold.groupBy("_pgid").agg(F.count("*").alias("n_p"))
-    i2 = (mixedp.join(pold, "_pgid")
-          .join(old_sh.select(F.col("gid").alias("_cgid"), "sh"),
-                ["_cgid", "sh"])
-          .groupBy("_pgid", "_cgid").agg(F.count("*").alias("n_i2")))
-    nc = sizes.select(F.col("gid").alias("_cgid"), F.col("n_sh").alias("n_c"))
-    shadow_pairs = (mixedp.join(np_, "_pgid", "left")
-                    .join(nc, "_cgid", "left")
-                    .join(i2, ["_pgid", "_cgid"], "left")
-                    .withColumn(
-                        "_jac2",
-                        F.coalesce(F.col("n_i2"), F.lit(0)).cast("double")
-                        / (F.col("n_p") + F.col("n_c")
-                           - F.coalesce(F.col("n_i2"), F.lit(0)))
-                        .cast("double"))
-                    .filter(F.col("n_p").isNotNull()
-                            & (F.col("_jac2") >= threshold))
-                    .select("_pgid", "_cgid",
-                            F.lit(True).alias("_shadow")))
-    out = (verified
-           .withColumn("_pgid", F.when(F.col("new_a") != F.col("new_b"),
-                                       F.when(F.col("new_a"),
-                                              F.col("id_a"))
-                                        .otherwise(F.col("id_b"))))
-           .withColumn("_cgid", F.when(F.col("new_a") != F.col("new_b"),
-                                       F.when(F.col("new_a"),
-                                              F.col("id_b"))
-                                        .otherwise(F.col("id_a"))))
-           .join(shadow_pairs, ["_pgid", "_cgid"], "left")
-           .filter(F.col("_shadow").isNull()))
-    return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
-                      "new_a", "new_b")
+            .withColumnRenamed("doc_id", "gid"))
+    shadow = _row_jaccard(
+        verified.filter(F.col("new_a") != F.col("new_b"))
+        .select(probe_id.alias("id_a"), corpus_id.alias("id_b")),
+        pold, old_sh, threshold)
+    return (verified.withColumn("_pgid", probe_id)
+            .withColumn("_cgid", corpus_id)
+            .join(shadow.select(F.col("id_a").alias("_pgid"),
+                                F.col("id_b").alias("_cgid")),
+                  ["_pgid", "_cgid"], "left_anti")
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
+                    "new_a", "new_b"))
 
 
 def minhash_grouped_index_bucket_audit(
@@ -961,20 +884,11 @@ def minhash_grouped_index_bucket_audit(
     group signatures) -- the group-granularity analog of
     :func:`minhash_index_bucket_audit`, for the empty-output corner where
     the observe-based counter is pruned."""
-    spark = new_df.sparkSession
-    meta = _read_meta(spark, index_path, expect_granularity="group")
-    live = meta["epoch"]
-    committed = committed_group_ids(spark, index_path, live)
-    base = (new_df.select(F.col(group_col).alias("gid"),
-                          F.col(text_col).alias("text"))
-            .join(committed, "gid", "left_anti"))
-    gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
-                             meta["shingle_k"])
-    new_banded = _banded(gsig, "gid", meta["bands"], key="md5")  # aliases to doc_id
-    old_banded = read_latest(spark, index_path, "bands", live,
-                             ["doc_id", "band", "band_key"])
-    sizes = (old_banded.unionByName(new_banded)
-             .groupBy("band", "band_key").agg(F.count("*").alias("n")))
+    meta = _read_meta(new_df.sparkSession, index_path,
+                      expect_granularity="group")
+    _, rows = _slice_group_bands(new_df, group_col, text_col, index_path,
+                                 meta)
+    sizes = rows.groupBy("band", "band_key").agg(F.count("*").alias("n"))
     return bucket_cap_stats(sizes, max_bucket_size)
 
 
