@@ -564,20 +564,23 @@ def _row_jaccard(pairs: DataFrame, rows_a: DataFrame, rows_b: DataFrame,
     ``jaccard >= threshold`` (unrounded).  The inner joins drop pairs
     with no shared row and ids with no rows: their Jaccard is 0 or
     undefined, and no threshold > 0 keeps them."""
-    def n(rows, s):
+    def set_sizes(rows, s):
         sz = (sizes if sizes is not None
               else rows.groupBy("gid").agg(F.count("*").alias("n_sh")))
         return sz.select(F.col("gid").alias(f"id_{s}"),
                          F.col("n_sh").alias(f"n_{s}"))
     ea = rows_a.select(F.col("gid").alias("id_a"), "sh")
     eb = rows_b.select(F.col("gid").alias("id_b"), "sh")
+    # id_a, id_b lead the grouping keys whatever order the pair frame
+    # carries them in (_size_prefiltered_pairs puts id_b first)
     keys = ["id_a", "id_b", *(c for c in pairs.columns
                               if c not in ("id_a", "id_b"))]
     inter = (pairs.join(ea, "id_a").join(eb, ["id_b", "sh"])
              .groupBy(*keys).agg(F.count("*").alias("n_inter")))
     jac = (F.col("n_inter").cast("double")
            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"))
-    return (inter.join(n(rows_a, "a"), "id_a").join(n(rows_b, "b"), "id_b")
+    return (inter.join(set_sizes(rows_a, "a"), "id_a")
+            .join(set_sizes(rows_b, "b"), "id_b")
             .withColumn("jaccard", jac)
             .filter(F.col("jaccard") >= threshold))
 

@@ -750,8 +750,8 @@ def _slice_group_bands(new_df: DataFrame, group_col: str, text_col: str,
                   "left_anti"))
     gsig = _group_signatures(base, "gid", "text", meta["n_hashes"],
                              meta["shingle_k"])
-    new_banded = (_banded(gsig, "gid", meta["bands"], key="md5")  # aliases to doc_id
-                  .withColumnRenamed("doc_id", "gid")
+    new_banded = (_banded(gsig, "gid", meta["bands"], key="md5")
+                  .withColumnRenamed("doc_id", "gid")  # _banded emits doc_id
                   .withColumn("is_new", F.lit(True)))
     old_banded = (read_latest(spark, index_path, "bands", live,
                               ["doc_id", "band", "band_key"])

@@ -109,7 +109,9 @@ def resume_filter(df: DataFrame, output_path: str) -> DataFrame:
     """Drop (conv_id, turn_idx) pairs already present in the output.
 
     The anti-join is null-safe: a plain equi-join never matches a NULL
-    ``conv_id``, so every restart would append those rows again.  Only a missing output path means "fresh start".  Any other read error
+    ``conv_id``, so every restart would append those rows again.
+
+    Only a missing output path means "fresh start".  Any other read error
     (corrupt files, schema trouble, transient storage failure) propagates:
     swallowing it would silently reprocess everything and append duplicate
     rows, breaking the idempotent-restart guarantee."""
